@@ -4,8 +4,9 @@ ES highlights the matched SPAN of a phrase/sloppy query; a term-set
 highlighter (functions/text.highlight_expr) would wrap every stray "slow"
 in a doc that matched "slow query" as a phrase. This module extracts the
 matched windows as TOKEN-POSITION spans plus the matched snippet, using
-the exact minimal-window model of the sloppy scorer
-(index/query._make_sloppy_range_scorer, ordered mode):
+the exact minimal-window model of the sloppy scorer kernel
+(index/query._make_sloppy_range_scorer, ordered mode; run per doc range by
+the Searcher._run_range_scorer chassis):
 
 * each query slot j contributes adjusted positions ``pos − j``;
 * for each event e (any slot's adjusted position, all slots present at or

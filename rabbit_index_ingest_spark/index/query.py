@@ -19,6 +19,15 @@ Two independent paths that must agree rank- and score-identically:
   sorted-term order (float64) so they are bit-comparable with the
   pure-Python oracle (SURVEY.md §4.2 exact-score discipline).
 
+Every block-max mode (BM25 OR/AND/msm/dis_max/multi_match/search_after,
+phrase, sloppy phrase, phrase-prefix, span_near, constant-score
+expansions) runs through ONE per-range scorer chassis,
+``Searcher._run_range_scorer``, which owns the range grouping/cogroup
+transport, the per-range live bitmap ``C`` (tombstones, allow- and
+deny-lists) and the skip count. A mode only supplies its kernel, built by
+a ``_make_*_range_scorer`` factory: ``kernel(base, pdf, C) -> (rows,
+skipped)`` scores one doc range (contract on the chassis).
+
 Replaces: the reference's delegation of search to Elasticsearch 7.9.1
 (Lucene 8.6 block-max WAND + BM25 k1=1.2 b=0.75; constants pinned in
 codec.K1 / codec.B).
@@ -479,6 +488,89 @@ class Searcher:
             return left, None
         return left, side.repartition(n, F.col("range_id")).groupBy("range_id")
 
+    def _run_range_scorer(
+        self,
+        kernel,
+        blocks: DataFrame,
+        meta: dict[str, tuple[int, int, int]] | None,
+        k: int | None = None,
+        allowed: DataFrame | None = None,
+        excluded: DataFrame | None = None,
+        skip_acc=None,
+        positions: bool = False,
+    ) -> DataFrame:
+        """The per-range scorer chassis: the one transport, masking and
+        skip-count path behind every block-max scorer mode.
+
+        ``kernel(base, pdf, C) -> (result pdf, skipped)`` scores ONE doc
+        range: ``base`` is the range's first doc_id, ``pdf`` its posting
+        blocks (``_SCORE_COLS``, plus ``pos_bytes`` with ``positions``)
+        and ``C`` the range's live bitmap — tombstoned and ``excluded``
+        docs cleared, restricted to ``allowed`` — or ``None`` when every
+        doc is live. A kernel never returns a doc outside ``C`` and
+        reports the blocks (or position streams) it skipped undecoded.
+
+        The chassis groups the blocks by doc range (``_group_by_range``)
+        and, when a side frame exists (``_side_frame``: tombstone table,
+        allow- and deny-lists), cogroups each range's blocks with its side
+        rows — neither set ever leaves the cluster, vs broadcasting a
+        Python set, which caps at ~10^6 entries. Per range it decodes the
+        side rows into ``C``, returns empty without calling the kernel
+        when the range holds no block or no allowed doc, and adds the
+        kernel's skip count to ``skip_acc`` once. With ``k`` the
+        per-range rows merge through the global TakeOrderedAndProject
+        (score desc, doc_id asc); ``k=None`` returns them unmerged."""
+        side_df = self._side_frame(allowed, excluded)
+        cols = [*_SCORE_COLS, "pos_bytes"] if positions else _SCORE_COLS
+        grouped, side_g = self._group_by_range(
+            blocks.select(*cols), side_df, meta
+        )
+        # closure state only — the UDF must not capture self (SparkSession)
+        range_bits, deleted = self.range_bits, self.deleted
+        range_size = 1 << range_bits
+        allowed_present = allowed is not None
+
+        def cg(key: tuple, pdf: pd.DataFrame, side) -> pd.DataFrame:
+            if len(pdf) == 0:
+                return _empty_topk_pdf()
+            base = int(key[0]) << range_bits
+            dead, C = deleted, None
+            if side is not None:
+                # side rows of this range: dead (kind=0) ∪ allowed (kind=1)
+                dead = dead | frozenset(
+                    side.loc[side["kind"] == 0, "doc_id"].tolist()
+                )
+                if allowed_present:
+                    allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(
+                        np.int64
+                    )
+                    if not len(allow):
+                        return _empty_topk_pdf()  # nothing allowed here
+                    C = np.zeros(range_size, dtype=bool)
+                    C[allow - base] = True
+            if dead:
+                local = np.fromiter(dead, dtype=np.int64) - base
+                local = local[(local >= 0) & (local < range_size)]
+                if len(local):
+                    if C is None:
+                        C = np.ones(range_size, dtype=bool)
+                    C[local] = False
+            out, skipped = kernel(base, pdf, C)
+            if skip_acc is not None and skipped:
+                skip_acc.add(skipped)
+            return out
+
+        def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            return cg(key, pdf, None)
+
+        if side_g is None:
+            local = grouped.applyInPandas(plain, TOPK_SCHEMA)
+        else:
+            local = grouped.cogroup(side_g).applyInPandas(cg, TOPK_SCHEMA)
+        if k is None:
+            return local
+        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
     def _plan(
         self, query_text: str
     ) -> tuple[dict[str, float], DataFrame, dict[str, tuple[int, int, int]]] | None:
@@ -779,27 +871,12 @@ class Searcher:
             0.0 if allowed is not None or excluded is not None
             else self._seed_theta0(idfs, meta, blocks, k)
         )
-        side = self._side_frame(allowed, excluded)
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
+        return self._run_range_scorer(
+            _make_range_scorer(
+                idfs, self.avgdl, k, self.range_bits, theta0=theta0
+            ),
+            blocks, meta, k, allowed, excluded, skip_acc,
         )
-        if side is not None:
-            # tombstones/filters at scale: cogroup each doc-range's blocks
-            # with its side rows — neither set ever leaves the cluster
-            # (vs broadcasting a Python set, which caps at ~10^6 entries)
-            scorer = _make_range_scorer(
-                idfs, self.avgdl, k, self.range_bits, self.deleted,
-                cogrouped=True, skip_acc=skip_acc, theta0=theta0,
-                allowed_present=allowed is not None,
-            )
-            local = grouped.cogroup(side_g).applyInPandas(scorer, TOPK_SCHEMA)
-        else:
-            scorer = _make_range_scorer(
-                idfs, self.avgdl, k, self.range_bits, self.deleted,
-                skip_acc=skip_acc, theta0=theta0,
-            )
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_dismax(
         self,
@@ -836,23 +913,13 @@ class Searcher:
             0.0 if allowed is not None or excluded is not None
             else self._seed_theta0(idfs, meta, blocks, k)
         )
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_range_scorer(
-            idfs, self.avgdl, k, self.range_bits, self.deleted,
-            cogrouped=side is not None, skip_acc=skip_acc, theta0=theta0,
-            allowed_present=allowed is not None,
-            tie_breaker=float(tie_breaker),
+        return self._run_range_scorer(
+            _make_range_scorer(
+                idfs, self.avgdl, k, self.range_bits, theta0=theta0,
+                tie_breaker=float(tie_breaker),
+            ),
+            blocks, meta, k, allowed, excluded, skip_acc,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
-        )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_dismax_dataframe(
         self, query_text: str, k: int = 10, tie_breaker: float = 0.0
@@ -1011,24 +1078,15 @@ class Searcher:
             0.0 if allowed is not None or excluded is not None
             else self._seed_theta0(idfs, meta, blocks, k, avgdls=avgdls)
         )
-        side = self._side_frame(allowed, excluded)
         tb = float(tie_breaker) if mode == "best_fields" else None
-        scorer = _make_range_scorer(
-            idfs, self.avgdl, k, self.range_bits, self.deleted,
-            cogrouped=side is not None, skip_acc=skip_acc, theta0=theta0,
-            allowed_present=allowed is not None, tie_breaker=tb,
-            avgdls=avgdls, groups=groups if tb is not None else None,
+        return self._run_range_scorer(
+            _make_range_scorer(
+                idfs, self.avgdl, k, self.range_bits, theta0=theta0,
+                tie_breaker=tb, avgdls=avgdls,
+                groups=groups if tb is not None else None,
+            ),
+            blocks, meta, k, allowed, excluded, skip_acc,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
-        )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_multimatch_dataframe(
         self,
@@ -1147,22 +1205,12 @@ class Searcher:
                 .distinct()
             )
             blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_conjunctive_range_scorer(
-            idfs, self.avgdl, k, self.range_bits, order, self.deleted,
-            allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
+        return self._run_range_scorer(
+            _make_conjunctive_range_scorer(
+                idfs, self.avgdl, k, self.range_bits, order
+            ),
+            blocks, meta, k, allowed, excluded, skip_acc,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
-        )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_msm(
         self,
@@ -1240,22 +1288,12 @@ class Searcher:
             .select("range_id")
         )
         blocks = blocks.join(viable_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_msm_range_scorer(
-            idfs, self.avgdl, k, self.range_bits, order, msm, self.deleted,
-            allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
+        return self._run_range_scorer(
+            _make_msm_range_scorer(
+                idfs, self.avgdl, k, self.range_bits, order, msm
+            ),
+            blocks, meta, k, allowed, excluded, skip_acc,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
-        )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_terms_set(
         self,
@@ -1430,24 +1468,13 @@ class Searcher:
         blocks = self.postings.where(
             F.col("bucket").isin(_term_buckets(self.spark, terms))
         ).where(F.col("term").isin(terms))
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_constscore_range_scorer(
-            k, self.range_bits, self.deleted,
-            allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
-        )
         # expansion terms carry no df (expand_* return terms only) —
         # meta=None sizes by range count, the right bound for this
         # early-terminating O(k)-per-range scorer
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, None
+        local = self._run_range_scorer(
+            _make_constscore_range_scorer(k, self.range_bits), blocks, None,
+            allowed=allowed, excluded=excluded, skip_acc=skip_acc,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
         return local.orderBy(F.asc("doc_id")).limit(k)
 
     def topk_match_bool_prefix(
@@ -1790,22 +1817,12 @@ class Searcher:
                 .distinct()
             )
             blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_multiphrase_range_scorer(
-            idf_q, self.avgdl, k, self.range_bits, groups, slots,
-            self.deleted, allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
+        return self._run_range_scorer(
+            _make_multiphrase_range_scorer(
+                idf_q, self.avgdl, k, self.range_bits, groups, slots
+            ),
+            blocks, meta, k, allowed, excluded, skip_acc, positions=True,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS, "pos_bytes"), side, meta
-        )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     # ---------------- boolean / filtered / phrase retrieval ----------------
 
@@ -2001,30 +2018,19 @@ class Searcher:
                 .distinct()
             )
             blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
         if slop > 0:
-            scorer = _make_sloppy_range_scorer(
+            kernel = _make_sloppy_range_scorer(
                 idf_phrase, avgdl, k, self.range_bits, order,
                 [(t, i) for i, t in enumerate(qterms)], slop, True,
-                self.deleted, allowed_present=allowed is not None,
-                cogrouped=side is not None, skip_acc=skip_acc,
             )
         else:
-            scorer = _make_phrase_range_scorer(
-                idf_phrase, avgdl, k, self.range_bits, order, offsets,
-                self.deleted, allowed_present=allowed is not None,
-                cogrouped=side is not None, skip_acc=skip_acc,
+            kernel = _make_phrase_range_scorer(
+                idf_phrase, avgdl, k, self.range_bits, order, offsets
             )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS, "pos_bytes"), side, meta
+        return self._run_range_scorer(
+            kernel, blocks, meta, k, allowed, excluded, skip_acc,
+            positions=True,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_phrase_dataframe(
         self, query_text: str, k: int = 10, allowed: DataFrame | None = None
@@ -2203,20 +2209,13 @@ class Searcher:
                 .distinct()
             )
             blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(None, None)
-        scorer = _make_phrase_range_scorer(
-            idf_phrase, self.avgdl, 1 << self.range_bits, self.range_bits,
-            order, offsets, self.deleted,
-            cogrouped=side is not None,
+        return self._run_range_scorer(
+            _make_phrase_range_scorer(
+                idf_phrase, self.avgdl, 1 << self.range_bits,
+                self.range_bits, order, offsets,
+            ),
+            blocks, meta, positions=True,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS, "pos_bytes"), side, meta
-        )
-        if side is not None:
-            return grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        return grouped.applyInPandas(scorer, TOPK_SCHEMA)
 
     # ---------------- ES bool query (compositional DSL) ----------------
 
@@ -2878,22 +2877,13 @@ class Searcher:
             0.0 if allowed is not None or excluded is not None
             else self._seed_theta0(idfs, meta, blocks, k, cursor=after)
         )
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_range_scorer(
-            idfs, self.avgdl, k, self.range_bits, self.deleted,
-            cogrouped=side is not None, skip_acc=skip_acc, theta0=theta0,
-            allowed_present=allowed is not None, cursor=after,
+        return self._run_range_scorer(
+            _make_range_scorer(
+                idfs, self.avgdl, k, self.range_bits, theta0=theta0,
+                cursor=after,
+            ),
+            blocks, meta, k, allowed, excluded, skip_acc,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
-        )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def sort_by(
         self,
@@ -5207,22 +5197,12 @@ class Searcher:
                 .distinct()
             )
             blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_near_range_scorer(
-            idf_q, self.avgdl, k, self.range_bits, order, qterms, gap,
-            self.deleted, allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
+        return self._run_range_scorer(
+            _make_near_range_scorer(
+                idf_q, self.avgdl, k, self.range_bits, order, qterms, gap
+            ),
+            blocks, meta, k, allowed, excluded, skip_acc, positions=True,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS, "pos_bytes"), side, meta
-        )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_near_unordered(
         self,
@@ -5266,23 +5246,13 @@ class Searcher:
                 .distinct()
             )
             blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_sloppy_range_scorer(
-            idf_q, self.avgdl, k, self.range_bits, order,
-            [(t, 0) for t in uniq], slop, False,
-            self.deleted, allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
+        return self._run_range_scorer(
+            _make_sloppy_range_scorer(
+                idf_q, self.avgdl, k, self.range_bits, order,
+                [(t, 0) for t in uniq], slop, False,
+            ),
+            blocks, meta, k, allowed, excluded, skip_acc, positions=True,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS, "pos_bytes"), side, meta
-        )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_near_dataframe(
         self,
@@ -5432,31 +5402,18 @@ def _empty_topk_pdf() -> pd.DataFrame:
     )
 
 
-def _range_masks(
-    base: int,
-    range_size: int,
-    dead: frozenset,
-    allow_ids: np.ndarray | None,
-) -> tuple[np.ndarray | None, np.ndarray | None, bool]:
-    """(dead bitmap, allow bitmap, range_is_empty) for one doc range.
-    ``range_is_empty`` is True when an allow-list is active but no allowed
-    doc falls in this range — the scorer returns without decoding."""
-    del_mask = None
-    if dead:
-        local_del = np.fromiter(dead, dtype=np.int64) - base
-        local_del = local_del[(local_del >= 0) & (local_del < range_size)]
-        if len(local_del):
-            del_mask = np.zeros(range_size, dtype=bool)
-            del_mask[local_del] = True
-    allow_mask = None
-    if allow_ids is not None:
-        local_allow = np.asarray(allow_ids, dtype=np.int64) - base
-        local_allow = local_allow[(local_allow >= 0) & (local_allow < range_size)]
-        if not len(local_allow):
-            return del_mask, None, True
-        allow_mask = np.zeros(range_size, dtype=bool)
-        allow_mask[local_allow] = True
-    return del_mask, allow_mask, False
+def _local_topk(
+    docs: np.ndarray, scores: np.ndarray, base: int, k: int
+) -> pd.DataFrame:
+    """A range's top-k rows in (score desc, doc_id asc) order from local
+    doc indexes ``docs`` and their ``scores``."""
+    order_idx = np.lexsort((docs, -scores))[:k]
+    return pd.DataFrame(
+        {
+            "doc_id": (docs[order_idx] + base).astype("int64"),
+            "score": scores[order_idx],
+        }
+    )
 
 
 def _make_range_scorer(
@@ -5464,26 +5421,22 @@ def _make_range_scorer(
     avgdl: float,
     k: int,
     range_bits: int,
-    deleted: frozenset,
-    cogrouped: bool = False,
-    skip_acc=None,
     theta0: float = 0.0,
-    allowed_present: bool = False,
-    allow_ids: np.ndarray | None = None,
     tie_breaker: float | None = None,
     avgdls: dict[str, float] | None = None,
     groups: dict[str, int] | None = None,
     cursor: tuple[float, int] | None = None,
 ):
-    """Exact MaxScore/block-max scorer for one doc range (applyInPandas;
-    with ``cogrouped=True`` the second frame carries this range's
-    tombstoned doc_ids).
+    """Exact MaxScore/block-max kernel for one doc range (run by
+    ``Searcher._run_range_scorer``).
 
-    Tombstones are masked **at block-decode time** (before any score is
-    accumulated), so the skip threshold θ and every partial sum are
-    tombstone-free — a deleted doc ranking highly can never cause a block
-    holding live top-k docs to be skipped, and live docs are never returned
-    under-scored. (Masking only at the end would poison θ.)
+    Dead and disallowed docs (the chassis's live bitmap ``C``) are masked
+    **at block-decode time** (before any score is accumulated), so the
+    skip threshold θ and every partial sum are tombstone-free — a deleted
+    doc ranking highly can never cause a block holding live top-k docs to
+    be skipped, and live docs are never returned under-scored. (Masking
+    only at the end would poison θ.) A block whose span holds no live doc
+    is skipped undecoded.
 
     θ discipline (exactness-preserving MaxScore/BMW):
     * partial accumulated scores are *lower bounds* on final scores (every
@@ -5504,7 +5457,7 @@ def _make_range_scorer(
       for all remaining blocks of that term (early break);
     * a block is skipped only when max(total over its doc span) + idf·ub +
       Σ remaining-term upper bounds < θ − eps: no doc in it can enter the
-      local top-k. ``skip_acc`` (a SparkContext accumulator) counts skips.
+      local top-k.
 
     ``avgdls`` (multi-field): per-TERM average field length — a prefixed
     term's postings carry its own field's dl stream, so length
@@ -5543,44 +5496,9 @@ def _make_range_scorer(
     eps = 1e-9
     _THETA_REFRESH = 8  # blocks between within-term θ refreshes
 
-    def score_range_cogrouped(
-        key: tuple, pdf: pd.DataFrame, side: pd.DataFrame
-    ) -> pd.DataFrame:
-        # side rows: tombstones (kind=0) ∪ allow-list (kind=1), this range
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()  # nothing allowed in this range
-        local = _make_range_scorer(
-            idfs,
-            avgdl,
-            k,
-            range_bits,
-            dead,
-            skip_acc=skip_acc,
-            theta0=theta0,
-            allow_ids=allow,
-            tie_breaker=tie_breaker,
-            avgdls=avgdls,
-            groups=groups,
-            cursor=cursor,
-        )
-        return local(key, pdf)
-
-    if cogrouped:
-        return score_range_cogrouped
-
-    def score_range(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (range_id,) = key
-        base = int(range_id) << range_bits
-        # local bitmaps: tombstoned / allowed slots (decode-time masks)
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, deleted, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
+    def kernel(
+        base: int, pdf: pd.DataFrame, C: np.ndarray | None
+    ) -> tuple[pd.DataFrame, int]:
         # per-term average field length (multi-field: a prefixed term's dl
         # stream is its FIELD's lengths, normalized by that field's avgdl)
         adl_of = (
@@ -5685,12 +5603,9 @@ def _make_range_scorer(
             n_blk = len(blocks_t)
             for bi, row in enumerate(blocks_t.itertuples(index=False)):
                 lo, hi = row.first_doc - base, row.last_doc - base
-                if allow_mask is not None and not allow_mask[lo : hi + 1].any():
+                if C is not None and not C[lo : hi + 1].any():
                     skipped += 1
-                    continue  # no allowed doc in this block's span
-                if del_mask is not None and del_mask[lo : hi + 1].all():
-                    skipped += 1
-                    continue  # whole span tombstoned / must_not-excluded
+                    continue  # no live doc in this block's span
                 if theta > 0.0:
                     # ub-desc order: if even the best-scoring doc anywhere
                     # can't reach θ with this block's ub, no later block can
@@ -5703,14 +5618,8 @@ def _make_range_scorer(
                         continue  # no doc in this block can reach top-k
                 ids, tfs = codec.unpack_block(row.doc_bytes, row.tf_bytes)
                 dls = codec.varbyte_decode(row.dl_bytes)
-                if del_mask is not None or allow_mask is not None:
-                    idx = ids - base
-                    live = (
-                        ~del_mask[idx] if del_mask is not None
-                        else np.ones(len(idx), dtype=bool)
-                    )
-                    if allow_mask is not None:
-                        live &= allow_mask[idx]
+                if C is not None:
+                    live = C[ids - base]
                     if not live.all():
                         ids, tfs, dls = ids[live], tfs[live], dls[live]
                         if len(ids) == 0:
@@ -5736,9 +5645,6 @@ def _make_range_scorer(
             if grouped:
                 gacc[g_t] += arr
             theta = max(theta, kth_partial(None, rest_in=suffix[i + 1]))
-
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
 
         # deterministic final accumulation: sorted-term order (oracle parity)
         final = np.zeros(range_size, dtype=np.float64)
@@ -5772,19 +5678,9 @@ def _make_range_scorer(
                 (sc == after_score) & (ids > after_doc)
             )
             nz = nz[keep]
-        if len(nz) == 0:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        scores = final[nz]
-        order_idx = np.lexsort((nz, -scores))[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": (nz[order_idx] + base).astype("int64"),
-                "score": scores[order_idx],
-            }
-        )
+        return _local_topk(nz, final[nz], base, k), skipped
 
-    return score_range
+    return kernel
 
 
 def _make_conjunctive_range_scorer(
@@ -5793,58 +5689,35 @@ def _make_conjunctive_range_scorer(
     k: int,
     range_bits: int,
     term_order: list[str],
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Candidate-driven conjunctive scorer for one doc range
-    (``Searcher.topk_blockmax_and``; applyInPandas over blocks grouped by
-    range_id, optionally cogrouped with the tombstone/allow side frame).
+    """Candidate-driven conjunctive kernel for one doc range
+    (``Searcher.topk_blockmax_and``; run by ``Searcher._run_range_scorer``).
 
     Exactness: only docs that match EVERY term in ``term_order`` (and
-    survive the dead/allow masks) are returned, with full BM25 sums
+    are live in the chassis bitmap) are returned, with full BM25 sums
     accumulated in sorted-term order (bit-parity with the DataFrame
     reference path / DuckDB oracle). Pruning never uses a θ bound —
     a partial disjunctive score is not a lower bound for a conjunctive
     doc — only candidate-set emptiness, which is sound by definition:
 
     * a required term absent from the range ⇒ empty, zero decodes;
-    * terms processed in global-df-ascending order; after the first term
-      the candidate bitmap C bounds every later decode: a block whose
-      [first_doc, last_doc] span holds no candidate is skipped undecoded
-      (counted in ``skip_acc``), decoded postings are masked to C, and
-      C intersects down after each term;
+    * terms processed in global-df-ascending order; the candidate bitmap
+      C (the live bitmap, then each term's matches) bounds every decode:
+      a block whose [first_doc, last_doc] span holds no candidate is
+      skipped undecoded, decoded postings are masked to C, and C
+      intersects down after each term;
     * C empty at any point ⇒ early return.
     """
     range_size = 1 << range_bits
 
-    def _score(
-        range_id: int,
-        pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
-        if len(pdf) == 0 or set(pdf["term"].tolist()) != set(term_order):
-            return _empty_topk_pdf()  # a required term absent from range
-        base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        # candidates-so-far: None = unrestricted (first term, no masks)
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
+    def kernel(
+        base: int, pdf: pd.DataFrame, C: np.ndarray | None
+    ) -> tuple[pd.DataFrame, int]:
+        if set(pdf["term"].tolist()) != set(term_order):
+            return _empty_topk_pdf(), 0  # a required term absent from range
         skipped = 0
         per_term: dict[str, np.ndarray] = {}
         by_term = {t: g for t, g in pdf.groupby("term")}
-
-        def _flush_skips() -> None:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
-
         for t in term_order:
             idf = idfs[t]
             arr = np.zeros(range_size, dtype=np.float64)
@@ -5868,38 +5741,17 @@ def _make_conjunctive_range_scorer(
                 arr[idx] = idf * codec.tf_norm(tfs, dls, avgdl)
                 newC[idx] = True
             if not newC.any():
-                _flush_skips()
-                return _empty_topk_pdf()
+                return _empty_topk_pdf(), skipped
             per_term[t] = arr
             C = newC
-        _flush_skips()
         # deterministic final accumulation: sorted-term order (oracle parity)
         final = np.zeros(range_size, dtype=np.float64)
         for t in sorted(per_term):
             final += per_term[t]
         nz = np.flatnonzero(C)
-        scores = final[nz]
-        order_idx = np.lexsort((nz, -scores))[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": (nz[order_idx] + base).astype("int64"),
-                "score": scores[order_idx],
-            }
-        )
+        return _local_topk(nz, final[nz], base, k), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return kernel
 
 
 def _make_phrase_range_scorer(
@@ -5909,21 +5761,16 @@ def _make_phrase_range_scorer(
     range_bits: int,
     term_order: list[str],
     offsets: dict[str, list[int]],
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Positional block-max phrase scorer for one doc range
-    (``Searcher.topk_phrase``; applyInPandas over blocks grouped by
-    range_id, optionally cogrouped with the tombstone/allow side frame).
+    """Positional block-max phrase kernel for one doc range
+    (``Searcher.topk_phrase``; run by ``Searcher._run_range_scorer``).
 
     The leapfrog analogue of Lucene's exact PhraseQuery, vectorized:
 
     * **pass 1 — doc-level intersection, cheap streams only.** Terms in
       global-df-ascending ``term_order``; per term, only ``doc_bytes`` /
       ``tf_bytes`` decode (never positions). The candidate bitmap C
-      starts from the allow/tombstone masks and intersects down after
+      starts from the chassis's live bitmap and intersects down after
       each term: blocks whose [first_doc, last_doc] span misses C are
       skipped undecoded, and C empty at any point returns early. A doc
       missing any phrase term can never match — removals are lossless.
@@ -5947,30 +5794,16 @@ def _make_phrase_range_scorer(
     """
     range_size = 1 << range_bits
 
-    def _score(
-        range_id: int,
-        pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
-        if len(pdf) == 0 or set(pdf["term"].tolist()) != set(term_order):
-            return _empty_topk_pdf()  # a required term absent from range
-        base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
+    def kernel(
+        base: int, pdf: pd.DataFrame, C: np.ndarray | None
+    ) -> tuple[pd.DataFrame, int]:
+        if set(pdf["term"].tolist()) != set(term_order):
+            return _empty_topk_pdf(), 0  # a required term absent from range
         C, dl_arr, kept, skipped = _pass1_intersect(
             pdf, term_order, base, range_size, C
         )
         if C is None:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
-            return _empty_topk_pdf()
+            return _empty_topk_pdf(), skipped
         # pass 2: positional intersection over final candidates only
         running: np.ndarray | None = None
         for t in term_order:
@@ -6004,9 +5837,7 @@ def _make_phrase_range_scorer(
                 if kt is not None and len(kt):
                     parts.append(kt)
             if not parts:
-                if skip_acc is not None and skipped:
-                    skip_acc.add(skipped)
-                return _empty_topk_pdf()
+                return _empty_topk_pdf(), skipped
             term_keys = np.concatenate(parts)
             running = (
                 term_keys
@@ -6014,29 +5845,13 @@ def _make_phrase_range_scorer(
                 else np.intersect1d(running, term_keys, assume_unique=True)
             )
             if not len(running):
-                if skip_acc is not None and skipped:
-                    skip_acc.add(skipped)
-                return _empty_topk_pdf()
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
+                return _empty_topk_pdf(), skipped
         docs, ptf = np.unique(running >> 32, return_counts=True)
         return _finish_positional_topk(
             docs, ptf.astype(np.float64), dl_arr, base, idf_phrase, avgdl, k
-        )
+        ), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return kernel
 
 
 def _make_msm_range_scorer(
@@ -6046,10 +5861,6 @@ def _make_msm_range_scorer(
     range_bits: int,
     term_order: list[str],
     msm: int,
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
     """Counting generalization of ``_make_conjunctive_range_scorer`` for
     ``Searcher.topk_msm`` (1 < msm < n_terms): per doc range, terms are
@@ -6059,43 +5870,25 @@ def _make_msm_range_scorer(
     decode exactly like the conjunctive candidate set — blocks whose doc
     span misses it skip undecoded, decoded rows are masked, and the set
     tightens after every term to ``count_so_far + terms_left >= msm``.
-    Before that crossover only the static allow/tombstone masks bound
-    decodes (new docs may still appear). Exact: the viability inequality
+    Before that crossover only the chassis's live bitmap bounds decodes
+    (new docs may still appear). Exact: the viability inequality
     is an upper bound on any doc's final match count, and final scores
     accumulate per-term contributions of docs with count >= msm in
     sorted-term order (bit-parity with the DataFrame twin / oracle)."""
     range_size = 1 << range_bits
     n = len(term_order)
 
-    def _score(
-        range_id: int,
-        pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
-        present = set(pdf["term"].tolist())
-        if len(pdf) == 0 or len(present & set(term_order)) < msm:
-            return _empty_topk_pdf()  # range can't hold an msm match
-        base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        # M: the static live/allowed mask (None = everything live)
-        M: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            M = ~del_mask if M is None else (M & ~del_mask)
+    def kernel(
+        base: int, pdf: pd.DataFrame, M: np.ndarray | None
+    ) -> tuple[pd.DataFrame, int]:
+        # M: the chassis's static live bitmap (None = everything live)
+        if len(set(pdf["term"].tolist()) & set(term_order)) < msm:
+            return _empty_topk_pdf(), 0  # range can't hold an msm match
         skipped = 0
         cnt = np.zeros(range_size, dtype=np.int32)
         per_term: dict[str, np.ndarray] = {}
         by_term = {t: g for t, g in pdf.groupby("term")}
         C: np.ndarray | None = None  # viable set once counting binds
-
-        def _flush_skips() -> None:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
-
         for i, t in enumerate(term_order):
             # absent terms still advance i: viability math counts them as
             # a spent chance (they can't raise any doc's count)
@@ -6130,39 +5923,15 @@ def _make_msm_range_scorer(
             if need_now >= 1:
                 C = cnt >= need_now
                 if not C.any():
-                    _flush_skips()
-                    return _empty_topk_pdf()
-        _flush_skips()
-        matched = cnt >= msm
-        if not matched.any():
-            return _empty_topk_pdf()
+                    return _empty_topk_pdf(), skipped
         # deterministic final accumulation: sorted-term order (oracle parity)
         final = np.zeros(range_size, dtype=np.float64)
         for t in sorted(per_term):
             final += per_term[t]
-        nz = np.flatnonzero(matched)
-        scores = final[nz]
-        order_idx = np.lexsort((nz, -scores))[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": (nz[order_idx] + base).astype("int64"),
-                "score": scores[order_idx],
-            }
-        )
+        nz = np.flatnonzero(cnt >= msm)
+        return _local_topk(nz, final[nz], base, k), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return kernel
 
 
 def _make_multiphrase_range_scorer(
@@ -6172,12 +5941,8 @@ def _make_multiphrase_range_scorer(
     range_bits: int,
     groups: list[list[str]],
     slots: list[tuple[int, list[str]]],
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Generalized positional block-max scorer for per-slot term SETS
+    """Generalized positional block-max kernel for per-slot term SETS
     (``Searcher.topk_phrase_prefix``; Lucene MultiPhraseQuery): a doc
     matches when every query offset ``i`` in ``slots`` holds SOME member
     of its term set at position ``start + i``.
@@ -6199,36 +5964,18 @@ def _make_multiphrase_range_scorer(
     kept separate so the hot phrase path stays branch-free."""
     range_size = 1 << range_bits
 
-    def _score(
-        range_id: int,
-        pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
+    def kernel(
+        base: int, pdf: pd.DataFrame, C: np.ndarray | None
+    ) -> tuple[pd.DataFrame, int]:
         present = set(pdf["term"].tolist())
-        if len(pdf) == 0 or any(not (present & set(g)) for g in groups):
-            return _empty_topk_pdf()  # some required group absent
-        base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
+        if any(not (present & set(g)) for g in groups):
+            return _empty_topk_pdf(), 0  # some required group absent
         skipped = 0
         by_term = {
             t: g.sort_values("first_doc") for t, g in pdf.groupby("term")
         }
         dl_arr = np.zeros(range_size, dtype=np.int64)
         kept: dict[str, list[tuple]] = {}
-
-        def _flush_empty() -> pd.DataFrame:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
-            return _empty_topk_pdf()
-
         for g in groups:
             newC = np.zeros(range_size, dtype=bool)
             for t in g:
@@ -6262,7 +6009,7 @@ def _make_multiphrase_range_scorer(
                     rows.append((row.pos_bytes, idx, tfs))
                 kept[t] = rows
             if not newC.any():
-                return _flush_empty()
+                return _empty_topk_pdf(), skipped
             C = newC
         # pass 2: per-slot positional keys over final candidates only
         running: np.ndarray | None = None
@@ -6291,7 +6038,7 @@ def _make_multiphrase_range_scorer(
                     if len(keys):
                         parts.append(keys)
             if not parts:
-                return _flush_empty()
+                return _empty_topk_pdf(), skipped
             slot_keys = np.concatenate(parts)
             if len(parts) > 1:
                 slot_keys.sort()  # cross-term/cross-block concat order
@@ -6301,27 +6048,13 @@ def _make_multiphrase_range_scorer(
                 else np.intersect1d(running, slot_keys, assume_unique=True)
             )
             if not len(running):
-                return _flush_empty()
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
+                return _empty_topk_pdf(), skipped
         docs, ptf = np.unique(running >> 32, return_counts=True)
         return _finish_positional_topk(
             docs, ptf.astype(np.float64), dl_arr, base, idf_q, avgdl, k
-        )
+        ), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return kernel
 
 
 def _pass1_intersect(
@@ -6402,13 +6135,7 @@ def _finish_positional_topk(
         idf_q * tf_f * (codec.K1 + 1.0)
         / (tf_f + codec.K1 * (1.0 - codec.B + codec.B * dls_f / avgdl))
     )
-    order_idx = np.lexsort((docs, -scores))[:k]
-    return pd.DataFrame(
-        {
-            "doc_id": (docs[order_idx] + base).astype("int64"),
-            "score": scores[order_idx],
-        }
-    )
+    return _local_topk(docs, scores, base, k)
 
 
 def _make_near_range_scorer(
@@ -6419,12 +6146,8 @@ def _make_near_range_scorer(
     term_order: list[str],
     qterms: list[str],
     gap: int,
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Positional block-max ordered-proximity scorer for one doc range
+    """Positional block-max ordered-proximity kernel for one doc range
     (``Searcher.topk_near``; the span_near(in_order=true) analogue of
     ``_make_phrase_range_scorer``, sharing its pass-1 doc intersection).
 
@@ -6442,34 +6165,16 @@ def _make_near_range_scorer(
     """
     range_size = 1 << range_bits
 
-    def _score(
-        range_id: int,
-        pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
-        if len(pdf) == 0 or set(pdf["term"].tolist()) != set(term_order):
-            return _empty_topk_pdf()  # a required term absent from range
-        base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
+    def kernel(
+        base: int, pdf: pd.DataFrame, C: np.ndarray | None
+    ) -> tuple[pd.DataFrame, int]:
+        if set(pdf["term"].tolist()) != set(term_order):
+            return _empty_topk_pdf(), 0  # a required term absent from range
         C, dl_arr, kept, skipped = _pass1_intersect(
             pdf, term_order, base, range_size, C
         )
-
-        def _flush_empty() -> pd.DataFrame:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
-            return _empty_topk_pdf()
-
         if C is None:
-            return _flush_empty()
+            return _empty_topk_pdf(), skipped
         # pass 2a: occurrence keys per unique term, candidates only —
         # the position stream decodes IF the block still holds candidates
         occ: dict[str, np.ndarray] = {}
@@ -6496,7 +6201,7 @@ def _make_near_range_scorer(
                 if len(keys):
                     parts.append(keys)
             if not parts:
-                return _flush_empty()
+                return _empty_topk_pdf(), skipped
             occ[t] = np.concatenate(parts)
         # pass 2b: chain DP in query-position order, all docs at once
         prev_keys = occ[qterms[0]]
@@ -6515,29 +6220,15 @@ def _make_near_range_scorer(
             w = cw[hi] - cw[lo]
             m = w > 0
             if not m.any():
-                return _flush_empty()
+                return _empty_topk_pdf(), skipped
             prev_keys, prev_w = cur[m], w[m]
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
         docs, inv = np.unique(prev_keys >> 32, return_inverse=True)
         chain = np.bincount(inv, weights=prev_w.astype(np.float64))
         return _finish_positional_topk(
             docs, chain, dl_arr, base, idf_q, avgdl, k
-        )
+        ), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return kernel
 
 
 # slop is capped so the scaled-integer sloppy_freq (Σ LCM(1..slop+1)/(1+d))
@@ -6562,12 +6253,8 @@ def _make_sloppy_range_scorer(
     slots: list[tuple[str, int]],
     slop: int,
     ordered: bool,
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Positional block-max scorer for sloppy / unordered proximity over
+    """Positional block-max kernel for sloppy / unordered proximity over
     one doc range — backs ``Searcher.topk_phrase(slop>0)`` (ES
     ``match_phrase`` + ``slop``; Lucene SloppyPhraseQuery) and
     ``Searcher.topk_near_unordered`` (ES ``span_near(in_order=false)``).
@@ -6620,34 +6307,16 @@ def _make_sloppy_range_scorer(
     int64_max = np.iinfo(np.int64).max
     m32 = np.int64(0xFFFFFFFF)
 
-    def _score(
-        range_id: int,
-        pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
-        if len(pdf) == 0 or set(pdf["term"].tolist()) != set(term_order):
-            return _empty_topk_pdf()  # a required term absent from range
-        base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
+    def kernel(
+        base: int, pdf: pd.DataFrame, C: np.ndarray | None
+    ) -> tuple[pd.DataFrame, int]:
+        if set(pdf["term"].tolist()) != set(term_order):
+            return _empty_topk_pdf(), 0  # a required term absent from range
         C, dl_arr, kept, skipped = _pass1_intersect(
             pdf, term_order, base, range_size, C
         )
-
-        def _flush_empty() -> pd.DataFrame:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
-            return _empty_topk_pdf()
-
         if C is None:
-            return _flush_empty()
+            return _empty_topk_pdf(), skipped
         # pass 2a: occurrence keys per unique term, candidates only (the
         # position stream decodes IF the block still holds candidates)
         occ: dict[str, np.ndarray] = {}
@@ -6674,10 +6343,8 @@ def _make_sloppy_range_scorer(
                 if len(keys):
                     parts.append(keys)
             if not parts:
-                return _flush_empty()
+                return _empty_topk_pdf(), skipped
             occ[t] = np.concatenate(parts)
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
         # pass 2b: minimal-window sweep, all docs at once. Slot keys shift
         # by (maxoff - off) ≥ 0 so adjusted positions never borrow into
         # the doc bits; a constant shift keeps each array sorted.
@@ -6697,7 +6364,7 @@ def _make_sloppy_range_scorer(
             left = np.minimum(left, np.where(ok, last, int64_max))
         events, left = events[valid], left[valid]
         if not len(events):
-            return _empty_topk_pdf()
+            return _empty_topk_pdf(), skipped
         # minimal windows = first event per distinct L (events ascend, so
         # np.unique's first-occurrence index IS min(e) per L group)
         u_left, first = np.unique(left, return_index=True)
@@ -6707,38 +6374,22 @@ def _make_sloppy_range_scorer(
         dist = np.maximum(dist, 0)
         hit = dist <= slop
         if not hit.any():
-            return _empty_topk_pdf()
+            return _empty_topk_pdf(), skipped
         w_scaled = (lcm // (1 + dist[hit])).astype(np.float64)
         docs, inv = np.unique(u_left[hit] >> 32, return_inverse=True)
         freq = np.bincount(inv, weights=w_scaled) / float(lcm)
         return _finish_positional_topk(
             docs, freq, dl_arr, base, idf_q, avgdl, k
-        )
+        ), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return kernel
 
 
 def _make_constscore_range_scorer(
     k: int,
     range_bits: int,
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Early-terminating constant_score scorer for one doc range
+    """Early-terminating constant_score kernel for one doc range
     (``Searcher._topk_expanded`` rewrite="constant_score"; round-4 verdict
     item 3). The result contract is the first ``k`` live/allowed DISTINCT
     doc_ids in ascending order, so per range the scan can stop exactly:
@@ -6746,32 +6397,17 @@ def _make_constscore_range_scorer(
     order; once ``k`` distinct docs are found, any later block whose
     ``first_doc`` exceeds the current kth-smallest found doc can only
     contain larger doc_ids — the remaining blocks are skipped undecoded
-    and counted in ``skip_acc``. Within the scan, blocks whose doc span
-    holds no still-eligible doc (tombstoned / outside the allow-list)
-    skip undecoded too. Each range emits at most ``k`` rows; the global
+    and counted as skipped. Within the scan, blocks whose doc span holds
+    no live doc (the chassis bitmap) skip undecoded too. Each range emits at most ``k`` rows; the global
     ``orderBy(doc_id).limit(k)`` is a TakeOrdered over ≤ k·n_ranges tiny
     rows. Replaces the decode-everything shape (flat_postings over every
     expansion block, then distinct→order→limit), which on a hot prefix
     with small k decoded the entire expansion set."""
     range_size = 1 << range_bits
 
-    def _score(
-        range_id: int,
-        pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return _empty_topk_pdf()
-        base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
+    def kernel(
+        base: int, pdf: pd.DataFrame, C: np.ndarray | None
+    ) -> tuple[pd.DataFrame, int]:
         found = np.zeros(range_size, dtype=bool)
         n_found = 0
         kth = range_size  # local index of the kth-smallest found doc
@@ -6799,28 +6435,12 @@ def _make_constscore_range_scorer(
                 n_found += len(new)
                 if n_found >= k:
                     kth = int(np.flatnonzero(found)[k - 1])
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
         nz = np.flatnonzero(found)[:k]
-        if not len(nz):
-            return _empty_topk_pdf()
         return pd.DataFrame(
             {
                 "doc_id": (nz + base).astype("int64"),
                 "score": np.ones(len(nz), dtype=np.float64),
             }
-        )
+        ), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return kernel

@@ -317,31 +317,6 @@ class IndexStore:
                 "refusing to save an empty index (0 docs); "
                 "filter empty batches before save/upsert"
             )
-
-        # AQE ON for the duration of the save (restored after): the session
-        # default is off because short interactive queries pay a driver
-        # re-plan round per Exchange for nothing (session.py), but the save
-        # is the opposite regime — a handful of LONG write jobs whose
-        # shuffle outputs (dictionary/metrics rollups, the bucket
-        # repartition ahead of partitionBy) are far smaller than the
-        # session-wide partition count sized for the build's occurrence
-        # volume. AQE's partition coalescing right-sizes every write's task
-        # count and file count from the actual bytes, at any scale — the
-        # exact "coalesce on write" tool, and the re-plan round is noise
-        # over a multi-second write. Measured (interleaved, per-table
-        # timings, sf0.1): save 5.8→4.1 s steady-state, 12.5→4.9 s first
-        # save; dictionary 5.3→4.0, metrics 5.5→2.8. The toggle is a
-        # runtime SQL conf on the shared session: save's own writer
-        # threads all want it on, and callers are not expected to run
-        # latency-critical queries concurrently with a segment save.
-        prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "false")
-        self.spark.conf.set("spark.sql.adaptive.enabled", "true")
-        try:
-            self._save_stages(built, segment, resume)
-        finally:
-            self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
-    def _save_stages(self, built: BuiltIndex, segment: int, resume: bool) -> None:
         from concurrent.futures import ThreadPoolExecutor
 
         from .build import dictionary_from_blocks

@@ -9,6 +9,16 @@ distributed shape holds at 100 TB:
 * hashes are md5-over-strings wherever a DuckDB oracle twin must agree
   bit-for-bit (md5 is the only hash both engines share); SimHash uses md5
   bits too, folded in numpy inside a vectorized pandas stage.
+
+LSH band keys are the exception: ``xxhash64`` longs over (band index,
+the band's signature slots) rather than md5 hex strings. Docs pair when a
+band key is equal, and equal 64-bit keys imply equal band slots only with
+high probability: a collision (about 2^-64 per pair of distinct slot
+tuples) adds a candidate pair whose bands differ. Band matches are
+therefore probabilistic, not exact equality of band signatures (on the
+test corpora the candidate pairs equal those of md5-string band keys);
+callers that need exact near-duplicates verify candidates against the
+signatures.
 """
 
 from __future__ import annotations
@@ -424,11 +434,10 @@ def lsh_candidate_pairs(
     """
     # Band key: xxhash64 over (band index, the band's signature slots) —
     # an 8-byte long, not an md5 hex STRING (32 chars ≈ 5x the key bytes
-    # on the banding shuffle). Any injective-enough digest yields the
-    # SAME bucket equivalence classes (docs collide iff their slot tuples
-    # are equal), so candidate pairs are unchanged; multi-column xxhash64
-    # is unambiguous without a separator. A cross-band collision cannot
-    # conflate bands because the band index is hashed in.
+    # on the banding shuffle). Equal slot tuples always share a key;
+    # distinct tuples collide only by 64-bit chance (module docstring);
+    # multi-column xxhash64 needs no separator, and hashing the band index
+    # in keeps equal slot tuples of different bands apart.
     band_structs = F.array(
         *[
             F.xxhash64(

@@ -76,32 +76,11 @@ def get_spark(
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
-    # AQE: ON by default (Spark's own default), opt out per session with
-    # SPARK_GRAFT_AQE=0. An off-by-default experiment mid-round-7 looked
-    # attractive at sf0.1/local[32] (short queries save a driver re-plan
-    # round per Exchange; scorer stages are explicitly data-sized by
-    # Searcher._scorer_partitions so coalescing has little left to do
-    # there) — but it was a CONFIG WIN TUNED TO THE SMALL CORPUS, exactly
-    # the trap the optimization guide warns about: at the scaling corpus
-    # (8.4 M turns, 256 build-sized shuffle partitions) the 8-core pinned
-    # build read 182/182 s with AQE on vs 469/394 s off in interleaved
-    # back-to-back reps — 2.2–2.6×, reproducible — because the build's
-    # rollup/aggregation stages rely on AQE's partition coalescing to
-    # right-size their post-shuffle side at every data:core ratio. The
-    # structural pieces of that experiment survive on their own: scorer
-    # stages repartition to a dictionary-derived width (query.py), and
-    # IndexStore.save forces AQE on for its writes even when a session
-    # opted out.
-    aqe = (
-        "false"
-        if os.environ.get("SPARK_GRAFT_AQE", "").lower() in ("0", "false")
-        else "true"
-    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cores_s}]")
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", aqe)
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

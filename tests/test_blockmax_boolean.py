@@ -273,18 +273,30 @@ def test_must_not_skips_whole_span_blocks(spark, skewed):
 
 
 def test_must_not_other_modes(spark, skewed):
-    """excluded threads through and/msm/phrase/near/expansion paths."""
-    _, s = skewed
+    """excluded threads through every range-scorer kernel via the chassis:
+    and/msm/dismax/multi-slot phrase/phrase/sloppy phrase/near/expansion
+    and cursor paths."""
+    built, s = skewed
+    # the single-field index seen as a one-field multi-field index
+    mf = Searcher(
+        spark, built.postings, built.dictionary, built.n_docs, built.avgdl,
+        field_stats={"text": (built.n_docs, built.avgdl)},
+    )
     big = 10_000_000
     e_df = spark.createDataFrame([(i,) for i in range(100, 105)], "doc_id long")
     eset = set(range(100, 105))
     for fn in (
         lambda: s.topk_blockmax_and("hot rare", big, excluded=e_df),
         lambda: s.topk_msm("hot rare", big, msm=2, excluded=e_df),
+        lambda: s.topk_dismax("hot rare", big, tie_breaker=0.5, excluded=e_df),
+        lambda: mf.topk_multimatch("hot rare", {"text": 1.0}, big, excluded=e_df),
+        lambda: s.topk_phrase_prefix("hot ra", big, excluded=e_df),
         lambda: s.topk_phrase("hot rare", big, excluded=e_df),
+        lambda: s.topk_phrase("hot rare", big, slop=1, excluded=e_df),
         lambda: s.topk_near("hot rare", big, gap=2, excluded=e_df),
         lambda: s.topk_near_unordered("hot rare", big, slop=1, excluded=e_df),
         lambda: s.topk_prefix("rar", big, excluded=e_df),
+        lambda: s.search_after("rare", big, after=(1e9, 0), excluded=e_df),
     ):
         ids = {r["doc_id"] for r in fn().collect()}
         assert ids, "mode returned nothing — fixture assumption broken"

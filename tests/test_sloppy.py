@@ -175,7 +175,6 @@ def test_sloppy_scorer_slop0_parity(spark, tiny):
     from pyspark.sql import functions as F
 
     from rabbit_index_ingest_spark.index.query import (
-        TOPK_SCHEMA,
         _make_sloppy_range_scorer,
         _term_buckets,
     )
@@ -187,14 +186,13 @@ def test_sloppy_scorer_slop0_parity(spark, tiny):
     order = sorted(qterms, key=lambda t: (meta[t][0], t))
     scorer = _make_sloppy_range_scorer(
         idf, searcher.avgdl, 10, searcher.range_bits, order,
-        [(t, i) for i, t in enumerate(qterms)], 0, True, frozenset()
+        [(t, i) for i, t in enumerate(qterms)], 0, True
     )
     blocks = searcher.postings.where(
         F.col("bucket").isin(_term_buckets(spark, qterms))
     ).where(F.col("term").isin(qterms))
     got = (
-        blocks.groupBy("range_id")
-        .applyInPandas(scorer, TOPK_SCHEMA)
+        searcher._run_range_scorer(scorer, blocks, meta, positions=True)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .collect()
     )

@@ -41,6 +41,20 @@ def test_save_load_roundtrip(spark, root):
         assert m[f"seg0/{tbl}"]["status"] == "done"
 
 
+def test_save_keeps_aqe_default_on(spark, root):
+    """A save never changes the session's AQE setting: with the key unset
+    (Spark's default, on) it still reads ``true`` afterwards."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        built = build_index(spark, transcripts_df(spark, n_conv=10))
+        IndexStore(spark, root).save(built, segment=0)
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_resume_skips_done_stages(spark, root):
     t = transcripts_df(spark, n_conv=20)
     built = build_index(spark, t)
