@@ -91,6 +91,8 @@ def main() -> None:
     # ---------- build, phase by phase ----------
     from rabbit_index_ingest_spark.index.build import (
         assign_doc_ids_with_count,
+        pack_postings,
+        tokenized,
     )
 
     if "--skip-build-detail" not in sys.argv:
@@ -106,43 +108,11 @@ def main() -> None:
             "doc_id", "conv_id", "turn_idx", "text"
         )
         # phase 2: tokenize + persist (materialized via a cheap count)
-        toks = numbered.select(
-            "doc_id", "conv_id", "turn_idx", "text",
-            tokens_expr("text").alias("tokens"),
-        ).persist()
+        toks = tokenized(numbered, ["text"]).persist()
         timed("bd_tokenize_cache", lambda: toks.count())
-        # phase 3: the pack shuffle alone (noop sink over postings)
-        # build occurrences exactly as build_index_prenumbered does
-        occurrences = toks.select(
-            "doc_id",
-            F.size("tokens").alias("dl"),
-            F.posexplode("tokens").alias("pos", "term"),
-        ).select(
-            "doc_id",
-            (F.shiftleft(F.col("dl").cast("long"), 32) + F.col("pos")).alias(
-                "dlpos"
-            ),
-            "term",
-        )
-        from rabbit_index_ingest_spark.index import codec
-        from rabbit_index_ingest_spark.index.build import (
-            BLOCKS_SCHEMA,
-            RANGE_BITS,
-            _pack_stream_fn,
-            term_bucket_expr,
-        )
-
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        postings_plan = (
-            occurrences.repartition(
-                nparts, F.col("term"), F.shiftright("doc_id", RANGE_BITS)
-            )
-            .sortWithinPartitions("term", "doc_id", "dlpos")
-            .mapInPandas(
-                _pack_stream_fn(codec.BLOCK_SIZE, RANGE_BITS, True), BLOCKS_SCHEMA
-            )
-            .withColumn("bucket", term_bucket_expr(F.col("term")))
-        )
+        # phase 3: the pack shuffle alone (noop sink over postings) — the
+        # build core's own occurrence/pack plan
+        postings_plan = pack_postings(toks, ["text"])
         with open(os.path.join(plans_dir, "build_pack.txt"), "w") as f:
             f.write(_explain_str(postings_plan))
         timed(

@@ -296,26 +296,20 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     if args.cmd == "build":
-        from .index.build import build_index, build_index_multifield
+        from .index.build import build_index_multifield
         from .index.store import IndexStore
 
         transcripts = spark.read.parquet(args.input)
-        if args.field:
-            fields = {"text": args.text_col}
-            for spec in args.field:
-                name, sep, col = spec.partition("=")
-                if not sep or not name or not col:
-                    raise SystemExit(f"--field expects NAME=COLUMN, got {spec!r}")
-                fields[name] = col
-            built = build_index_multifield(
-                spark, transcripts, fields, args.id_col, args.order_col,
-                analyzer=args.analyzer,
-            )
-        else:
-            built = build_index(
-                spark, transcripts, args.id_col, args.order_col,
-                args.text_col, analyzer=args.analyzer,
-            )
+        fields = {"text": args.text_col}
+        for spec in args.field or ():
+            name, sep, col = spec.partition("=")
+            if not sep or not name or not col:
+                raise SystemExit(f"--field expects NAME=COLUMN, got {spec!r}")
+            fields[name] = col
+        built = build_index_multifield(
+            spark, transcripts, fields, args.id_col, args.order_col,
+            analyzer=args.analyzer,
+        )
         store = IndexStore(spark, args.index)
         store.save(built, segment=0, resume=args.resume)
         print(json.dumps({"n_docs": built.n_docs, "avgdl": built.avgdl}))

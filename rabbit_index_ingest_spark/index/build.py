@@ -1,15 +1,20 @@
 """Inverted-index build (SURVEY.md §2.2 B2-B4, §3.4 BUILD).
 
-Pipeline (shuffles marked *):
+ONE pipeline builds every index. A document has one or more scored text
+fields; a single-field index is simply the one-field case
+(``build_index`` = ``build_index_multifield`` with ``{"text": text_col}``).
+Shuffles marked *:
 
-  scan transcripts (column-pruned to conv_id, turn_idx, text)
+  scan transcripts (column-pruned to conv_id, turn_idx, field columns)
     → assign dense doc_id            *repartitionByRange(conv_id, turn_idx)
                                       numbering itself is pure JVM (counter
                                       + broadcast prefix offsets)
-    → tokenize ONCE (JVM regexp)     — analysis.tokens_expr; the numbered+
-                                      tokenized frame is persisted and docs/
+    → tokenize ONCE (JVM regexp)     — ``tokenized``: every field's token
+                                      array in one persisted frame; docs/
                                       doc_stats/occurrences project from it
-    → explode occurrences            (term, doc_id, dl) — narrow
+    → explode occurrences            (term, doc_id, dl) per field, unioned
+                                      narrowly; non-default fields' terms
+                                      prefixed ``<field>:``
     → pack blocks per (term, range)  *repartition(term, doc_id>>RANGE_BITS)
                                       + in-partition sort + streaming
                                       vectorized packer (tf by run-length —
@@ -19,6 +24,12 @@ Pipeline (shuffles marked *):
                                       bounding any one group to
                                       ≤ 2^RANGE_BITS postings (SURVEY.md
                                       §4.2 hot-term skew)
+    → corpus stats                   one ungrouped sum of the blocks'
+                                      tf_sum materializes them; with more
+                                      than one field, one aggregation of
+                                      the cached tokens → field_stats
+    dictionary                       a lazy metadata rollup of the blocks
+                                      (evaluated once, by the save)
 
 Blocks are *self-contained* (doc gaps + tf + dl, all varbyte): the query
 path never joins doc_stats — at 10^12 docs that join would be the dominant
@@ -32,8 +43,9 @@ Elasticsearch 7.9.1, which this module re-implements natively).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -88,24 +100,26 @@ BLOCKS_SCHEMA = T.StructType(
 class BuiltIndex:
     """The four index tables (SURVEY.md §1.2: replaces ceda-fbi/ceda-dirs)."""
 
-    docs: DataFrame  # doc_id, conv_id, turn_idx  (+passthrough cols)
-    doc_stats: DataFrame  # doc_id, conv_id, turn_idx, dl
-    corpus_stats: DataFrame  # n_docs, avgdl, total_tokens
-    dictionary: DataFrame  # term, df, cf, max_tf_norm, bucket
+    docs: DataFrame  # doc_id, conv_id, turn_idx, one column per field, dl
+    doc_stats: DataFrame  # doc_id, conv_id, turn_idx, dl (default field)
+    # one row: n_docs, avgdl, total_tokens (default field), next_doc_id,
+    # positions, analyzer, range_bits
+    corpus_stats: DataFrame
+    dictionary: DataFrame  # term, df, cf, max_tf, min_dl, bucket
     postings: DataFrame  # BLOCKS_SCHEMA + bucket
     n_docs: int = 0
-    avgdl: float = 0.0
+    avgdl: float = 0.0  # over the default field
     positions: bool = True  # whether pos_bytes carries the position stream
     analyzer: str = "simple"  # the index's analyzer (persisted in stats)
     cached: tuple = ()  # build-time persisted frames (toks, postings)
-    # multi-field indexes (build_index_multifield) additionally carry
-    # per-scored-field statistics: (field, doc_count, avgdl, total_tokens)
-    # with Lucene semantics — doc_count counts docs with >= 1 token in the
+    # per-field statistics (field, doc_count, avgdl, total_tokens) with
+    # Lucene semantics — doc_count counts docs with >= 1 token in the
     # field, avgdl = total_tokens / doc_count (BM25Similarity's
-    # avgFieldLength). None for single-field indexes.
+    # avgFieldLength). Only built with more than one field; None for a
+    # one-field index, whose field stats are the corpus stats.
     field_stats: DataFrame | None = None
-    # the field stored UNPREFIXED (multi-field indexes; persisted with
-    # field_stats so upsert/merge rebuild with the same prefix layout)
+    # the field stored UNPREFIXED (persisted with field_stats so
+    # upsert/merge rebuild with the same prefix layout)
     default_field: str = "text"
 
     def release(self) -> None:
@@ -518,6 +532,97 @@ def dictionary_from_blocks(postings: DataFrame) -> DataFrame:
     )
 
 
+def tokenized(
+    numbered: DataFrame, fields: list[str], analyzer: str = "simple"
+) -> DataFrame:
+    """The build's ONE tokenize pass over ``numbered`` (doc_id, conv_id,
+    turn_idx, one column per field): each field's source column as
+    ``_src_<field>`` beside its token array ``_toks_<field>``. The core
+    persists this frame; docs, doc_stats and the occurrences are all
+    projections of it, so the tokenizer runs once per build."""
+    return numbered.select(
+        "doc_id",
+        "conv_id",
+        "turn_idx",
+        *[F.col(f).alias(f"_src_{f}") for f in fields],
+        *[tokens_expr(F.col(f), analyzer).alias(f"_toks_{f}") for f in fields],
+    )
+
+
+def pack_postings(
+    toks: DataFrame,
+    fields: list[str],
+    default_field: str = DEFAULT_FIELD,
+    block_size: int = codec.BLOCK_SIZE,
+    range_bits: int = RANGE_BITS,
+    positions: bool = True,
+) -> DataFrame:
+    """Posting blocks (BLOCKS_SCHEMA + bucket) of a ``tokenized`` frame.
+
+    Each field contributes its raw token occurrences (term, doc_id, dl) —
+    non-default fields' terms prefixed ``<field>:`` — and the per-field
+    frames are unioned NARROWLY (projections of the same frame, no
+    shuffle). dl is the FIELD's token count and rides along (it is
+    functionally dependent on doc_id) so pack never joins doc_stats.
+    range_id deliberately does NOT ride the shuffle: it is a pure function
+    of doc_id, re-derived inside the packer (8 B/row saved), and sorting
+    by (term, doc_id) already sorts by (term, range, doc).
+
+    positions=True packs (dl, pos) into ONE int64 `dlpos = dl<<32 | pos`
+    so a positional occurrence row is the SAME width on the shuffle as a
+    non-positional one (UnsafeRow fields are 8-byte slots — a separate
+    `pos` column costs a full 8 B/occurrence; the single-box N→4N scaling
+    bottleneck is shuffle/memory BANDWIDTH, which cores don't scale, so
+    every shuffled byte is paid at efficiency). Sorting by (term, doc_id,
+    dlpos) ≡ (term, doc_id, pos) because dl is constant within a doc.
+    Bounds: dl < 2^31 and pos < 2^32 (pos < dl holds by construction) keep
+    dlpos positive — a 2-billion-token single doc is beyond any transcript
+    turn.
+
+    ONE shuffle for the whole postings build: repartition on
+    (term, doc_range) + in-partition sort + streaming mapInPandas packer
+    (tf computed by run-length inside pack — no separate groupBy stage).
+    The doc range is the deterministic anti-skew salt: a hot term spreads
+    over doc ranges, so no single shuffle partition can exceed
+    ~2^range_bits postings per term. Partition count = shuffle conf
+    (data-size knob)."""
+
+    def occurrences(f: str) -> DataFrame:
+        tcol = f"_toks_{f}"
+        term = (
+            F.col("term")
+            if f == default_field
+            else F.concat(F.lit(f + FIELD_SEP), F.col("term"))
+        )
+        if positions:
+            occ = toks.select(
+                "doc_id",
+                F.size(tcol).alias("dl"),
+                F.posexplode(tcol).alias("pos", "term"),
+            )
+            dl = (
+                F.shiftleft(F.col("dl").cast("long"), 32) + F.col("pos")
+            ).alias("dlpos")
+        else:
+            occ = toks.select(
+                "doc_id", F.size(tcol).alias("dl"), F.explode(tcol).alias("term")
+            )
+            dl = F.col("dl")
+        return occ.select("doc_id", dl, term.alias("term"))
+
+    occ = reduce(DataFrame.unionByName, map(occurrences, fields))
+    nparts = int(toks.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sort_cols = ["term", "doc_id"] + (["dlpos"] if positions else [])
+    return (
+        occ.repartition(nparts, F.col("term"), F.shiftright("doc_id", range_bits))
+        .sortWithinPartitions(*sort_cols)
+        .mapInPandas(
+            _pack_stream_fn(block_size, range_bits, positions), BLOCKS_SCHEMA
+        )
+        .withColumn("bucket", term_bucket_expr(F.col("term")))
+    )
+
+
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -531,7 +636,9 @@ def build_index(
     positions: bool = True,
     analyzer: str = "simple",
 ) -> BuiltIndex:
-    """Build all four index tables from a transcript DataFrame.
+    """Build all four index tables from a transcript DataFrame — the
+    one-field case of ``build_index_multifield`` (``text_col`` is the
+    ``text`` field).
 
     ``id_base`` offsets doc_ids (segment appends start above the existing
     max doc_id, SURVEY.md B7).
@@ -545,182 +652,16 @@ def build_index(
     can pass False — the schema is identical (empty ``pos_bytes``) and
     non-phrase queries never read the column (parquet column pruning).
 
-    Exactly ONE heavy pipeline pass runs over the corpus: tokenize →
-    explode → tf groupBy → pack. n_docs falls out of the doc-id
-    assignment's offset pass; the dictionary is a metadata rollup of the
-    packed blocks; corpus stats (total tokens → avgdl) aggregate the
-    dictionary. With ``persist_postings=True`` (default; right for corpora
-    that fit the cluster's cache+spill) the blocks materialize once. At
-    extreme scale pass False and let IndexStore.save sequence the
-    postings-write before the dictionary rollup instead.
+    ``persist_postings=True`` (default; right for corpora that fit the
+    cluster's cache+spill) materializes the blocks once. At extreme scale
+    pass False and let IndexStore.save sequence the postings-write before
+    the dictionary rollup instead.
     """
-    assigned, n_docs, ranged_cache = assign_doc_ids_with_count(
-        transcripts.select(id_col, order_col, text_col),
-        key_cols=(id_col, order_col),
-        id_base=id_base,
-    )
-    numbered = assigned.select(
-        "doc_id",
-        F.col(id_col).alias("conv_id"),
-        F.col(order_col).alias("turn_idx"),
-        F.col(text_col).alias("text"),
-    )
-    return build_index_prenumbered(
-        spark,
-        numbered,
-        n_docs=n_docs,
-        next_doc_id=id_base + n_docs,
-        block_size=block_size,
-        range_bits=range_bits,
-        persist_postings=persist_postings,
-        positions=positions,
+    return build_index_multifield(
+        spark, transcripts, {DEFAULT_FIELD: text_col}, id_col, order_col,
+        block_size=block_size, range_bits=range_bits, id_base=id_base,
+        persist_postings=persist_postings, positions=positions,
         analyzer=analyzer,
-        _ranged_cache=ranged_cache,
-    )
-
-
-def build_index_prenumbered(
-    spark: SparkSession,
-    numbered: DataFrame,
-    n_docs: int | None = None,
-    next_doc_id: int | None = None,
-    block_size: int = codec.BLOCK_SIZE,
-    range_bits: int = RANGE_BITS,
-    persist_postings: bool = True,
-    positions: bool = True,
-    analyzer: str = "simple",
-    _ranged_cache: DataFrame | None = None,
-) -> BuiltIndex:
-    """Build the index tables from an ALREADY-NUMBERED corpus —
-    ``numbered`` carries (doc_id, conv_id, turn_idx, text) with unique
-    int64 doc_ids the caller owns. This is the id-preserving core that
-    ``build_index`` wraps (it assigns dense ids first) and that segment
-    merging (IndexStore.merge_segments) calls directly: a merged segment
-    must keep its docs' GLOBAL doc_ids so tombstones, tie-breaks and the
-    other segments' id space stay valid.
-
-    ``n_docs``/``next_doc_id`` are computed with one count / max job when
-    not supplied (callers that already know them — build_index's offset
-    pass, merge's per-segment stats — pass them to skip the jobs)."""
-    if n_docs is None:
-        n_docs = numbered.count()
-    if next_doc_id is None:
-        row = numbered.agg(F.max("doc_id").alias("m")).collect()[0]
-        next_doc_id = (int(row["m"]) + 1) if row["m"] is not None else 0
-    # ONE tokenize pass over the corpus: the numbered+tokenized frame is
-    # persisted, and docs / doc_stats / occurrences are all projections of
-    # it (before this, docs.dl recomputed the tokenizer — a second full
-    # regexp pass AND a second Arrow numbering round-trip per build).
-    toks = numbered.select(
-        "doc_id",
-        "conv_id",
-        "turn_idx",
-        "text",
-        tokens_expr("text", analyzer).alias("tokens"),
-    ).persist()
-
-    # docs (the ES _source analogue) carries dl so doc_stats is a pure
-    # column-pruned projection of the written docs table — IndexStore.save
-    # exploits this to avoid a second tokenize pass.
-    docs = toks.select(
-        "doc_id", "conv_id", "turn_idx", "text", F.size("tokens").alias("dl")
-    )
-    doc_stats = toks.select(
-        "doc_id", "conv_id", "turn_idx", F.size("tokens").alias("dl")
-    )
-
-    # Raw token occurrences (term, doc_id, dl) — dl rides along (it is
-    # functionally dependent on doc_id) so pack never joins doc_stats.
-    # range_id deliberately does NOT ride the shuffle: it is a pure
-    # function of doc_id, re-derived inside the packer (8 B/row saved),
-    # and sorting by (term, doc_id) already sorts by (term, range, doc).
-    #
-    # positions=True packs (dl, pos) into ONE int64 `dlpos = dl<<32 | pos`
-    # so a positional occurrence row is the SAME width on the shuffle as a
-    # non-positional one (UnsafeRow fields are 8-byte slots — a separate
-    # `pos` column costs a full 8 B/occurrence; the single-box N→4N
-    # scaling bottleneck is shuffle/memory BANDWIDTH, which cores don't
-    # scale, so every shuffled byte is paid at efficiency). Sorting by
-    # (term, doc_id, dlpos) ≡ (term, doc_id, pos) because dl is constant
-    # within a doc. Bounds: dl < 2^31 and pos < 2^32 (pos < dl holds by
-    # construction) keep dlpos positive — a 2-billion-token single doc is
-    # beyond any transcript turn.
-    if positions:
-        occurrences = toks.select(
-            "doc_id",
-            F.size("tokens").alias("dl"),
-            F.posexplode("tokens").alias("pos", "term"),
-        ).select(
-            "doc_id",
-            (
-                F.shiftleft(F.col("dl").cast("long"), 32) + F.col("pos")
-            ).alias("dlpos"),
-            "term",
-        )
-    else:
-        occurrences = toks.select(
-            "doc_id", F.size("tokens").alias("dl"), F.explode("tokens").alias("term")
-        )
-
-    # ONE shuffle for the whole postings build: repartition on
-    # (term, doc_range) + in-partition sort + streaming mapInPandas packer
-    # (tf computed by run-length inside pack — no separate groupBy stage).
-    # The doc range is the deterministic anti-skew salt: a hot term spreads
-    # over doc ranges, so no single shuffle partition can exceed
-    # ~2^range_bits postings per term. Partition count = shuffle conf
-    # (data-size knob).
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sort_cols = ["term", "doc_id"] + (["dlpos"] if positions else [])
-    postings = (
-        occurrences.repartition(
-            nparts, F.col("term"), F.shiftright("doc_id", range_bits)
-        )
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(
-            _pack_stream_fn(block_size, range_bits, positions), BLOCKS_SCHEMA
-        )
-        .withColumn("bucket", term_bucket_expr(F.col("term")))
-    )
-    if persist_postings:
-        postings = postings.persist()
-
-    dictionary = dictionary_from_blocks(postings)
-
-    # this action materializes postings → toks caches; once toks is cached
-    # the range-partitioned input cache is redundant — drop it immediately
-    # (executor-cache hygiene across repeated upserts/compactions)
-    total_tokens = int(
-        dictionary.agg(F.sum("cf").alias("t")).collect()[0]["t"] or 0
-    )
-    if _ranged_cache is not None:
-        _ranged_cache.unpersist()
-    avgdl = (total_tokens / n_docs) if n_docs else 0.0
-    # next_doc_id: the id-space high-water mark — carrying it in the 1-row
-    # stats table lets IndexStore.load() avoid a max(doc_id) scan of the
-    # docs table (at 10^12 docs that scan is a real job; this is a
-    # constant). For build_index it is id_base + n_docs (contiguous ids);
-    # a merged segment passes the max over the segments it replaces.
-    # the positions flag is PERSISTED with the stats so upsert/merge can
-    # follow the index's setting instead of sampling blocks (a sampled
-    # probe made the merged format nondeterministic on a mixed index)
-    corpus_stats = spark.createDataFrame(
-        [(n_docs, avgdl, total_tokens, next_doc_id, positions, analyzer,
-          range_bits)],
-        "n_docs long, avgdl double, total_tokens long, next_doc_id long,"
-        " positions boolean, analyzer string, range_bits long",
-    )
-
-    return BuiltIndex(
-        docs=docs,
-        doc_stats=doc_stats,
-        corpus_stats=corpus_stats,
-        dictionary=dictionary,
-        postings=postings,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        positions=positions,
-        analyzer=analyzer,
-        cached=(toks, postings) if persist_postings else (toks,),
     )
 
 
@@ -738,7 +679,7 @@ def build_index_multifield(
     positions: bool = True,
     analyzer: str = "simple",
 ) -> BuiltIndex:
-    """Build ONE index over several scored text fields (ES multi-field
+    """Build ONE index over one or more scored text fields (ES multi-field
     documents; the reference's own docs carry title/url/record_type/readme
     beside the path — rabbit_indexer/utils/path_tools.py:160-177).
 
@@ -750,20 +691,11 @@ def build_index_multifield(
     normalization needs no extra storage, and a prefixed term's dictionary
     df IS its per-field document frequency.
 
-    Plan shape is IDENTICAL to ``build_index``: doc ids assigned once,
-    every field tokenized once from the same persisted frame, the per-field
-    occurrence frames unioned NARROWLY (no shuffle — union of projections
-    of the same cached frame), then the ONE (term, doc-range) repartition →
-    streaming pack. At 10^12 turns the multi-field build costs one shuffle
+    Doc ids are assigned once (``assign_doc_ids_with_count``: n_docs falls
+    out of its offset pass), then ``build_index_prenumbered`` runs the one
+    build pipeline. At 10^12 turns a multi-field build costs one shuffle
     of Σ_f |occurrences_f| rows — the same bytes Lucene moves, with the
     same hot-term salting per (possibly prefixed) term.
-
-    ``corpus_stats``/``n_docs``/``avgdl``/``doc_stats`` keep the
-    single-field contract OVER THE DEFAULT FIELD (a multi-field index
-    scores default-field queries identically to a single-field build of
-    that column — test-pinned); per-field stats live in ``field_stats``
-    with Lucene semantics (doc_count = docs with ≥ 1 token in the field,
-    avgdl = total_tokens / doc_count — BM25Similarity.avgFieldLength).
     """
     if default_field not in fields:
         raise ValueError(
@@ -784,7 +716,7 @@ def build_index_multifield(
         F.col(order_col).alias("turn_idx"),
         *[F.col(src).alias(f) for f, src in fields.items()],
     )
-    return build_index_multifield_prenumbered(
+    return build_index_prenumbered(
         spark,
         numbered,
         list(fields),
@@ -800,10 +732,10 @@ def build_index_multifield(
     )
 
 
-def build_index_multifield_prenumbered(
+def build_index_prenumbered(
     spark: SparkSession,
     numbered: DataFrame,
-    fields: list[str],
+    fields: Sequence[str] = (DEFAULT_FIELD,),
     default_field: str = DEFAULT_FIELD,
     n_docs: int | None = None,
     next_doc_id: int | None = None,
@@ -814,110 +746,103 @@ def build_index_multifield_prenumbered(
     analyzer: str = "simple",
     _ranged_cache: DataFrame | None = None,
 ) -> BuiltIndex:
-    """Multi-field build over an ALREADY-NUMBERED corpus — ``numbered``
-    carries (doc_id, conv_id, turn_idx, <one column per field, named BY
-    the field>). The id-preserving core that ``build_index_multifield``
-    wraps and that multi-field segment merge calls directly (exactly the
-    ``build_index_prenumbered`` contract, field-aware)."""
+    """Build the index tables from an ALREADY-NUMBERED corpus —
+    ``numbered`` carries (doc_id, conv_id, turn_idx, one column per field,
+    named BY the field) with unique int64 doc_ids the caller owns. This is
+    the id-preserving core that ``build_index_multifield`` wraps (it
+    assigns dense ids first) and that segment merging
+    (IndexStore.merge_segments) calls directly: a merged segment must keep
+    its docs' GLOBAL doc_ids so tombstones, tie-breaks and the other
+    segments' id space stay valid.
+
+    Exactly ONE heavy pipeline pass runs over the corpus: tokenize →
+    explode → pack (``tokenized`` → ``pack_postings``). The dictionary is
+    a lazy metadata rollup of the packed blocks. ONE job materializes
+    the postings: the ungrouped sum of the blocks' ``tf_sum`` (= Σ cf, the
+    total token count of every field), so the dictionary's groupBy runs
+    once, when the save writes it.
+    ``corpus_stats``/``n_docs``/``avgdl``/``doc_stats`` describe the
+    DEFAULT field (a multi-field index scores default-field queries
+    identically to a single-field build of that column — test-pinned).
+    With more than one field, one extra aggregation over the cached
+    tokens yields ``field_stats`` with Lucene semantics (doc_count = docs
+    with ≥ 1 token in the field, avgdl = total_tokens / doc_count —
+    BM25Similarity.avgFieldLength); a one-field build has none.
+
+    ``n_docs``/``next_doc_id`` are computed with one count / max job when
+    not supplied (callers that already know them — the id assignment's
+    offset pass, merge's per-segment stats — pass them to skip the
+    jobs)."""
+    fields = list(fields)
     if n_docs is None:
         n_docs = numbered.count()
     if next_doc_id is None:
         row = numbered.agg(F.max("doc_id").alias("m")).collect()[0]
         next_doc_id = (int(row["m"]) + 1) if row["m"] is not None else 0
-    # one persisted frame carries every field's token array; docs /
-    # doc_stats / per-field occurrences are all projections of it
-    toks = numbered.select(
-        "doc_id",
-        "conv_id",
-        "turn_idx",
-        *[F.col(f).alias(f"_src_{f}") for f in fields],
-        *[tokens_expr(F.col(f), analyzer).alias(f"_toks_{f}") for f in fields],
-    ).persist()
+    toks = tokenized(numbered, fields, analyzer).persist()
 
+    # docs (the ES _source analogue) carries dl so doc_stats is a pure
+    # column-pruned projection of the written docs table — IndexStore.save
+    # exploits this to avoid a second tokenize pass.
+    dl = F.size(f"_toks_{default_field}").alias("dl")
     docs = toks.select(
         "doc_id",
         "conv_id",
         "turn_idx",
         *[F.col(f"_src_{f}").alias(f) for f in fields],
-        F.size(f"_toks_{default_field}").alias("dl"),
+        dl,
     )
-    doc_stats = toks.select(
-        "doc_id", "conv_id", "turn_idx",
-        F.size(f"_toks_{default_field}").alias("dl"),
-    )
+    doc_stats = toks.select("doc_id", "conv_id", "turn_idx", dl)
 
-    def _field_occurrences(f: str) -> DataFrame:
-        tcol = f"_toks_{f}"
-        term = (
-            F.col("term")
-            if f == default_field
-            else F.concat(F.lit(f + FIELD_SEP), F.col("term"))
-        )
-        if positions:
-            return toks.select(
-                "doc_id",
-                F.size(tcol).alias("dl"),
-                F.posexplode(tcol).alias("pos", "term"),
-            ).select(
-                "doc_id",
-                (
-                    F.shiftleft(F.col("dl").cast("long"), 32) + F.col("pos")
-                ).alias("dlpos"),
-                term.alias("term"),
-            )
-        return toks.select(
-            "doc_id", F.size(tcol).alias("dl"), F.explode(tcol).alias("term")
-        ).select("doc_id", "dl", term.alias("term"))
-
-    occurrences = _field_occurrences(next(iter(fields)))
-    for f in list(fields)[1:]:
-        occurrences = occurrences.unionByName(_field_occurrences(f))
-
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sort_cols = ["term", "doc_id"] + (["dlpos"] if positions else [])
-    postings = (
-        occurrences.repartition(
-            nparts, F.col("term"), F.shiftright("doc_id", range_bits)
-        )
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(
-            _pack_stream_fn(block_size, range_bits, positions), BLOCKS_SCHEMA
-        )
-        .withColumn("bucket", term_bucket_expr(F.col("term")))
+    postings = pack_postings(
+        toks, fields, default_field, block_size, range_bits, positions
     )
     if persist_postings:
         postings = postings.persist()
-        # materialize the pack shuffle NOW (build_index parity — its
-        # dictionary-rollup collect does this implicitly): without this
-        # the first query would silently pay the whole postings build
-        postings.count()
 
     dictionary = dictionary_from_blocks(postings)
 
-    # per-field stats in ONE aggregation job over the cached toks frame
-    aggs = []
-    for f in fields:
-        sz = F.size(f"_toks_{f}")
-        aggs.append(
-            F.sum(F.when(sz > 0, 1).otherwise(0)).alias(f"_dc_{f}")
-        )
-        aggs.append(F.sum(sz.cast("long")).alias(f"_tt_{f}"))
-    row = toks.agg(*aggs).collect()[0]
-    fs_rows = []
-    for f in fields:
-        dc = int(row[f"_dc_{f}"] or 0)
-        tt = int(row[f"_tt_{f}"] or 0)
-        fs_rows.append((f, dc, (tt / dc) if dc else 0.0, tt))
-    field_stats = spark.createDataFrame(
-        fs_rows, "field string, doc_count long, avgdl double, total_tokens long"
+    # this action materializes postings → toks caches (Σ tf_sum = Σ cf, so
+    # the total needs no dictionary groupBy); once toks is cached the
+    # range-partitioned input cache is redundant — drop it immediately
+    # (executor-cache hygiene across repeated upserts/compactions)
+    total_tokens = int(
+        postings.agg(F.sum("tf_sum").alias("t")).collect()[0]["t"] or 0
     )
+    field_stats = None
+    if len(fields) > 1:
+        # per-field stats in ONE aggregation job over the cached toks
+        # frame; the dictionary total above spans every field, the
+        # corpus total is the default field's share
+        aggs = []
+        for f in fields:
+            sz = F.size(f"_toks_{f}")
+            aggs.append(F.sum(F.when(sz > 0, 1).otherwise(0)).alias(f"_dc_{f}"))
+            aggs.append(F.sum(sz.cast("long")).alias(f"_tt_{f}"))
+        row = toks.agg(*aggs).collect()[0]
+        fs_rows = []
+        for f in fields:
+            dc = int(row[f"_dc_{f}"] or 0)
+            tt = int(row[f"_tt_{f}"] or 0)
+            fs_rows.append((f, dc, (tt / dc) if dc else 0.0, tt))
+        field_stats = spark.createDataFrame(
+            fs_rows, "field string, doc_count long, avgdl double, total_tokens long"
+        )
+        total_tokens = int(row[f"_tt_{default_field}"] or 0)
     if _ranged_cache is not None:
         _ranged_cache.unpersist()
-
-    total_default = next(r[3] for r in fs_rows if r[0] == default_field)
-    avgdl = (total_default / n_docs) if n_docs else 0.0
+    avgdl = (total_tokens / n_docs) if n_docs else 0.0
+    # next_doc_id: the id-space high-water mark — carrying it in the 1-row
+    # stats table lets IndexStore.load() avoid a max(doc_id) scan of the
+    # docs table (at 10^12 docs that scan is a real job; this is a
+    # constant). For a fresh build it is id_base + n_docs (contiguous
+    # ids); a merged segment passes the max over the segments it replaces.
+    # The positions flag, analyzer and range layout are PERSISTED with the
+    # stats so upsert/merge follow the index's settings instead of
+    # sampling blocks (a sampled probe made the merged format
+    # nondeterministic on a mixed index).
     corpus_stats = spark.createDataFrame(
-        [(n_docs, avgdl, total_default, next_doc_id, positions, analyzer,
+        [(n_docs, avgdl, total_tokens, next_doc_id, positions, analyzer,
           range_bits)],
         "n_docs long, avgdl double, total_tokens long, next_doc_id long,"
         " positions boolean, analyzer string, range_bits long",

@@ -339,7 +339,7 @@ def _term_buckets(spark: SparkSession, terms: list[str]) -> list[int]:
 class Searcher:
     """Bound query interface over the index tables.
 
-    ``deleted`` is the tombstone set of superseded doc_ids (upsert
+    ``deleted_df`` is the tombstone table of superseded doc_ids (upsert
     semantics, SURVEY.md B7) — filtered before local/global top-k so
     replaced docs can never surface.
     """
@@ -351,7 +351,6 @@ class Searcher:
         dictionary: DataFrame,
         n_docs: int,
         avgdl: float,
-        deleted: set[int] | None = None,
         range_bits: int = RANGE_BITS,
         deleted_df: DataFrame | None = None,
         probe_min_blocks: int = 2048,
@@ -359,9 +358,9 @@ class Searcher:
         analyzer: str = "simple",
         doc_stats: DataFrame | None = None,
     ):
-        """``deleted`` (small set, broadcast into scorer closures) or
-        ``deleted_df`` (a doc_id DataFrame, cogrouped per doc range — the
-        scale path for large tombstone tables); pass one or the other.
+        """``deleted_df``: the tombstoned doc_ids as a DataFrame
+        (``LoadedIndex.deleted_df``), cogrouped per doc range by the
+        scorers — never collected to the driver.
 
         ``probe_min_blocks`` gates the global-θ₀ seed probe (see
         ``_seed_theta0``): queries whose estimated decode volume is below
@@ -373,7 +372,6 @@ class Searcher:
         self.dictionary = dictionary
         self.n_docs = n_docs
         self.avgdl = avgdl
-        self.deleted = frozenset(deleted or ())
         self.deleted_df = deleted_df
         self.range_bits = range_bits
         self.probe_min_blocks = probe_min_blocks
@@ -526,7 +524,7 @@ class Searcher:
             blocks.select(*cols), side_df, meta
         )
         # closure state only — the UDF must not capture self (SparkSession)
-        range_bits, deleted = self.range_bits, self.deleted
+        range_bits = self.range_bits
         range_size = 1 << range_bits
         allowed_present = allowed is not None
 
@@ -534,12 +532,9 @@ class Searcher:
             if len(pdf) == 0:
                 return _empty_topk_pdf()
             base = int(key[0]) << range_bits
-            dead, C = deleted, None
+            C = None
             if side is not None:
                 # side rows of this range: dead (kind=0) ∪ allowed (kind=1)
-                dead = dead | frozenset(
-                    side.loc[side["kind"] == 0, "doc_id"].tolist()
-                )
                 if allowed_present:
                     allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(
                         np.int64
@@ -548,8 +543,10 @@ class Searcher:
                         return _empty_topk_pdf()  # nothing allowed here
                     C = np.zeros(range_size, dtype=bool)
                     C[allow - base] = True
-            if dead:
-                local = np.fromiter(dead, dtype=np.int64) - base
+                local = (
+                    side.loc[side["kind"] == 0, "doc_id"].to_numpy(np.int64)
+                    - base
+                )
                 local = local[(local >= 0) & (local < range_size)]
                 if len(local):
                     if C is None:
@@ -615,11 +612,10 @@ class Searcher:
         doc scoring < θ₀ can enter the global top-k. Exactness is
         preserved by construction.
 
-        Liveness of probed docs: against a driver-side ``deleted`` set the
-        mask is a numpy isin; against a distributed ``deleted_df`` table
-        the ≤ ~k·2 probed doc_ids are semi-joined against the tombstone
-        table in ONE tiny Spark job (collecting only probed∩deleted, which
-        is at most nprobe·BLOCK_SIZE rows) — so the seed survives upserts
+        Liveness of probed docs: the ≤ ~k·2 probed doc_ids are
+        semi-joined against the ``deleted_df`` tombstone table in ONE tiny
+        Spark job (collecting only probed∩deleted, which is at most
+        nprobe·BLOCK_SIZE rows) — so the seed survives upserts
         and a 10^12-doc index with one tombstone still prunes every doc
         range from its first block (round-2 verdict item 1).
 
@@ -660,9 +656,7 @@ class Searcher:
             dls = codec.varbyte_decode(r["dl_bytes"])
             decoded.append((ids, tfs, dls))
         dead = None
-        if self.deleted:
-            dead = np.fromiter(self.deleted, dtype=np.int64)
-        elif self.deleted_df is not None and decoded:
+        if self.deleted_df is not None and decoded:
             # one tiny job: which of the ≤ nprobe·BLOCK_SIZE probed docs
             # are tombstoned? The PROBE side is broadcast (a few hundred
             # rows) and the tombstone table streams past it — never the
@@ -1827,14 +1821,11 @@ class Searcher:
     # ---------------- boolean / filtered / phrase retrieval ----------------
 
     def _mask_deleted(self, flat: DataFrame) -> DataFrame:
-        """Remove tombstoned docs from a flat-posting frame (either
-        tombstone representation)."""
+        """Remove tombstoned docs from a flat-posting frame."""
         if self.deleted_df is not None:
             return flat.join(
                 self.deleted_df.select("doc_id"), "doc_id", "left_anti"
             )
-        if self.deleted:
-            return flat.where(~F.col("doc_id").isin(list(self.deleted)))
         return flat
 
     def topk_and(

@@ -43,12 +43,17 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import RANGE_BITS, BuiltIndex, build_index
+from .build import (
+    DEFAULT_FIELD,
+    RANGE_BITS,
+    BuiltIndex,
+    build_index_multifield,
+    build_index_prenumbered,
+)
 
 # range layout of stores written before the range_bits stats column
 # existed (rounds 1-6 used 16; the column makes the layout explicit)
 _LEGACY_RANGE_BITS = 16
-_DEFAULT_RANGE_BITS = RANGE_BITS
 
 # physical tables; doc_stats is a logical projection of docs (see save())
 TABLES = ("corpus_stats", "dictionary", "postings", "docs")
@@ -103,6 +108,20 @@ def superseded_doc_ids(existing_doc_stats: DataFrame, new_keys: DataFrame) -> Da
         (F.col("conv_id") == F.col("k1")) & (F.col("turn_idx") == F.col("k2")),
         "left_semi",
     ).select("doc_id")
+
+
+@dataclass(frozen=True)
+class Layout:
+    """The persisted settings and totals of a set of segments — their
+    ``corpus_stats`` rows, aggregated, with the legacy defaults applied
+    (``IndexStore._layout``)."""
+
+    n_docs: int
+    total_tokens: int
+    next_doc_id: int  # id-space high-water mark
+    positions: bool  # the index setting; uniform across segments
+    analyzer: str
+    range_bits: tuple[int, int]  # (min, max) over the segments
 
 
 @dataclass
@@ -326,10 +345,8 @@ class IndexStore:
             if resume and self.stage_done(stage_key):
                 return
             self.log_manifest(stage_key, "started")
-            if name == "corpus_stats":
-                self._write_corpus_stats(built, segment)
-            elif name == "field_stats":
-                self._write_field_stats(built, segment)
+            if name in ("corpus_stats", "field_stats"):
+                self._write_stats_table(name, built, segment)
             else:
                 self._write(df_fn(), name, segment, pcols)
             self.log_manifest(stage_key, "done", segment=segment)
@@ -366,105 +383,75 @@ class IndexStore:
                 )
             return self._build_metrics(segment)
 
+        def postings_then_dictionary() -> None:
+            run_stage("postings", lambda: built.postings, ("bucket",))
+            run_stage("dictionary", dictionary_src, ("bucket",))
+
+        small = ["corpus_stats"]  # pyarrow writes of a few rows
+        if built.field_stats is not None:
+            small.append("field_stats")
         with ThreadPoolExecutor(max_workers=5) as ex:
+            futures = [ex.submit(run_stage, "docs", lambda: built.docs, ())]
             if postings_cached:
-                futures = [
-                    ex.submit(run_stage, "docs", lambda: built.docs, ()),
+                futures += [
                     ex.submit(run_stage, "postings", lambda: built.postings, ("bucket",)),
                     ex.submit(run_stage, "dictionary", dictionary_src, ("bucket",)),
-                    ex.submit(run_stage, "corpus_stats", None, ()),
-                    ex.submit(run_stage, "metrics", metrics_src, ()),
                 ]
-                if built.field_stats is not None:
-                    futures.append(ex.submit(run_stage, "field_stats", None, ()))
-                for f in futures:
-                    f.result()  # re-raise the first stage failure
             else:
-                def postings_then_derived() -> None:
-                    run_stage("postings", lambda: built.postings, ("bucket",))
-                    run_stage("dictionary", dictionary_src, ("bucket",))
-
-                futures = [
-                    ex.submit(run_stage, "docs", lambda: built.docs, ()),
-                    ex.submit(postings_then_derived),
-                    ex.submit(run_stage, "corpus_stats", None, ()),
-                ]
-                if built.field_stats is not None:
-                    futures.append(ex.submit(run_stage, "field_stats", None, ()))
-                for f in futures:
-                    f.result()
-                run_stage("metrics", metrics_src, ())
+                futures.append(ex.submit(postings_then_dictionary))
+            futures += [ex.submit(run_stage, name, None, ()) for name in small]
+            if postings_cached:
+                futures.append(ex.submit(run_stage, "metrics", metrics_src, ()))
+            for f in futures:
+                f.result()  # re-raise the first stage failure
+        if not postings_cached:
+            run_stage("metrics", metrics_src, ())
         # everything is on disk now — drop the build-time executor caches
         built.release()
 
-    def _write_corpus_stats(self, built: BuiltIndex, segment: int) -> None:
-        """One row — pyarrow on the driver, schema identical to the Spark
-        write it replaces (spark.read.parquet reads it back unchanged)."""
+    def _write_stats_table(
+        self, name: str, built: BuiltIndex, segment: int
+    ) -> None:
+        """``corpus_stats`` (one row) or ``field_stats`` (one row per
+        field) — pyarrow on the driver (a Spark job to write a few rows
+        costs ~1 s of scheduling), schema identical to a Spark write
+        (spark.read.parquet reads it back unchanged). ``is_default`` marks
+        the unprefixed field so upsert/merge rebuild segments with the
+        SAME prefix layout."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        row = built.corpus_stats.collect()[0]
-        table = pa.table(
-            {
-                "n_docs": pa.array([row["n_docs"]], pa.int64()),
-                "avgdl": pa.array([row["avgdl"]], pa.float64()),
-                "total_tokens": pa.array([row["total_tokens"]], pa.int64()),
-                "next_doc_id": pa.array([row["next_doc_id"]], pa.int64()),
-                "positions": pa.array([row["positions"]], pa.bool_()),
-                "analyzer": pa.array(
-                    [row["analyzer"] if "analyzer" in row else "simple"],
-                    pa.string(),
-                ),
-                "range_bits": pa.array(
-                    [
-                        row["range_bits"]
-                        if "range_bits" in row
-                        else _DEFAULT_RANGE_BITS
-                    ],
-                    pa.int64(),
-                ),
+        if name == "corpus_stats":
+            rows = built.corpus_stats.collect()
+            types = {
+                "n_docs": pa.int64(), "avgdl": pa.float64(),
+                "total_tokens": pa.int64(), "next_doc_id": pa.int64(),
+                "positions": pa.bool_(), "analyzer": pa.string(),
+                "range_bits": pa.int64(),
             }
+        else:
+            rows = [
+                r.asDict() | {"is_default": r["field"] == built.default_field}
+                for r in built.field_stats.collect()
+            ]
+            types = {
+                "field": pa.string(), "doc_count": pa.int64(),
+                "avgdl": pa.float64(), "total_tokens": pa.int64(),
+                "is_default": pa.bool_(),
+            }
+        table = pa.table(
+            {c: pa.array([r[c] for r in rows], t) for c, t in types.items()}
         )
-        path = self._path("corpus_stats", segment)
+        path = self._path(name, segment)
         os.makedirs(path, exist_ok=True)
         pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
-    def _write_field_stats(self, built: BuiltIndex, segment: int) -> None:
-        """Per-field stats (multi-field indexes) — a handful of rows,
-        written driver-side via pyarrow like corpus_stats. ``is_default``
-        marks the unprefixed field so upsert/merge rebuild segments with
-        the SAME prefix layout."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        rows = built.field_stats.collect()
-        table = pa.table(
-            {
-                "field": pa.array([r["field"] for r in rows], pa.string()),
-                "doc_count": pa.array(
-                    [r["doc_count"] for r in rows], pa.int64()
-                ),
-                "avgdl": pa.array([r["avgdl"] for r in rows], pa.float64()),
-                "total_tokens": pa.array(
-                    [r["total_tokens"] for r in rows], pa.int64()
-                ),
-                "is_default": pa.array(
-                    [r["field"] == built.default_field for r in rows],
-                    pa.bool_(),
-                ),
-            }
-        )
-        path = self._path("field_stats", segment)
-        os.makedirs(path, exist_ok=True)
-        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-
-    def _field_info(self) -> tuple[list[str], str] | None:
-        """(sorted field names, default field) of a multi-field index,
-        from the tiny field_stats table; None for single-field stores."""
-        from .build import DEFAULT_FIELD
-
+    def _field_info(self) -> tuple[list[str], str]:
+        """(sorted field names, default field) from the tiny field_stats
+        table; a store without one is the one-field index
+        ``(["text"], "text")``."""
         if not os.path.isdir(os.path.join(self.root, "field_stats")):
-            return None
+            return [DEFAULT_FIELD], DEFAULT_FIELD
         df = self._read_all("field_stats")
         cols = ["field"] + (["is_default"] if "is_default" in df.columns else [])
         rows = df.select(*cols).distinct().collect()
@@ -474,6 +461,46 @@ class IndexStore:
             if "is_default" in cols and r["is_default"]
         )
         return fields, (defaults[0] if defaults else DEFAULT_FIELD)
+
+    def _layout(self, segments: list[int] | None = None) -> Layout:
+        """The one reader of the persisted ``corpus_stats`` layout: ONE
+        aggregate (one collect) over its 1-row-per-segment table — every
+        segment, or only ``segments``. Legacy rules, applied here once:
+        a missing or all-null ``positions`` column is True (the documented
+        default; min() skips the nulls of pre-flag segments on a mixed
+        store, so it reads "every segment positional"), a missing
+        ``analyzer`` is "simple" and a missing ``range_bits`` is the
+        rounds 1-6 layout (16)."""
+        cs = (
+            self._read_all("corpus_stats")
+            if segments is None
+            else self.spark.read.parquet(
+                *[self._path("corpus_stats", s) for s in segments]
+            )
+        )
+        none = F.lit(None)
+        rb = "range_bits" in cs.columns
+        row = cs.agg(
+            F.sum("n_docs").alias("n_docs"),
+            F.sum("total_tokens").alias("tt"),
+            F.max("next_doc_id").alias("next_id"),
+            (F.min("positions") if "positions" in cs.columns else none).alias("pos"),
+            (F.max("analyzer") if "analyzer" in cs.columns else none).alias("an"),
+            (F.min("range_bits") if rb else none).alias("rb_min"),
+            (F.max("range_bits") if rb else none).alias("rb_max"),
+        ).collect()[0]
+
+        def rbits(v) -> int:
+            return _LEGACY_RANGE_BITS if v is None else int(v)
+
+        return Layout(
+            n_docs=int(row["n_docs"] or 0),
+            total_tokens=int(row["tt"] or 0),
+            next_doc_id=int(row["next_id"] or 0),
+            positions=True if row["pos"] is None else bool(row["pos"]),
+            analyzer="simple" if row["an"] is None else str(row["an"]),
+            range_bits=(rbits(row["rb_min"]), rbits(row["rb_max"])),
+        )
 
     def _build_metrics(
         self,
@@ -674,8 +701,7 @@ class IndexStore:
             raise ValueError(
                 "update_by_query needs at least one set expression"
             )
-        finfo = self._field_info()
-        content_cols = finfo[0] if finfo else ["text"]
+        content_cols, _ = self._field_info()
         bad = sorted(c for c in set_exprs if c not in content_cols)
         if bad:
             raise ValueError(
@@ -796,39 +822,12 @@ class IndexStore:
         doc_stats = self._read_all("docs").select(
             "doc_id", "conv_id", "turn_idx", "dl"
         )
-        stats_df = self._read_all("corpus_stats")
-        aggs = [
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_tokens").alias("tt"),
-            F.max("next_doc_id").alias("next_id"),
-        ]
-        has_pos_col = "positions" in stats_df.columns
-        if has_pos_col:
-            # the index SETTING: uniform across segments by construction
-            # (upsert/merge follow it); min() = "every segment positional"
-            aggs.append(F.min("positions").alias("pos"))
-        has_an_col = "analyzer" in stats_df.columns
-        if has_an_col:
-            aggs.append(F.max("analyzer").alias("an"))
-        has_rb_col = "range_bits" in stats_df.columns
-        if has_rb_col:
-            aggs.append(F.min("range_bits").alias("rb_min"))
-            aggs.append(F.max("range_bits").alias("rb_max"))
-        corpus = stats_df.agg(*aggs).collect()[0]
+        layout = self._layout()
         # range layout guard: every scorer derives doc ranges from the
         # CODE constant (the frozen bench constructs Searcher with the
         # default), so a store whose persisted range_bits differs would
         # silently mis-score — fail loud and name the fix instead
-        rb = (
-            int(corpus["rb_min"])
-            if has_rb_col and corpus["rb_min"] is not None
-            else _LEGACY_RANGE_BITS
-        )
-        rb_max = (
-            int(corpus["rb_max"])
-            if has_rb_col and corpus["rb_max"] is not None
-            else _LEGACY_RANGE_BITS
-        )
+        rb, rb_max = layout.range_bits
         if rb != rb_max or rb != RANGE_BITS:
             raise ValueError(
                 f"index at {self.root!r} was built with range_bits="
@@ -836,21 +835,8 @@ class IndexStore:
                 f"build uses {RANGE_BITS}; rebuild the index (or compact "
                 "with the current code) before querying"
             )
-        n_docs = int(corpus["n_docs"])
-        avgdl = (int(corpus["tt"]) / n_docs) if n_docs else 0.0
-        # null-safe: on a mixed-schema store (pre-flag segments) min()
-        # ignores nulls, and an all-null aggregate must keep the
-        # documented positions=True default, not flip to False
-        positions = (
-            True
-            if not has_pos_col or corpus["pos"] is None
-            else bool(corpus["pos"])
-        )
-        analyzer = (
-            str(corpus["an"])
-            if has_an_col and corpus["an"] is not None
-            else "simple"
-        )
+        n_docs = layout.n_docs
+        avgdl = (layout.total_tokens / n_docs) if n_docs else 0.0
         dictionary = self._merged_dictionary()
         postings = self._read_all("postings")
         docs = self._read_all("docs")
@@ -859,8 +845,6 @@ class IndexStore:
         field_stats = None
         fs_dir = os.path.join(self.root, "field_stats")
         if os.path.isdir(fs_dir):
-            from .build import DEFAULT_FIELD
-
             raw = self._read_all("field_stats")
             if "is_default" not in raw.columns:
                 # legacy (pre-marker) multi-field store: the default was
@@ -898,9 +882,9 @@ class IndexStore:
             deleted_df=self.tombstones_df(),
             # high-water mark carried in the 1-row-per-segment stats table
             # (build.py corpus_stats) — no max(doc_id) scan of docs
-            next_doc_id=int(corpus["next_id"]),
-            positions=positions,
-            analyzer=analyzer,
+            next_doc_id=layout.next_doc_id,
+            positions=layout.positions,
+            analyzer=layout.analyzer,
             field_stats=field_stats,
         )
 
@@ -946,34 +930,14 @@ class IndexStore:
         """
         from pyspark.sql import Observation
 
-        # multi-field store? rebuild segments with the SAME field layout
-        # (fields + default from the persisted field_stats table)
-        finfo = self._field_info()
+        # rebuild segments with the store's field layout (fields + default
+        # from the persisted field_stats table)
+        fields, default_field = self._field_info()
         # allocator spans tombstone files too — see _next_segment
         seg = self._next_segment()
-        stats_df = self._read_all("corpus_stats")
-        has_pos = "positions" in stats_df.columns
-        aggs = [F.max("next_doc_id").alias("next_id")]
-        if has_pos:
-            aggs.append(F.min("positions").alias("pos"))
-        has_an = "analyzer" in stats_df.columns
-        if has_an:
-            aggs.append(F.max("analyzer").alias("an"))
-        stats_row = stats_df.agg(*aggs).collect()[0]
-        next_doc_id = int(stats_row["next_id"])
-        analyzer = (
-            str(stats_row["an"])
-            if has_an and stats_row["an"] is not None
-            else "simple"
-        )
-        # follow the index's positions setting — a positionless index must
-        # not silently become mixed-format after an upsert (round-3 ADVICE);
-        # null-safe: an all-null flag column keeps the True default
-        positions = (
-            True
-            if not has_pos or stats_row["pos"] is None
-            else bool(stats_row["pos"])
-        )
+        # follow the index's settings — a positionless index must not
+        # silently become mixed-format after an upsert (round-3 ADVICE)
+        layout = self._layout()
         existing_keys = self._read_all("docs").select(
             "doc_id", "conv_id", "turn_idx"
         )
@@ -991,9 +955,11 @@ class IndexStore:
         # time, so a batch carrying the same (conv_id, turn_idx) twice must
         # leave exactly ONE live version. Deterministic pick: max (ts,
         # content columns) — latest timestamp wins, content as a total
-        # tie-break. For a multi-field store the content is EVERY scored
-        # field (the batch must carry all of them, named by field).
-        tgt_cols = finfo[0] if finfo else [text_col]
+        # tie-break. The content is EVERY scored field: ``text_col`` names
+        # the source column of the ``text`` field, every other field is
+        # read by its own name.
+        src = {f: text_col if f == DEFAULT_FIELD else f for f in fields}
+        tgt_cols = list(dict.fromkeys(src.values()))
         missing = [c for c in tgt_cols if c not in new_turns.columns]
         if missing:
             raise ValueError(
@@ -1017,21 +983,11 @@ class IndexStore:
                 ],
             )
         )
-        if finfo:
-            from .build import build_index_multifield
-
-            built = build_index_multifield(
-                self.spark, new_turns, {f: f for f in finfo[0]},
-                id_col, order_col, default_field=finfo[1],
-                id_base=next_doc_id, positions=positions,
-                analyzer=analyzer,
-            )
-        else:
-            built = build_index(
-                self.spark, new_turns, id_col, order_col, text_col,
-                id_base=next_doc_id, positions=positions,
-                analyzer=analyzer,
-            )
+        built = build_index_multifield(
+            self.spark, new_turns, src, id_col, order_col,
+            default_field=default_field, id_base=layout.next_doc_id,
+            positions=layout.positions, analyzer=layout.analyzer,
+        )
         if built.n_docs == 0:
             # empty batch (reference: no messages → no bulk actions). An
             # empty segment would be unreadable parquet (zero part files).
@@ -1068,8 +1024,8 @@ class IndexStore:
         summary of the index — segment count/ids, docs.count (live),
         docs.deleted (tombstoned, the Lucene deleted-docs gauge that
         drives merge decisions), corpus totals (tokens, avgdl — summed
-        per-segment like the scorers do), the analyzer, scored fields
-        (multi-field stores), and store size in bytes.
+        per-segment like the scorers do), the analyzer, the scored fields
+        and store size in bytes.
 
         Cost shape: corpus_stats is one row per segment (a metadata
         scan), the tombstone count is one distributed count (never
@@ -1081,27 +1037,11 @@ class IndexStore:
             raise FileNotFoundError(
                 f"no index segments under {self.root!r}"
             )
-        cs = self.spark.read.parquet(
-            os.path.join(self.root, "corpus_stats")
-        )
-        aggs = [
-            F.sum("n_docs").alias("n"),
-            F.sum("total_tokens").alias("tok"),
-        ]
-        has_an = "analyzer" in cs.columns
-        if has_an:  # legacy (pre-analyzer-column) stores are "simple"
-            aggs.append(F.max("analyzer").alias("an"))
-        totals = cs.agg(*aggs).collect()[0]
-        n_indexed = int(totals["n"])
-        total_tokens = int(totals["tok"])
-        analyzer = (
-            str(totals["an"])
-            if has_an and totals["an"] is not None
-            else "simple"
-        )
+        layout = self._layout()
+        n_indexed, total_tokens = layout.n_docs, layout.total_tokens
         tdf = self.tombstones_df()
         n_deleted = int(tdf.count()) if tdf is not None else 0
-        finfo = self._field_info()
+        fields, _ = self._field_info()
         size = 0
         for dirpath, _, files in os.walk(self.root):
             for f in files:
@@ -1117,19 +1057,10 @@ class IndexStore:
             "docs_indexed": n_indexed,
             "total_tokens": total_tokens,
             "avgdl": (total_tokens / n_indexed) if n_indexed else 0.0,
-            "analyzer": analyzer,
-            "fields": list(finfo[0]) if finfo else ["text"],
+            "analyzer": layout.analyzer,
+            "fields": fields,
             "store_size_bytes": size,
         }
-
-    def _analyzer(self) -> str:
-        """The persisted analyzer setting (ONE tiny agg over the
-        1-row-per-segment stats table; legacy stores → 'simple')."""
-        cs = self.spark.read.parquet(os.path.join(self.root, "corpus_stats"))
-        if "analyzer" not in cs.columns:
-            return "simple"
-        row = cs.agg(F.max("analyzer").alias("an")).collect()[0]
-        return str(row["an"]) if row["an"] is not None else "simple"
 
     def _live_docs(self) -> DataFrame:
         """The docs table minus tombstoned versions (anti-join; no-op
@@ -1152,8 +1083,7 @@ class IndexStore:
         key predicates of the broadcast hash join probe side."""
         if not keys:
             raise ValueError("mget needs at least one (conv_id, turn_idx) key")
-        finfo = self._field_info()
-        content_cols = finfo[0] if finfo else ["text"]
+        content_cols, _ = self._field_info()
         kdf = self.spark.createDataFrame(
             sorted({(str(c), int(t)) for c, t in keys}),
             "conv_id string, turn_idx long",
@@ -1194,9 +1124,8 @@ class IndexStore:
         from ..analysis import tokens_expr
         from pyspark.sql.window import Window
 
-        analyzer = self._analyzer()
-        finfo = self._field_info()
-        content = finfo[1] if finfo else "text"
+        analyzer = self._layout().analyzer
+        _, content = self._field_info()
         row_df = self._live_docs().where(
             (F.col("conv_id") == F.lit(str(conv_id)))
             & (F.col("turn_idx") == F.lit(int(turn_idx)))
@@ -1241,11 +1170,9 @@ class IndexStore:
         this merge purged; masking a nonexistent id is a no-op. Returns
         the new segment id.
         """
-        from .build import build_index_prenumbered
-
-        # multi-field store: rebuild with the same field layout (the docs
-        # table carries one column per scored field, named by field)
-        finfo = self._field_info()
+        # rebuild with the store's field layout (the docs table carries one
+        # column per scored field, named by field)
+        fields, default_field = self._field_info()
         segs = sorted(set(seg_ids))
         have = set(self.segments())
         missing = [s for s in segs if s not in have]
@@ -1255,9 +1182,8 @@ class IndexStore:
             raise ValueError("merge needs >= 2 segments")
 
         docs_paths = [self._path("docs", s) for s in segs]
-        content_cols = finfo[0] if finfo else ["text"]
         all_docs = self.spark.read.parquet(*docs_paths).select(
-            "doc_id", "conv_id", "turn_idx", *content_cols
+            "doc_id", "conv_id", "turn_idx", *fields
         )
         deleted = self.tombstones_df()
         docs = all_docs
@@ -1291,54 +1217,20 @@ class IndexStore:
             )
             carried = carry.count()
 
-        stats_df = self.spark.read.parquet(
-            *[self._path("corpus_stats", s) for s in segs]
-        )
-        # preserve the index's positions setting from the PERSISTED stats
-        # flag (uniform across segments by construction — upsert follows
-        # it): a positionless index must not silently pay the position
+        # preserve the index's settings from the merged segments' PERSISTED
+        # stats (uniform across segments by construction — upsert follows
+        # them): a positionless index must not silently pay the position
         # stream on merge, and a positional one must keep phrase support.
         # (Replaces a limit(2048) block sample, which was nondeterministic
         # on a mixed-format index — round-3 ADVICE.)
-        has_pos_col = "positions" in stats_df.columns
-        stat_aggs = [F.max("next_doc_id").alias("hi")]
-        if has_pos_col:
-            stat_aggs.append(F.min("positions").alias("pos"))
-        has_an_col = "analyzer" in stats_df.columns
-        if has_an_col:
-            stat_aggs.append(F.max("analyzer").alias("an"))
-        stats = stats_df.agg(*stat_aggs).collect()[0]
-        # null-safe: an all-null flag column keeps the True default
-        has_positions = (
-            True
-            if not has_pos_col or stats["pos"] is None
-            else bool(stats["pos"])
-        )
+        layout = self._layout(segs)
         # allocator spans tombstone files too — see _next_segment
         new_seg = self._next_segment()
-        if finfo:
-            from .build import build_index_multifield_prenumbered
-
-            merge_analyzer = (
-                str(stats["an"])
-                if has_an_col and stats["an"] is not None
-                else "simple"
-            )
-            built = build_index_multifield_prenumbered(
-                self.spark, docs, finfo[0], default_field=finfo[1],
-                next_doc_id=int(stats["hi"]), positions=has_positions,
-                analyzer=merge_analyzer,
-            )
-        else:
-            merge_analyzer = (
-                str(stats["an"])
-                if has_an_col and stats["an"] is not None
-                else "simple"
-            )
-            built = build_index_prenumbered(
-                self.spark, docs, next_doc_id=int(stats["hi"]),
-                positions=has_positions, analyzer=merge_analyzer,
-            )
+        built = build_index_prenumbered(
+            self.spark, docs, fields, default_field,
+            next_doc_id=layout.next_doc_id, positions=layout.positions,
+            analyzer=layout.analyzer,
+        )
         if built.n_docs == 0:
             # every doc in these segments was tombstoned — nothing to
             # write; just retire the old directories (and their stats)
@@ -1400,9 +1292,9 @@ class IndexStore:
     def compact(self) -> None:
         """Lucene force-merge analogue: rebuild a single segment from the
         latest version of every doc, drop tombstones and old segments.
-        Field-aware: a multi-field store rebuilds with its persisted
-        field layout (fields + default from field_stats)."""
-        finfo = self._field_info()
+        Rebuilds with the store's persisted field layout (fields +
+        default from field_stats)."""
+        fields, default_field = self._field_info()
         existing = self.load()
         if existing.docs is None:
             raise ValueError("compact requires the docs (text) table")
@@ -1412,22 +1304,13 @@ class IndexStore:
             latest = latest.join(
                 existing.deleted_df.select("doc_id"), "doc_id", "left_anti"
             )
-        content_cols = finfo[0] if finfo else ["text"]
-        latest = latest.select("conv_id", "turn_idx", *content_cols)
+        latest = latest.select("conv_id", "turn_idx", *fields)
         latest = latest.localCheckpoint()  # sever lineage from dirs we delete
-        if finfo:
-            from .build import build_index_multifield
-
-            built = build_index_multifield(
-                self.spark, latest, {f: f for f in finfo[0]},
-                default_field=finfo[1], positions=existing.positions,
-                analyzer=existing.analyzer,
-            )
-        else:
-            built = build_index(
-                self.spark, latest, positions=existing.positions,
-                analyzer=existing.analyzer,
-            )
+        built = build_index_multifield(
+            self.spark, latest, {f: f for f in fields},
+            default_field=default_field, positions=existing.positions,
+            analyzer=existing.analyzer,
+        )
         import shutil
 
         for t in (*TABLES, "metrics", "field_stats"):

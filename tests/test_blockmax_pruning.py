@@ -58,19 +58,14 @@ def test_theta_is_tombstone_free(spark, skewed_index):
     block and return nothing."""
     built = skewed_index
     dead = set(range(N_HOT))
-    s_set = Searcher(
-        spark, built.postings, built.dictionary, built.n_docs, built.avgdl,
-        deleted=dead,
-    )
     dead_df = spark.createDataFrame([(i,) for i in sorted(dead)], "doc_id long")
     s_df = Searcher(
         spark, built.postings, built.dictionary, built.n_docs, built.avgdl,
         deleted_df=dead_df,
     )
-    ref = _top(s_set.topk_dataframe("hot", 10).collect())
+    ref = _top(s_df.topk_dataframe("hot", 10).collect())
     assert len(ref) == 10
     assert not {d for d, _ in ref} & dead
-    assert _top(s_set.topk_blockmax("hot", 10).collect()) == ref
     assert _top(s_df.topk_blockmax("hot", 10).collect()) == ref
 
 
@@ -107,13 +102,17 @@ def test_theta0_probe_seeds_pruning_and_stays_exact(spark, skewed_index):
 
 
 def test_theta0_probe_masks_driver_side_tombstones(spark, skewed_index):
-    """Tombstoning the hot docs must flow into the probe: θ₀ from dead
-    docs would over-prune and drop live results."""
+    """Tombstoning the hot docs must flow into the probe (its tiny
+    semi-join of the probed docs against the tombstone table): θ₀ from
+    dead docs would over-prune and drop live results."""
     built = skewed_index
     dead = set(range(N_HOT))
     s = Searcher(
         spark, built.postings, built.dictionary, built.n_docs, built.avgdl,
-        deleted=dead, probe_min_blocks=1,
+        deleted_df=spark.createDataFrame(
+            [(i,) for i in sorted(dead)], "doc_id long"
+        ),
+        probe_min_blocks=1,
     )
     ref = _top(s.topk_dataframe("hot", 10).collect())
     assert len(ref) == 10 and not {d for d, _ in ref} & dead
@@ -140,12 +139,6 @@ def test_theta0_probe_seeds_with_distributed_tombstone_table(spark, skewed_index
     idfs, blocks, meta = seeded._plan("hot")
     theta0 = seeded._seed_theta0(idfs, meta, blocks, 10)
     assert theta0 > 0.0
-    # the seed must equal the driver-side-set seed (same live probed docs)
-    s_set = Searcher(
-        spark, built.postings, built.dictionary, built.n_docs, built.avgdl,
-        deleted=dead, probe_min_blocks=1,
-    )
-    assert theta0 == s_set._seed_theta0(idfs, meta, blocks, 10)
     acc_s = spark.sparkContext.accumulator(0)
     acc_u = spark.sparkContext.accumulator(0)
     fast = _top(seeded.topk_blockmax("hot", 10, skip_acc=acc_s).collect())
@@ -165,7 +158,10 @@ def test_theta0_probe_with_fewer_than_k_live_probed_docs(spark, skewed_index):
     dead = set(range(250))
     s = Searcher(
         spark, built.postings, built.dictionary, built.n_docs, built.avgdl,
-        deleted=dead, probe_min_blocks=1,
+        deleted_df=spark.createDataFrame(
+            [(i,) for i in sorted(dead)], "doc_id long"
+        ),
+        probe_min_blocks=1,
     )
     plan = s._plan("hot")
     idfs, blocks, meta = plan

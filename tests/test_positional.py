@@ -240,13 +240,6 @@ def test_phrase_respects_tombstones(spark, corpus):
     assert want, "fixture phrase must match at least one doc"
     dead = want[0][0]
     want_after = [w for w in want if w[0] != dead]
-    # small driver-side set path
-    s_set = Searcher(
-        spark, built.postings, built.dictionary, built.n_docs, built.avgdl,
-        deleted={dead},
-    )
-    _assert_topk_equal(s_set.topk_phrase(query, 10).collect(), want_after, 10)
-    # distributed tombstone-table path (the CLI default after upserts)
     s_df = Searcher(
         spark, built.postings, built.dictionary, built.n_docs, built.avgdl,
         deleted_df=spark.createDataFrame([(dead,)], "doc_id long"),
