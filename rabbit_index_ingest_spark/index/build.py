@@ -131,6 +131,49 @@ class BuiltIndex:
         self.cached = ()
 
 
+CORPUS_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("n_docs", T.LongType()),
+        T.StructField("avgdl", T.DoubleType()),
+        T.StructField("total_tokens", T.LongType()),
+        T.StructField("next_doc_id", T.LongType()),
+        T.StructField("positions", T.BooleanType()),
+        T.StructField("analyzer", T.StringType()),
+        T.StructField("range_bits", T.LongType()),
+    ]
+)
+FIELD_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("field", T.StringType()),
+        T.StructField("doc_count", T.LongType()),
+        T.StructField("avgdl", T.DoubleType()),
+        T.StructField("total_tokens", T.LongType()),
+    ]
+)
+
+
+def literal_rows(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """A few driver-known rows as a JVM-only frame (literals over a
+    one-partition range, no Python RDD): collecting it runs no Python
+    worker, where ``createDataFrame(rows)`` forks one per core to yield a
+    single row."""
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        *[
+                            F.lit(v).cast(f.dataType).alias(f.name)
+                            for v, f in zip(row, schema.fields)
+                        ]
+                    )
+                    for row in rows
+                ]
+            )
+        )
+    )
+
+
 def term_bucket_expr(col) -> F.Column:
     """Storage bucket for a term — enables partition-pruned query scans."""
     return F.pmod(F.xxhash64(col), F.lit(N_TERM_BUCKETS)).cast("int")
@@ -825,9 +868,7 @@ def build_index_prenumbered(
             dc = int(row[f"_dc_{f}"] or 0)
             tt = int(row[f"_tt_{f}"] or 0)
             fs_rows.append((f, dc, (tt / dc) if dc else 0.0, tt))
-        field_stats = spark.createDataFrame(
-            fs_rows, "field string, doc_count long, avgdl double, total_tokens long"
-        )
+        field_stats = literal_rows(spark, fs_rows, FIELD_STATS_SCHEMA)
         total_tokens = int(row[f"_tt_{default_field}"] or 0)
     if _ranged_cache is not None:
         _ranged_cache.unpersist()
@@ -841,11 +882,11 @@ def build_index_prenumbered(
     # stats so upsert/merge follow the index's settings instead of
     # sampling blocks (a sampled probe made the merged format
     # nondeterministic on a mixed index).
-    corpus_stats = spark.createDataFrame(
+    corpus_stats = literal_rows(
+        spark,
         [(n_docs, avgdl, total_tokens, next_doc_id, positions, analyzer,
           range_bits)],
-        "n_docs long, avgdl double, total_tokens long, next_doc_id long,"
-        " positions boolean, analyzer string, range_bits long",
+        CORPUS_STATS_SCHEMA,
     )
     return BuiltIndex(
         docs=docs,

@@ -72,6 +72,8 @@ def get_spark(
     evidence). On a real cluster you would drop ``.master`` and submit
     with ``spark-submit --py-files engine.zip`` (see cli.py).
     """
+    from .index.build import N_TERM_BUCKETS
+
     cores_s = str(cores) if cores else os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
@@ -100,7 +102,21 @@ def get_spark(
         # (e.g. raw media blobs) re-set a finite value per stage instead.
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "2147483647b")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # No partitionOverwriteMode default: Spark's static mode holds, and
+        # the writers that need more say so per write (IndexStore._write
+        # overwrites its own seg=N directory; the enriched-ingest sink asks
+        # for dynamic to replace only its batch_id partition).
+        #
+        # List a segment's bucket=NN directories on the driver: above this
+        # many children Spark launches a distributed listing job per
+        # directory, and every seg=N of postings/dictionary has exactly
+        # N_TERM_BUCKETS of them — one job per segment per table on every
+        # load. A store with more segments than this still lists its
+        # top level in parallel.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(N_TERM_BUCKETS),
+        )
         # zstd for shuffle/broadcast/spill IO and for every parquet the
         # engine writes. The build is memory-/IO-bandwidth-bound at fixed
         # box size (the N→4N scaling measurement runs on tmpfs precisely

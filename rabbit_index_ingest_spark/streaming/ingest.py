@@ -158,12 +158,11 @@ def start_enriched_ingest(
         out = batch_df.join(F.broadcast(dim), join_key, "left").withColumn(
             "batch_id", F.lit(batch_id)
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("batch_id").parquet(out_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # a per-write option, not a session conf flip: concurrent queries
+        # on the session never see the mode change
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(out_dir)
 
     return (
         stream.writeStream.foreachBatch(handle)

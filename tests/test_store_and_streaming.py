@@ -235,6 +235,115 @@ def test_single_field_store_has_no_field_stats(spark, root):
     check()
 
 
+def _bucket_files(root):
+    """{(table, seg dir, bucket dir): [parquet file names]} for the two
+    bucketed tables."""
+    out = {}
+    for table in ("postings", "dictionary"):
+        tdir = os.path.join(root, table)
+        for seg in os.listdir(tdir):
+            for b in os.listdir(os.path.join(tdir, seg)):
+                if b.startswith("bucket="):
+                    out[(table, seg, b)] = [
+                        f for f in os.listdir(os.path.join(tdir, seg, b))
+                        if f.endswith(".parquet")
+                    ]
+    return out
+
+
+def test_bucketed_writes_place_whole_buckets_per_task(spark, root):
+    """postings and dictionary writes place rows by bucket id: bucket b is
+    written by task b mod n, n = min(N_TERM_BUCKETS, shuffle partitions,
+    cores), so every seg=N/bucket=NN directory holds exactly one part
+    file, and a small segment is still written by n tasks — after save,
+    upsert and merge alike."""
+    from rabbit_index_ingest_spark.index.build import N_TERM_BUCKETS
+
+    n = min(
+        N_TERM_BUCKETS,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+    assert n > 1
+    store = IndexStore(spark, root)
+
+    def check():
+        files = _bucket_files(root)
+        assert files
+        for (table, seg, b), names in files.items():
+            assert len(names) == 1, (table, seg, b, names)
+            task = int(b.split("=")[1]) % n
+            assert names[0].startswith(f"part-{task:05d}-"), (table, seg, b, names)
+
+    store.save(build_index(spark, transcripts_df(spark, n_conv=20)))
+    check()
+    seg = store.upsert(
+        spark.createDataFrame(
+            [("conv-00000002", 1, "xenolith gryphon palimpsest"),
+             ("conv-99999999", 0, "karo tenro xenolith")],
+            "conv_id string, turn_idx int, text string",
+        )
+    )
+    check()
+    store.merge_segments([0, seg])
+    check()
+
+
+def test_load_reads_each_table_once_and_lists_on_driver(spark, root):
+    """load() on a two-segment store launches at most 7 Spark jobs (one
+    read per table; the corpus_stats aggregate) and no distributed
+    listing of a segment's N_TERM_BUCKETS bucket directories."""
+    from rabbit_index_ingest_spark.index.build import N_TERM_BUCKETS
+
+    store = IndexStore(spark, root)
+    store.save(build_index(spark, transcripts_df(spark, n_conv=20)))
+    store.upsert(
+        spark.createDataFrame(
+            [("conv-00000002", 1, "xenolith gryphon palimpsest")],
+            "conv_id string, turn_idx int, text string",
+        )
+    )
+    assert store.segments() == [0, 1]
+    sc = spark.sparkContext
+    group = "test-load-job-count"
+    sc.setJobGroup(group, "load")
+    try:
+        store.load()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 7, jobs
+    for j in jobs:
+        for s in tracker.getJobInfo(j).stageIds:
+            assert tracker.getStageInfo(s).numTasks != N_TERM_BUCKETS, (j, s)
+
+
+def test_stats_rows_run_no_python_task(spark):
+    """corpus_stats and field_stats are JVM literal rows: their plans
+    hold no Python RDD scan or Python evaluation, so writing a one-row
+    stats table forks no Python worker."""
+    from rabbit_index_ingest_spark.index.build import build_index_multifield
+
+    t = transcripts_df(spark, n_conv=5).withColumn("title", F.col("conv_id"))
+    built = build_index_multifield(spark, t, fields={"text": "text", "title": "title"})
+    try:
+        for df in (built.corpus_stats, built.field_stats):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "ExistingRDD" not in plan and "Python" not in plan, plan
+        assert built.corpus_stats.schema.simpleString() == (
+            "struct<n_docs:bigint,avgdl:double,total_tokens:bigint,"
+            "next_doc_id:bigint,positions:boolean,analyzer:string,"
+            "range_bits:bigint>"
+        )
+        assert built.field_stats.schema.simpleString() == (
+            "struct<field:string,doc_count:bigint,avgdl:double,total_tokens:bigint>"
+        )
+    finally:
+        built.release()
+
+
 def test_streaming_incremental_index(spark, tmp_path):
     """availableNow file-stream → foreachBatch → segment upserts; the
     checkpoint makes re-runs no-ops (at-least-once → exactly-once)."""
