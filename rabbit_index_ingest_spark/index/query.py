@@ -22,11 +22,16 @@ Two independent paths that must agree rank- and score-identically:
 Every block-max mode (BM25 OR/AND/msm/dis_max/multi_match/search_after,
 phrase, sloppy phrase, phrase-prefix, span_near, constant-score
 expansions) runs through ONE per-range scorer chassis,
-``Searcher._run_range_scorer``, which owns the range grouping/cogroup
-transport, the per-range live bitmap ``C`` (tombstones, allow- and
-deny-lists) and the skip count. A mode only supplies its kernel, built by
-a ``_make_*_range_scorer`` factory: ``kernel(base, pdf, C) -> (rows,
-skipped)`` scores one doc range (contract on the chassis).
+``Searcher._run_range_scorer``, which owns the per-range live bitmap
+``C`` (tombstones, allow- and deny-lists), the skip count, the merge and
+the transport. A mode only supplies its kernel, built by a
+``_make_*_range_scorer`` factory: ``kernel(base, pdf, C) -> (rows,
+skipped)`` scores one doc range (contract on the chassis). The same
+kernels run over two transports, picked per query from the terms'
+estimated block count: below ``_LOCAL_MAX_BLOCKS`` and without a side
+frame the pruned blocks are collected over Arrow and scored on the
+driver; otherwise they are grouped (or cogrouped with the side frame) by
+doc range into an ``applyInPandas`` stage.
 
 Replaces: the reference's delegation of search to Elasticsearch 7.9.1
 (Lucene 8.6 block-max WAND + BM25 k1=1.2 b=0.75; constants pinned in
@@ -48,6 +53,7 @@ from pyspark.sql import types as T
 from ..analysis import py_tokenize
 from . import codec
 from .build import RANGE_BITS
+from .store import _job_description
 
 FLAT_SCHEMA = T.StructType(
     [
@@ -82,6 +88,28 @@ _SCORE_COLS = [
     "term", "range_id", "first_doc", "last_doc",
     "doc_bytes", "tf_bytes", "dl_bytes", "max_tf", "min_dl",
 ]
+
+
+# Below this many estimated posting blocks (Σ⌈df/BLOCK_SIZE⌉ over the
+# query terms) a query without side frames is scored on the driver: the
+# pruned blocks are collected over Arrow and the range kernels run
+# in-process, instead of paying a grouped pandas-UDF stage whose fixed
+# cost (about 0.4 s on 4 cores) dwarfs a few hundred blocks' kernel
+# time. Measured on a 210k-turn index, local[4]: the two routes break
+# even at about 2.5k blocks (phrase), 3k (OR, k=100) and 3.5-4k (AND);
+# the threshold sits below all three, leaving room for hosts with more
+# cores, where the distributed route's per-block cost is lower.
+_LOCAL_MAX_BLOCKS = 1536
+
+
+# the dictionary columns the scorers plan from: (df, max_tf, min_dl)
+_META_COLS = ["df", "max_tf", "min_dl"]
+
+
+def _estimated_blocks(meta: dict[str, tuple[int, int, int]]) -> int:
+    """Σ⌈df/BLOCK_SIZE⌉ over the terms of ``meta`` (term → (df, max_tf,
+    min_dl)): the posting blocks a query's term-pruned scan reads."""
+    return sum(-(-m[0] // codec.BLOCK_SIZE) for m in meta.values() if m[0] > 0)
 
 
 def lucene_idf(n_docs: int, df: int) -> float:
@@ -403,6 +431,9 @@ class Searcher:
         # dictionary scan (the dictionary is immutable for a Searcher's
         # lifetime; df=0 is cached too so absent terms don't re-scan)
         self._df_cache: dict[str, tuple[int, int, int]] = {}
+        # scorer transport threshold (see _run_range_scorer); tests set it
+        # per instance to force one route
+        self._local_max_blocks = _LOCAL_MAX_BLOCKS
 
     def _term_meta(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
         """term → (df, max_tf, min_dl) from the dictionary (cached)."""
@@ -412,7 +443,7 @@ class Searcher:
             rows = (
                 self.dictionary.where(F.col("bucket").isin(buckets))
                 .where(F.col("term").isin(missing))
-                .select("term", "df", "max_tf", "min_dl")
+                .select("term", *_META_COLS)
                 .collect()
             )
             found = {
@@ -423,12 +454,19 @@ class Searcher:
                 self._df_cache[t] = found.get(t, (0, 0, 0))
         return {t: self._df_cache[t] for t in terms}
 
+    def _expansion_terms(self, rows) -> list[str]:
+        """Terms of an expansion scan's dictionary rows (``term`` plus
+        ``_META_COLS``), whose stats go into the term-meta cache."""
+        for r in rows:
+            self._df_cache[r["term"]] = (
+                int(r["df"]), int(r["max_tf"]), int(r["min_dl"])
+            )
+        return [r["term"] for r in rows]
+
     def _term_dfs(self, terms: list[str]) -> dict[str, int]:
         return {t: m[0] for t, m in self._term_meta(terms).items()}
 
-    def _scorer_partitions(
-        self, meta: dict[str, tuple[int, int, int]] | None
-    ) -> int:
+    def _scorer_partitions(self, meta: dict[str, tuple[int, int, int]]) -> int:
         """Task count for a range-grouped scorer stage, sized from the
         QUERIED TERMS' block count (df is already in hand from the
         dictionary) instead of the session-wide shuffle setting.
@@ -449,17 +487,10 @@ class Searcher:
         parallelism; never exceed the session setting (the data-sized
         global ceiling) nor the corpus's RANGE COUNT (more tasks than
         ranges can only produce empty ones — the group key has at most
-        ~n_docs/2^range_bits distinct values). ``meta=None`` (expansion
-        paths, where per-term df is not in hand) falls back to the range
-        count alone — for the early-terminating constant-score scorer the
-        per-range work is O(k), so task count IS the cost there."""
+        ~n_docs/2^range_bits distinct values)."""
         nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         n_ranges = max(1, -(-max(self.n_docs, 1) // (1 << self.range_bits)))
-        if meta is None:
-            return max(1, min(nparts, n_ranges))
-        est = sum(
-            -(-m[0] // codec.BLOCK_SIZE) for m in meta.values() if m[0] > 0
-        )
+        est = _estimated_blocks(meta)
         if est <= 0:
             return 1
         dp = self.spark.sparkContext.defaultParallelism
@@ -470,7 +501,7 @@ class Searcher:
         self,
         sel: DataFrame,
         side: DataFrame | None,
-        meta: dict[str, tuple[int, int, int]] | None,
+        meta: dict[str, tuple[int, int, int]],
     ):
         """(left, side) groupings for a per-range scorer: both inputs are
         explicitly repartitioned by ``range_id`` to the data-sized task
@@ -490,15 +521,17 @@ class Searcher:
         self,
         kernel,
         blocks: DataFrame,
-        meta: dict[str, tuple[int, int, int]] | None,
+        meta: dict[str, tuple[int, int, int]],
         k: int | None = None,
         allowed: DataFrame | None = None,
         excluded: DataFrame | None = None,
         skip_acc=None,
         positions: bool = False,
+        label: str = "scorer",
     ) -> DataFrame:
-        """The per-range scorer chassis: the one transport, masking and
-        skip-count path behind every block-max scorer mode.
+        """The per-range scorer chassis: the one masking, skip-count and
+        merge path behind every block-max scorer mode, over two
+        transports.
 
         ``kernel(base, pdf, C) -> (result pdf, skipped)`` scores ONE doc
         range: ``base`` is the range's first doc_id, ``pdf`` its posting
@@ -508,21 +541,35 @@ class Searcher:
         doc is live. A kernel never returns a doc outside ``C`` and
         reports the blocks (or position streams) it skipped undecoded.
 
-        The chassis groups the blocks by doc range (``_group_by_range``)
-        and, when a side frame exists (``_side_frame``: tombstone table,
-        allow- and deny-lists), cogroups each range's blocks with its side
-        rows — neither set ever leaves the cluster, vs broadcasting a
-        Python set, which caps at ~10^6 entries. Per range it decodes the
-        side rows into ``C``, returns empty without calling the kernel
-        when the range holds no block or no allowed doc, and adds the
-        kernel's skip count to ``skip_acc`` once. With ``k`` the
-        per-range rows merge through the global TakeOrderedAndProject
-        (score desc, doc_id asc); ``k=None`` returns them unmerged."""
+        Per range the chassis decodes the side rows into ``C``, returns
+        empty without calling the kernel when the range holds no block or
+        no allowed doc, and adds the kernel's skip count to ``skip_acc``
+        once. With ``k`` the per-range rows merge in (score desc, doc_id
+        asc) order and the first ``k`` are returned; ``k=None`` returns
+        every row.
+
+        Transport, chosen from the query terms' estimated block count
+        (``_estimated_blocks(meta)``):
+
+        * **local** — below ``self._local_max_blocks`` and with no side
+          frame: the pruned blocks are collected over Arrow
+          (``toPandas``), every range's kernel runs on the driver and the
+          merged rows come back as a ``LocalRelation`` DataFrame. A
+          Python-UDF stage's fixed cost is several times a few hundred
+          blocks' kernel time.
+        * **distributed** — otherwise: the blocks are grouped by doc range
+          (``_group_by_range``) into ``applyInPandas`` and, when a side
+          frame exists (``_side_frame``: tombstone table, allow- and
+          deny-lists), cogrouped with each range's side rows — neither
+          set ever leaves the cluster, vs collecting a Python set, which
+          caps at ~10^6 entries. With ``k`` the merge is the global
+          TakeOrderedAndProject.
+
+        ``label`` names the Spark jobs the chassis launches itself (the
+        local route's block collect): ``<label> k=… terms=… route=local``.
+        """
         side_df = self._side_frame(allowed, excluded)
         cols = [*_SCORE_COLS, "pos_bytes"] if positions else _SCORE_COLS
-        grouped, side_g = self._group_by_range(
-            blocks.select(*cols), side_df, meta
-        )
         # closure state only — the UDF must not capture self (SparkSession)
         range_bits = self.range_bits
         range_size = 1 << range_bits
@@ -560,6 +607,30 @@ class Searcher:
         def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             return cg(key, pdf, None)
 
+        if side_df is None and _estimated_blocks(meta) < self._local_max_blocks:
+            with _job_description(
+                self.spark,
+                f"{label} k={k} terms={len(meta)} route=local",
+            ):
+                pdf = blocks.select(*cols).toPandas()
+                outs = [
+                    plain((rid,), g.reset_index(drop=True))
+                    for rid, g in pdf.groupby("range_id", sort=True)
+                ]
+                rows = (
+                    pd.concat(outs, ignore_index=True) if outs
+                    else _empty_topk_pdf()
+                )
+                if k is not None:
+                    rows = rows.sort_values(
+                        ["score", "doc_id"], ascending=[False, True],
+                        kind="stable",
+                    ).head(k)
+                return self.spark.createDataFrame(rows, TOPK_SCHEMA)
+
+        grouped, side_g = self._group_by_range(
+            blocks.select(*cols), side_df, meta
+        )
         if side_g is None:
             local = grouped.applyInPandas(plain, TOPK_SCHEMA)
         else:
@@ -870,6 +941,7 @@ class Searcher:
                 idfs, self.avgdl, k, self.range_bits, theta0=theta0
             ),
             blocks, meta, k, allowed, excluded, skip_acc,
+            label="topk_blockmax",
         )
 
     def topk_dismax(
@@ -913,6 +985,7 @@ class Searcher:
                 tie_breaker=float(tie_breaker),
             ),
             blocks, meta, k, allowed, excluded, skip_acc,
+            label="topk_dismax",
         )
 
     def topk_dismax_dataframe(
@@ -1080,6 +1153,7 @@ class Searcher:
                 groups=groups if tb is not None else None,
             ),
             blocks, meta, k, allowed, excluded, skip_acc,
+            label="topk_multimatch",
         )
 
     def topk_multimatch_dataframe(
@@ -1204,6 +1278,7 @@ class Searcher:
                 idfs, self.avgdl, k, self.range_bits, order
             ),
             blocks, meta, k, allowed, excluded, skip_acc,
+            label="topk_blockmax_and",
         )
 
     def topk_msm(
@@ -1287,6 +1362,7 @@ class Searcher:
                 idfs, self.avgdl, k, self.range_bits, order, msm
             ),
             blocks, meta, k, allowed, excluded, skip_acc,
+            label="topk_msm",
         )
 
     def topk_terms_set(
@@ -1383,13 +1459,13 @@ class Searcher:
             )
         rows = (
             self.dictionary.where(F.col("term").startswith(toks[0]))
-            .select("term")
+            .select("term", *_META_COLS)
             .distinct()
             .orderBy("term")
             .limit(max_expansions + 1)
             .collect()
         )
-        terms = [r["term"] for r in rows]
+        terms = self._expansion_terms(rows)
         if len(terms) > max_expansions:
             if not truncate:
                 raise ValueError(
@@ -1462,12 +1538,13 @@ class Searcher:
         blocks = self.postings.where(
             F.col("bucket").isin(_term_buckets(self.spark, terms))
         ).where(F.col("term").isin(terms))
-        # expansion terms carry no df (expand_* return terms only) —
-        # meta=None sizes by range count, the right bound for this
-        # early-terminating O(k)-per-range scorer
+        # expand_* leave their terms' stats in the term-meta cache, so
+        # this lookup launches no job for an expanded term list
         local = self._run_range_scorer(
-            _make_constscore_range_scorer(k, self.range_bits), blocks, None,
+            _make_constscore_range_scorer(k, self.range_bits), blocks,
+            self._term_meta(terms),
             allowed=allowed, excluded=excluded, skip_acc=skip_acc,
+            label="topk_expanded",
         )
         return local.orderBy(F.asc("doc_id")).limit(k)
 
@@ -1551,7 +1628,8 @@ class Searcher:
         )
         rows = (
             cand.select(
-                "term", F.levenshtein(F.col("term"), F.lit(t)).alias("_d")
+                "term", *_META_COLS,
+                F.levenshtein(F.col("term"), F.lit(t)).alias("_d"),
             )
             .where(F.col("_d") <= fuzziness)
             .distinct()
@@ -1559,7 +1637,7 @@ class Searcher:
             .limit(max_expansions)
             .collect()
         )
-        return [r["term"] for r in rows]
+        return self._expansion_terms(rows)
 
     def topk_fuzzy(
         self,
@@ -1658,13 +1736,13 @@ class Searcher:
             raise ValueError(f"invalid regexp {pattern!r}: {e}") from e
         rows = (
             self.dictionary.where(F.col("term").rlike(java_rx))
-            .select("term")
+            .select("term", *_META_COLS)
             .distinct()
             .orderBy("term")
             .limit(max_expansions + 1)
             .collect()
         )
-        terms = [r["term"] for r in rows]
+        terms = self._expansion_terms(rows)
         if len(terms) > max_expansions:
             raise ValueError(
                 f"regexp {pattern!r} expands to more than "
@@ -1716,13 +1794,13 @@ class Searcher:
         )
         rows = (
             self.dictionary.where(F.col("term").like(like))
-            .select("term")
+            .select("term", *_META_COLS)
             .distinct()
             .orderBy("term")
             .limit(max_expansions + 1)
             .collect()
         )
-        terms = [r["term"] for r in rows]
+        terms = self._expansion_terms(rows)
         if len(terms) > max_expansions:
             raise ValueError(
                 f"wildcard {pattern!r} expands to more than "
@@ -1816,6 +1894,7 @@ class Searcher:
                 idf_q, self.avgdl, k, self.range_bits, groups, slots
             ),
             blocks, meta, k, allowed, excluded, skip_acc, positions=True,
+            label="topk_phrase_prefix",
         )
 
     # ---------------- boolean / filtered / phrase retrieval ----------------
@@ -2021,6 +2100,7 @@ class Searcher:
         return self._run_range_scorer(
             kernel, blocks, meta, k, allowed, excluded, skip_acc,
             positions=True,
+            label="topk_phrase",
         )
 
     def topk_phrase_dataframe(
@@ -2206,6 +2286,7 @@ class Searcher:
                 self.range_bits, order, offsets,
             ),
             blocks, meta, positions=True,
+            label="phrase_scored",
         )
 
     # ---------------- ES bool query (compositional DSL) ----------------
@@ -2874,6 +2955,7 @@ class Searcher:
                 cursor=after,
             ),
             blocks, meta, k, allowed, excluded, skip_acc,
+            label="search_after",
         )
 
     def sort_by(
@@ -5193,6 +5275,7 @@ class Searcher:
                 idf_q, self.avgdl, k, self.range_bits, order, qterms, gap
             ),
             blocks, meta, k, allowed, excluded, skip_acc, positions=True,
+            label="topk_near",
         )
 
     def topk_near_unordered(
@@ -5243,6 +5326,7 @@ class Searcher:
                 [(t, 0) for t in uniq], slop, False,
             ),
             blocks, meta, k, allowed, excluded, skip_acc, positions=True,
+            label="topk_near_unordered",
         )
 
     def topk_near_dataframe(

@@ -56,6 +56,22 @@ def package_zip() -> str:
     return out
 
 
+def _driver_memory() -> str:
+    """The driver heap: ``SPARK_DRIVER_MEMORY`` when set, else half the
+    host's MemTotal, at most 48g. A fixed 48g exceeds small hosts, where
+    the local-mode JVM then grows until the OOM killer takes it; hosts
+    without /proc/meminfo get the 48g cap."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    cap_mb = 48 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            kb = int(next(ln for ln in f if ln.startswith("MemTotal:")).split()[1])
+    except (OSError, StopIteration):
+        return f"{cap_mb}m"
+    return f"{max(1024, min(cap_mb, kb // 2 // 1024))}m"
+
+
 def get_spark(
     app_name: str = "rabbit-index-ingest-spark",
     cores: int | None = None,
@@ -134,7 +150,7 @@ def get_spark(
         # 8g/32 tasks ≈ 150MB/task spills and GC-thrashes (measured: a
         # 210k-turn build ran 5× slower at local[32] than local[8] on an
         # 8g heap). On a real cluster this is spark.executor.memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

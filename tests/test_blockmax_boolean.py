@@ -213,6 +213,7 @@ def test_and_blockmax_range_prune_plan_is_metadata_only(spark, skewed, tmp_path)
     s = Searcher(
         spark, loaded.postings, loaded.dictionary, loaded.n_docs, loaded.avgdl
     )
+    s._local_max_blocks = 0  # the distributed route (small queries run locally)
     plan = s.topk_blockmax_and("hot rare", 10)._jdf.queryExecution().toString()
     # two postings scans: the block scan (byte columns) and the rare-range
     # scan; the latter must not touch doc_bytes/tf_bytes/pos_bytes

@@ -173,6 +173,7 @@ def test_msm_range_prune_plan_is_metadata_only(spark, corpus, tmp_path):
     s = Searcher(
         spark, loaded.postings, loaded.dictionary, loaded.n_docs, loaded.avgdl
     )
+    s._local_max_blocks = 0  # the distributed route (small queries run locally)
     plan = (
         s.topk_msm("zephyr quantum lattice", 10, msm=2)
         ._jdf.queryExecution()

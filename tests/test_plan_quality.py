@@ -33,6 +33,7 @@ def test_query_scan_is_bucket_partition_pruned(spark, stored):
     (bucket=NN) of the query terms — at 100 TB this is the difference
     between touching 1/64th of the postings and all of them."""
     s = Searcher(spark, stored.postings, stored.dictionary, stored.n_docs, stored.avgdl)
+    s._local_max_blocks = 0  # the distributed route (small queries run locally)
     plan = _plan(s.topk_blockmax("karo", 10))
     # partition filter on the parquet scan, not a post-scan filter
     assert "PartitionFilters" in plan
@@ -81,6 +82,7 @@ def test_topk_is_take_ordered(spark, stored):
     """Global top-k must compile to TakeOrderedAndProject — a k-row merge,
     not a full sort."""
     s = Searcher(spark, stored.postings, stored.dictionary, stored.n_docs, stored.avgdl)
+    s._local_max_blocks = 0  # the distributed route (small queries run locally)
     plan = _plan(s.topk_blockmax("karo", 10))
     assert "TakeOrderedAndProject" in plan
 

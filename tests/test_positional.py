@@ -156,6 +156,7 @@ def test_positions_default_on_and_prunable(spark, corpus, tmp_path):
     s = Searcher(
         spark, loaded.postings, loaded.dictionary, loaded.n_docs, loaded.avgdl
     )
+    s._local_max_blocks = 0  # the distributed route (small queries run locally)
     plan = (
         s.topk_blockmax("zephyr quantum", 5)
         ._jdf.queryExecution()

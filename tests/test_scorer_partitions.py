@@ -17,9 +17,13 @@ from rabbit_index_ingest_spark.index.query import Searcher
 @pytest.fixture(scope="module")
 def searcher(spark):
     built = build_index(spark, transcripts_df(spark, n_conv=300))
-    return Searcher(
+    s = Searcher(
         spark, built.postings, built.dictionary, built.n_docs, built.avgdl
     )
+    # every query here is small enough for the driver-side route; these
+    # tests size and inspect the distributed scorer stage
+    s._local_max_blocks = 0
+    return s
 
 
 def test_sizing_bounds(searcher):
@@ -30,10 +34,6 @@ def test_sizing_bounds(searcher):
     # huge df -> capped by session setting AND by the corpus range count
     n = searcher._scorer_partitions({"x": (10**9, 1, 1)})
     assert 1 <= n <= min(nparts, max(1, n_ranges))
-    # meta=None (expansion paths) -> range-count fallback
-    assert searcher._scorer_partitions(None) == max(
-        1, min(nparts, max(1, n_ranges))
-    )
     # a task should carry at least ~64 blocks before extra slots are used
     est_blocks = 10 * 64  # df for exactly 640 blocks
     n = searcher._scorer_partitions({"x": (est_blocks * codec.BLOCK_SIZE, 1, 1)})

@@ -1,0 +1,233 @@
+"""Scorer transport routing (Searcher._run_range_scorer): a query whose
+estimated block count is below the threshold and that has no side frame
+(tombstones, allow- or deny-list) is scored on the driver over collected
+blocks; every other query runs the grouped or cogrouped pandas-UDF stage.
+Both routes run the same kernels, so results (doc_id and the exact score)
+and the skipped-block total must be identical.
+"""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import DataFrame
+
+from rabbit_index_ingest_spark.analysis import py_tokenize
+from rabbit_index_ingest_spark.datagen import VOCAB, transcripts_df, transcripts_pandas
+from rabbit_index_ingest_spark.index import codec
+from rabbit_index_ingest_spark.index.build import build_index
+from rabbit_index_ingest_spark.index.query import (
+    Searcher,
+    _LOCAL_MAX_BLOCKS,
+    _estimated_blocks,
+)
+from rabbit_index_ingest_spark.index.store import IndexStore
+
+N_CONV = 300
+RANGE_BITS = 8  # several doc ranges, so the local route groups too
+BLOCK_SIZE = 16
+
+LOCAL = 10**12  # every query is below it
+DISTRIBUTED = 0  # no query is below it
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    built = build_index(
+        spark, transcripts_df(spark, n_conv=N_CONV),
+        range_bits=RANGE_BITS, block_size=BLOCK_SIZE,
+    )
+    # a bigram that occurs in the corpus, for the positional kernels
+    bigram = " ".join(py_tokenize(transcripts_pandas(N_CONV)["text"].iloc[3])[:2])
+    yield built, bigram
+    built.release()
+
+
+def _searcher(spark, built, route: int | None, **kw) -> Searcher:
+    # the single-field index seen as a one-field multi-field index, so
+    # multi_match runs too
+    s = Searcher(
+        spark, built.postings, built.dictionary, built.n_docs, built.avgdl,
+        range_bits=RANGE_BITS, field_stats={"text": (built.n_docs, built.avgdl)},
+        **kw,
+    )
+    if route is not None:  # None keeps the default threshold
+        s._local_max_blocks = route
+    return s
+
+
+def _plan(df: DataFrame) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _modes(bigram: str):
+    q2 = f"{VOCAB[0]} {VOCAB[3]}"
+    q4 = f"{VOCAB[0]} {VOCAB[1]} {VOCAB[5]} {VOCAB[9]}"
+    head = bigram.split()[0]
+    return {
+        "or": lambda s, acc: s.topk_blockmax(q4, 10, skip_acc=acc),
+        "or_boosted": lambda s, acc: s.topk_blockmax(
+            q2, 7, skip_acc=acc, boosts={VOCAB[0]: 2.0}
+        ),
+        "and": lambda s, acc: s.topk_blockmax_and(q2, 10, skip_acc=acc),
+        "msm": lambda s, acc: s.topk_msm(q4, 10, msm=2, skip_acc=acc),
+        "dismax": lambda s, acc: s.topk_dismax(
+            q4, 10, tie_breaker=0.3, skip_acc=acc
+        ),
+        "multimatch": lambda s, acc: s.topk_multimatch(
+            q2, {"text": 1.0}, 10, skip_acc=acc
+        ),
+        "search_after": lambda s, acc: s.search_after(
+            q2, 10, after=(3.0, 50), skip_acc=acc
+        ),
+        "phrase": lambda s, acc: s.topk_phrase(bigram, 10, skip_acc=acc),
+        "sloppy_phrase": lambda s, acc: s.topk_phrase(
+            bigram, 10, slop=2, skip_acc=acc
+        ),
+        "phrase_prefix": lambda s, acc: s.topk_phrase_prefix(
+            f"{head} {VOCAB[0][:2]}", 10, skip_acc=acc
+        ),
+        "span_near": lambda s, acc: s.topk_near(q2, 10, gap=3, skip_acc=acc),
+        "span_near_unordered": lambda s, acc: s.topk_near_unordered(
+            q2, 10, slop=2, skip_acc=acc
+        ),
+        # constant-score expansions: the chassis runs them with k=None
+        "prefix": lambda s, acc: s.topk_prefix(VOCAB[0][:2], 25, skip_acc=acc),
+        "wildcard": lambda s, acc: s.topk_wildcard(
+            VOCAB[1][:1] + "*", 25, skip_acc=acc
+        ),
+        "fuzzy": lambda s, acc: s.topk_fuzzy(VOCAB[2], 25, skip_acc=acc),
+        # the full phrase match set of a bool clause, k=None
+        "phrase_scored": lambda s, acc: s._phrase_scored_fast(bigram),
+    }
+
+
+def _run(spark, s, fn):
+    acc = spark.sparkContext.accumulator(0)
+    df = fn(s, acc)
+    rows = sorted(
+        ((r["doc_id"], repr(r["score"])) for r in df.collect()),
+        key=lambda x: (-float(x[1]), x[0]),
+    )
+    return df, rows, acc.value
+
+
+def test_routes_agree_for_every_kernel(spark, corpus):
+    built, bigram = corpus
+    local = _searcher(spark, built, LOCAL)
+    dist = _searcher(spark, built, DISTRIBUTED)
+    for name, fn in _modes(bigram).items():
+        ldf, lrows, lskip = _run(spark, local, fn)
+        ddf, drows, dskip = _run(spark, dist, fn)
+        assert lrows, f"{name}: fixture query matched nothing"
+        assert lrows == drows, name
+        assert lskip == dskip, (name, lskip, dskip)
+        assert "FlatMapGroupsInPandas" not in _plan(ldf), name
+        assert "FlatMapGroupsInPandas" in _plan(ddf), name
+
+
+def test_or_query_skips_blocks_on_both_routes(spark, corpus):
+    """The parity above must not be the trivial 0 == 0 for every mode."""
+    built, _ = corpus
+    q = f"{VOCAB[0]} {VOCAB[1]}"
+    skips = []
+    for route in (LOCAL, DISTRIBUTED):
+        acc = spark.sparkContext.accumulator(0)
+        _searcher(spark, built, route).topk_blockmax(q, 3, skip_acc=acc).collect()
+        skips.append(acc.value)
+    assert skips[0] == skips[1] > 0, skips
+
+
+@pytest.mark.parametrize("side", ["tombstones", "allowed", "excluded", "both"])
+def test_side_frames_stay_distributed(spark, corpus, side):
+    """A side frame always takes the cogrouped stage, even far below the
+    threshold: tombstones and allow/deny lists never reach the driver."""
+    built, _ = corpus
+    ids = spark.createDataFrame([(i,) for i in range(0, 400, 3)], "doc_id long")
+    kw = {"deleted_df": ids} if side == "tombstones" else {}
+    s = _searcher(spark, built, LOCAL, **kw)
+    q = f"{VOCAB[0]} {VOCAB[3]}"
+    allowed = ids if side in ("allowed", "both") else None
+    excluded = (
+        spark.createDataFrame([(i,) for i in range(0, 400, 7)], "doc_id long")
+        if side in ("excluded", "both") else None
+    )
+    for df in (
+        s.topk_blockmax(q, 10, allowed=allowed, excluded=excluded),
+        s.topk_phrase(q, 10, allowed=allowed, excluded=excluded),
+        s.topk_prefix(VOCAB[0][:2], 10, allowed=allowed, excluded=excluded),
+    ):
+        assert "FlatMapCoGroupsInPandas" in _plan(df), side
+    # and the cogrouped answer equals the forced-distributed one
+    d = _searcher(spark, built, DISTRIBUTED, **kw)
+    want = d.topk_blockmax(q, 10, allowed=allowed, excluded=excluded).collect()
+    got = s.topk_blockmax(q, 10, allowed=allowed, excluded=excluded).collect()
+    assert got == want
+
+
+def test_threshold_boundary_picks_the_route(spark, corpus):
+    """At the threshold the query runs the grouped pandas stage; one block
+    below it, the local route."""
+    built, _ = corpus
+    q = f"{VOCAB[0]} {VOCAB[1]}"
+    s = _searcher(spark, built, DISTRIBUTED)
+    est = _estimated_blocks(s._term_meta(sorted(set(q.split()))))
+    assert est > 0
+    s._local_max_blocks = est
+    above = s.topk_blockmax(q, 10)
+    assert "FlatMapGroupsInPandas" in _plan(above)
+    s._local_max_blocks = est + 1
+    below = s.topk_blockmax(q, 10)
+    assert "FlatMapGroupsInPandas" not in _plan(below)
+    assert "LocalTableScan" in _plan(below)
+    assert below.collect() == above.collect()
+
+
+def test_default_threshold_routes_a_large_query_distributed(spark, corpus):
+    """A default Searcher sends a query of at least ``_LOCAL_MAX_BLOCKS``
+    estimated blocks to the grouped stage and a small one to the driver."""
+    built, _ = corpus
+    s = _searcher(spark, built, None)
+    assert s._local_max_blocks == _LOCAL_MAX_BLOCKS
+    q = VOCAB[0]
+    # the term's cached dictionary stats claim the threshold's block count
+    s._df_cache[q] = (_LOCAL_MAX_BLOCKS * codec.BLOCK_SIZE, 1, 1)
+    assert _estimated_blocks(s._term_meta([q])) == _LOCAL_MAX_BLOCKS
+    big = s.topk_blockmax(q, 10)
+    assert "FlatMapGroupsInPandas" in _plan(big)
+    small = _searcher(spark, built, None).topk_blockmax(q, 10)
+    assert "FlatMapGroupsInPandas" not in _plan(small)
+
+
+def test_local_collect_is_bucket_pruned_and_labelled(spark, monkeypatch, tmp_path):
+    """The local route's block collect scans only the query terms'
+    storage partitions (PartitionFilters on ``bucket``) and runs under a
+    job description naming the query and the route."""
+    store = IndexStore(spark, str(tmp_path / "idx"))
+    store.save(build_index(spark, transcripts_df(spark, n_conv=30)), segment=0)
+    loaded = store.load()
+    seen = []
+    cls = type(loaded.postings)  # the session's DataFrame implementation
+    orig = cls.toPandas
+
+    def spy(self):
+        seen.append(
+            (
+                _plan(self),
+                spark.sparkContext.getLocalProperty("spark.job.description"),
+            )
+        )
+        return orig(self)
+
+    monkeypatch.setattr(cls, "toPandas", spy)
+    s = Searcher(
+        spark, loaded.postings, loaded.dictionary, loaded.n_docs, loaded.avgdl
+    )
+    q = f"{VOCAB[0]} {VOCAB[1]} {VOCAB[2]} {VOCAB[4]}"
+    s.topk_blockmax(q, 10).collect()
+    assert len(seen) == 1
+    plan, desc = seen[0]
+    seg = plan[plan.index("PartitionFilters"):][:500]
+    assert "bucket" in seg, seg
+    assert desc == "topk_blockmax k=10 terms=4 route=local"
+    # the caller's description is restored afterwards
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None
