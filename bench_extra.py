@@ -200,15 +200,11 @@ def main() -> None:
 
     # ---------- decode isolation (df-twin cost attribution) ----------
     from rabbit_index_ingest_spark.index.query import (
-        _term_buckets,
         flat_postings,
         flat_postings_positional,
     )
 
-    hot2 = [VOCAB[0], VOCAB[1]]
-    blocks_hot = loaded.postings.where(
-        F.col("bucket").isin(_term_buckets(spark, hot2))
-    ).where(F.col("term").isin(hot2))
+    blocks_hot = searcher._term_blocks([VOCAB[0], VOCAB[1]])
     fp = flat_postings(blocks_hot)
     with open(os.path.join(plans_dir, "decode_flat.txt"), "w") as f:
         f.write(_explain_str(fp))

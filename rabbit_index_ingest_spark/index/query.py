@@ -8,10 +8,11 @@ Two independent paths that must agree rank- and score-identically:
   is also the shape of the DuckDB oracle_sql twin.
 
 * ``Searcher.topk_blockmax`` — the fast path: term-pruned block scan
-  (Catalyst partition pruning on the term-hash ``bucket`` storage
-  partition) → per-doc-range exact MaxScore/block-max scoring in
-  ``applyInPandas`` (dense float64 accumulators per 2^RANGE_BITS-doc
-  range, conservative block skipping) → local top-k → global
+  (``Searcher._term_blocks``: Catalyst partition pruning on the
+  term-hash ``bucket`` storage partition) → per-doc-range exact
+  MaxScore/block-max scoring in ``applyInPandas`` (dense float64
+  accumulators per 2^RANGE_BITS-doc range, conservative block
+  skipping) → local top-k → global
   TakeOrderedAndProject. Exactness: a block is skipped only when every doc
   in it has a provable final-score upper bound below the running local
   kth-best lower bound θ, so no skipped doc can reach the top-k and every
@@ -32,6 +33,12 @@ estimated block count: below ``_LOCAL_MAX_BLOCKS`` and without a side
 frame the pruned blocks are collected over Arrow and scored on the
 driver; otherwise they are grouped (or cogrouped with the side frame) by
 doc range into an ``applyInPandas`` stage.
+
+Every query reads postings and dictionary rows through ONE owner of the
+term-pruned scan, ``_term_rows`` (``Searcher._term_blocks`` for posting
+blocks, ``Searcher._term_entries`` for dictionary rows) — the only code
+that knows the ``bucket`` storage layout. The DataFrame paths mask dead,
+allowed and excluded docs through ONE live mask, ``Searcher._mask``.
 
 Replaces: the reference's delegation of search to Elasticsearch 7.9.1
 (Lucene 8.6 block-max WAND + BM25 k1=1.2 b=0.75; constants pinned in
@@ -354,14 +361,21 @@ def flat_postings_positional(blocks: DataFrame) -> DataFrame:
     ).mapInArrow(decode, FLAT_POS_SCHEMA)
 
 
-def _term_buckets(spark: SparkSession, terms: list[str]) -> list[int]:
-    """Storage buckets of the query terms — computed driver-side with the
-    pure-Python twin of Spark's xxhash64 (functions/hashing.py, parity
-    asserted in tests/test_hashing.py). Avoids one Spark job per query."""
+def _term_rows(table: DataFrame, terms: list[str]) -> DataFrame:
+    """The rows of ``terms`` in a term-partitioned index table (postings
+    or dictionary, both stored under ``bucket = xxhash64(term) mod
+    N_TERM_BUCKETS``): the terms' buckets as a partition filter, then the
+    ``term`` filter. The one place that knows the bucket layout. Buckets
+    are computed driver-side with the pure-Python twin of Spark's xxhash64
+    (functions/hashing.py, parity asserted in tests/test_hashing.py), so
+    the lookup costs no Spark job."""
     from ..functions.hashing import term_bucket
     from .build import N_TERM_BUCKETS
 
-    return sorted({term_bucket(t, N_TERM_BUCKETS) for t in terms})
+    buckets = sorted({term_bucket(t, N_TERM_BUCKETS) for t in terms})
+    return table.where(F.col("bucket").isin(buckets)).where(
+        F.col("term").isin(list(terms))
+    )
 
 
 class Searcher:
@@ -435,16 +449,21 @@ class Searcher:
         # per instance to force one route
         self._local_max_blocks = _LOCAL_MAX_BLOCKS
 
+    def _term_blocks(self, terms: list[str]) -> DataFrame:
+        """The term-pruned scan: the posting blocks of ``terms``, read from
+        their storage buckets only (``_term_rows``)."""
+        return _term_rows(self.postings, terms)
+
+    def _term_entries(self, terms: list[str]) -> DataFrame:
+        """The dictionary rows of ``terms`` (``_term_blocks``' twin)."""
+        return _term_rows(self.dictionary, terms)
+
     def _term_meta(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
         """term → (df, max_tf, min_dl) from the dictionary (cached)."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            buckets = _term_buckets(self.spark, missing)
             rows = (
-                self.dictionary.where(F.col("bucket").isin(buckets))
-                .where(F.col("term").isin(missing))
-                .select("term", *_META_COLS)
-                .collect()
+                self._term_entries(missing).select("term", *_META_COLS).collect()
             )
             found = {
                 r["term"]: (int(r["df"]), int(r["max_tf"]), int(r["min_dl"]))
@@ -652,11 +671,7 @@ class Searcher:
         }
         if not idfs:
             return None
-        buckets = _term_buckets(self.spark, list(idfs))
-        blocks = self.postings.where(F.col("bucket").isin(buckets)).where(
-            F.col("term").isin(list(idfs))
-        )
-        return idfs, blocks, meta
+        return idfs, self._term_blocks(list(idfs)), meta
 
     def _seed_theta0(
         self,
@@ -693,8 +708,7 @@ class Searcher:
         Skipped (returns 0.0) when the estimated decode volume is below
         ``probe_min_blocks`` (probe job would cost more than it saves).
         """
-        est_blocks = sum(-(-m[0] // codec.BLOCK_SIZE) for m in meta.values())
-        if est_blocks < self.probe_min_blocks:
+        if _estimated_blocks(meta) < self.probe_min_blocks:
             return 0.0
         one = lambda v: np.array([v], dtype=np.float64)  # noqa: E731
         adl_of = (
@@ -839,7 +853,7 @@ class Searcher:
         idfs, blocks, _ = plan
         idfs = _fold_boosts(idfs, boosts)  # ES query-time boost
         scored = self._bm25_scored(
-            self._mask_deleted(flat_postings(blocks)), idfs
+            self._mask(flat_postings(blocks)), idfs
         )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1002,7 +1016,7 @@ class Searcher:
         if plan is None:
             return _empty_topk(self.spark)
         idfs, blocks, _ = plan
-        flat = self._mask_deleted(flat_postings(blocks))
+        flat = self._mask(flat_postings(blocks))
         # per (doc, term) contribution rows, then one aggregation
         per = flat.select(
             "doc_id",
@@ -1092,10 +1106,7 @@ class Searcher:
             groups[pt] = gi
         if not idfs:
             return None
-        buckets = _term_buckets(self.spark, list(idfs))
-        blocks = self.postings.where(F.col("bucket").isin(buckets)).where(
-            F.col("term").isin(list(idfs))
-        )
+        blocks = self._term_blocks(list(idfs))
         return idfs, avgdls, groups, blocks, {t: meta[t] for t in idfs}
 
     def topk_multimatch(
@@ -1183,7 +1194,7 @@ class Searcher:
         if plan is None:
             return _empty_topk(self.spark)
         idfs, avgdls, groups, blocks, _ = plan
-        flat = self._mask_deleted(flat_postings(blocks))
+        flat = self._mask(flat_postings(blocks))
         tmap = F.broadcast(
             self.spark.createDataFrame(
                 [(t, idfs[t], avgdls[t], groups[t]) for t in sorted(idfs)],
@@ -1262,22 +1273,12 @@ class Searcher:
             return _empty_topk(self.spark)  # a required term matches nothing
         # df-ascending processing order (ties: term) — deterministic
         order = sorted(terms, key=lambda t: (meta[t][0], t))
-        rarest = order[0]
-        if len(terms) > 1:
-            rare_ranges = (
-                self.postings.where(
-                    F.col("bucket").isin(_term_buckets(self.spark, [rarest]))
-                )
-                .where(F.col("term") == rarest)
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
         return self._run_range_scorer(
             _make_conjunctive_range_scorer(
                 idfs, self.avgdl, k, self.range_bits, order
             ),
-            blocks, meta, k, allowed, excluded, skip_acc,
+            self._in_rare_ranges(blocks, order[:1], len(order)),
+            meta, k, allowed, excluded, skip_acc,
             label="topk_blockmax_and",
         )
 
@@ -1406,12 +1407,8 @@ class Searcher:
         }
         if not idfs:
             return _empty_topk(self.spark)
-        buckets = _term_buckets(self.spark, list(idfs))
-        blocks = self.postings.where(F.col("bucket").isin(buckets)).where(
-            F.col("term").isin(list(idfs))
-        )
         scored = self._bm25_scored(
-            self._mask_deleted(flat_postings(blocks)), idfs,
+            self._mask(flat_postings(self._term_blocks(list(idfs)))), idfs,
             keep_match_count=True,
         )
         req = attrs.where(
@@ -1535,14 +1532,11 @@ class Searcher:
             )
         if rewrite != "constant_score":
             raise ValueError(f"unknown rewrite {rewrite!r}")
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, terms))
-        ).where(F.col("term").isin(terms))
         # expand_* leave their terms' stats in the term-meta cache, so
         # this lookup launches no job for an expanded term list
         local = self._run_range_scorer(
-            _make_constscore_range_scorer(k, self.range_bits), blocks,
-            self._term_meta(terms),
+            _make_constscore_range_scorer(k, self.range_bits),
+            self._term_blocks(terms), self._term_meta(terms),
             allowed=allowed, excluded=excluded, skip_acc=skip_acc,
             label="topk_expanded",
         )
@@ -1878,17 +1872,9 @@ class Searcher:
         # pass-2 slots: one per query offset; the last holds the or-set
         slots = [(i, [t]) for i, t in enumerate(fixed)]
         slots.append((len(fixed), sorted(exps)))
-        all_terms = sorted(set(uniq_fixed + exps))
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, all_terms))
-        ).where(F.col("term").isin(all_terms))
-        if len(groups) > 1:
-            rare_ranges = (
-                blocks.where(F.col("term").isin(groups[0]))
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
+        blocks = self._in_rare_ranges(
+            self._term_blocks(sorted(meta)), groups[0], len(groups)
+        )
         return self._run_range_scorer(
             _make_multiphrase_range_scorer(
                 idf_q, self.avgdl, k, self.range_bits, groups, slots
@@ -1899,13 +1885,40 @@ class Searcher:
 
     # ---------------- boolean / filtered / phrase retrieval ----------------
 
-    def _mask_deleted(self, flat: DataFrame) -> DataFrame:
-        """Remove tombstoned docs from a flat-posting frame."""
+    def _in_rare_ranges(
+        self, blocks: DataFrame, rare: list[str], n_groups: int
+    ) -> DataFrame:
+        """The range prune of the conjunctive block-max modes: ``blocks``
+        semi-joined to the distinct ``range_id``s of the rarest required
+        term (or or-group) ``rare``, one of ``n_groups`` required groups.
+        Block metadata only, read from ``rare``'s own buckets, so a hot
+        term's blocks in ranges the rare group never touches drop before
+        the shuffle. Lossless: a range without ``rare`` holds no match.
+        With one group the blocks are returned unchanged."""
+        if n_groups < 2:
+            return blocks
+        rare_ranges = self._term_blocks(rare).select("range_id").distinct()
+        return blocks.join(rare_ranges, "range_id", "left_semi")
+
+    def _mask(
+        self,
+        frame: DataFrame,
+        allowed: DataFrame | None = None,
+        excluded: DataFrame | None = None,
+    ) -> DataFrame:
+        """The live docs of a ``doc_id`` frame — the DataFrame path's
+        counterpart of the chassis's live bitmap ``C``: tombstoned docs
+        anti-joined away, then restricted to ``allowed`` (semi-join), then
+        ``excluded`` docs anti-joined away."""
         if self.deleted_df is not None:
-            return flat.join(
+            frame = frame.join(
                 self.deleted_df.select("doc_id"), "doc_id", "left_anti"
             )
-        return flat
+        if allowed is not None:
+            frame = frame.join(allowed.select("doc_id"), "doc_id", "left_semi")
+        if excluded is not None:
+            frame = frame.join(excluded.select("doc_id"), "doc_id", "left_anti")
+        return frame
 
     def topk_and(
         self, query_text: str, k: int = 10, allowed: DataFrame | None = None
@@ -1931,9 +1944,7 @@ class Searcher:
         plan = self._plan(query_text)
         assert plan is not None
         idfs, blocks, _ = plan
-        flat = self._mask_deleted(flat_postings(blocks))
-        if allowed is not None:
-            flat = flat.join(allowed.select("doc_id"), "doc_id", "left_semi")
+        flat = self._mask(flat_postings(blocks), allowed)
         scored = self._bm25_scored(flat, idfs, require_n=len(terms))
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1971,9 +1982,7 @@ class Searcher:
         idfs, blocks, _ = plan
         if len(idfs) < msm:
             return _empty_topk(self.spark)
-        flat = self._mask_deleted(flat_postings(blocks))
-        if allowed is not None:
-            flat = flat.join(allowed.select("doc_id"), "doc_id", "left_semi")
+        flat = self._mask(flat_postings(blocks), allowed)
         scored = self._bm25_scored(flat, idfs, min_match=msm)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -2000,9 +2009,7 @@ class Searcher:
             return _empty_topk(self.spark)
         idfs, blocks, _ = plan
         idfs = _fold_boosts(idfs, boosts)
-        flat = self._mask_deleted(flat_postings(blocks)).join(
-            allowed.select("doc_id"), "doc_id", "left_semi"
-        )
+        flat = self._mask(flat_postings(blocks), allowed)
         scored = self._bm25_scored(flat, idfs)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -2069,38 +2076,68 @@ class Searcher:
             if field != DEFAULT_FIELD:
                 qterms = [field_term(field, t) for t in qterms]
             n_docs, avgdl = self.field_stats[field]
+        scored = self._phrase_ranked(
+            qterms, k, n_docs, avgdl, allowed, excluded, skip_acc, slop,
+            "topk_phrase",
+        )
+        return _empty_topk(self.spark) if scored is None else scored
+
+    def _plan_required(self, qterms: list[str]) -> tuple | None:
+        """Plan of the positional block-max modes, whose every query term
+        is required: ``(uniq, meta, order, blocks)`` — the distinct terms,
+        their dictionary stats, their df-ascending processing order (ties:
+        term) and their term-pruned scan pruned to the rarest term's doc
+        ranges (``_in_rare_ranges``). None when there is no term or one is
+        absent from the corpus (nothing can match)."""
+        if not qterms:
+            return None
         uniq = sorted(set(qterms))
         meta = self._term_meta(uniq)
         if any(meta[t][0] == 0 for t in uniq):
-            return _empty_topk(self.spark)  # a phrase term matches nothing
-        idf_phrase = sum(lucene_idf(n_docs, meta[t][0]) for t in qterms)
-        offsets: dict[str, list[int]] = {}
-        for i, t in enumerate(qterms):
-            offsets.setdefault(t, []).append(i)
+            return None
         order = sorted(uniq, key=lambda t: (meta[t][0], t))
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, uniq))
-        ).where(F.col("term").isin(uniq))
-        if len(uniq) > 1:
-            rare_ranges = (
-                blocks.where(F.col("term") == order[0])
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
+        blocks = self._in_rare_ranges(
+            self._term_blocks(uniq), order[:1], len(order)
+        )
+        return uniq, meta, order, blocks
+
+    def _phrase_ranked(
+        self,
+        qterms: list[str],
+        k: int | None,
+        n_docs: int,
+        avgdl: float,
+        allowed: DataFrame | None = None,
+        excluded: DataFrame | None = None,
+        skip_acc=None,
+        slop: int = 0,
+        label: str = "topk_phrase",
+    ) -> DataFrame | None:
+        """The block-max phrase body behind ``topk_phrase`` (top ``k``)
+        and ``_phrase_scored_fast`` (``k=None``: every match — the
+        per-range emit cap is then the range capacity, ``2^range_bits``,
+        so no match is truncated). None when a phrase term is absent."""
+        plan = self._plan_required(qterms)
+        if plan is None:
+            return None
+        _, meta, order, blocks = plan
+        idf_phrase = sum(lucene_idf(n_docs, meta[t][0]) for t in qterms)
+        cap = (1 << self.range_bits) if k is None else k
         if slop > 0:
             kernel = _make_sloppy_range_scorer(
-                idf_phrase, avgdl, k, self.range_bits, order,
+                idf_phrase, avgdl, cap, self.range_bits, order,
                 [(t, i) for i, t in enumerate(qterms)], slop, True,
             )
         else:
+            offsets: dict[str, list[int]] = {}
+            for i, t in enumerate(qterms):
+                offsets.setdefault(t, []).append(i)
             kernel = _make_phrase_range_scorer(
-                idf_phrase, avgdl, k, self.range_bits, order, offsets
+                idf_phrase, avgdl, cap, self.range_bits, order, offsets
             )
         return self._run_range_scorer(
             kernel, blocks, meta, k, allowed, excluded, skip_acc,
-            positions=True,
-            label="topk_phrase",
+            positions=True, label=label,
         )
 
     def topk_phrase_dataframe(
@@ -2184,9 +2221,7 @@ class Searcher:
 
         parts: list[DataFrame] = []
         for t in uniq:
-            blocks_t = self.postings.where(
-                F.col("bucket").isin(_term_buckets(self.spark, [t]))
-            ).where(F.col("term") == t)
+            blocks_t = self._term_blocks([t])
             if rare_ranges is not None and t != rarest:
                 blocks_t = blocks_t.join(rare_ranges, "range_id", "left_semi")
             flat_t = flat_postings_positional(blocks_t)
@@ -2200,11 +2235,7 @@ class Searcher:
         unioned = parts[0]
         for p in parts[1:]:
             unioned = unioned.unionByName(p)
-        unioned = self._mask_deleted(unioned)
-        if allowed is not None:  # bool-filter composition (topk_filtered)
-            unioned = unioned.join(
-                allowed.select("doc_id"), "doc_id", "left_semi"
-            )
+        unioned = self._mask(unioned, allowed)  # bool-filter composition
         acc = (
             unioned
             .groupBy("doc_id")
@@ -2258,34 +2289,8 @@ class Searcher:
         bool query paid the decode-everything worst case (measured 3.6 s
         of a 6 s q_bool_mix at sf0.1) plus an EAGER localCheckpoint job
         for the prefilter."""
-        qterms = self._tok(query_text)
-        if not qterms:
-            return None
-        uniq = sorted(set(qterms))
-        meta = self._term_meta(uniq)
-        if any(meta[t][0] == 0 for t in uniq):
-            return None  # a phrase term matches nothing
-        idf_phrase = sum(lucene_idf(self.n_docs, meta[t][0]) for t in qterms)
-        offsets: dict[str, list[int]] = {}
-        for i, t in enumerate(qterms):
-            offsets.setdefault(t, []).append(i)
-        order = sorted(uniq, key=lambda t: (meta[t][0], t))
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, uniq))
-        ).where(F.col("term").isin(uniq))
-        if len(uniq) > 1:
-            rare_ranges = (
-                blocks.where(F.col("term") == order[0])
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        return self._run_range_scorer(
-            _make_phrase_range_scorer(
-                idf_phrase, self.avgdl, 1 << self.range_bits,
-                self.range_bits, order, offsets,
-            ),
-            blocks, meta, positions=True,
+        return self._phrase_ranked(
+            self._tok(query_text), None, self.n_docs, self.avgdl,
             label="phrase_scored",
         )
 
@@ -2367,7 +2372,7 @@ class Searcher:
                 if min_match > len(idfs):
                     return None
             scored = self._bm25_scored(
-                self._mask_deleted(flat_postings(blocks)), idfs,
+                self._mask(flat_postings(blocks)), idfs,
                 require_n=require_n, min_match=min_match,
             )
         elif kind == "match_phrase":
@@ -2391,7 +2396,7 @@ class Searcher:
                 [(v,) for v in sorted(set(vals))], "doc_id long"
             )
             scored = (
-                self._mask_deleted(ids_df)
+                self._mask(ids_df)
                 .join(
                     self._all_docs_attrs(), "doc_id", "left_semi"
                 )  # only INDEXED ids match (ES drops unknown ids)
@@ -2445,11 +2450,8 @@ class Searcher:
         block scan → cheap positionless decode → distinct."""
         if not terms:
             return None
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, terms))
-        ).where(F.col("term").isin(terms))
         return (
-            self._mask_deleted(flat_postings(blocks))
+            self._mask(flat_postings(self._term_blocks(terms)))
             .select("doc_id")
             .distinct()
         )
@@ -2602,13 +2604,9 @@ class Searcher:
                     ms, "doc_id", "left_semi"
                 )
             assert base is not None
-            if allowed is not None:
-                base = base.join(allowed.select("doc_id"), "doc_id", "left_semi")
-            if excluded is not None:
-                base = base.join(excluded.select("doc_id"), "doc_id", "left_anti")
-            base = self._mask_deleted(self._apply_must_not(
-                base, must_not, attrs
-            ))
+            base = self._mask(
+                self._apply_must_not(base, must_not, attrs), allowed, excluded
+            )
             return (
                 base.select("doc_id", F.lit(0.0).alias("score"))
                 .orderBy(F.asc("doc_id"))
@@ -2634,6 +2632,9 @@ class Searcher:
             if ms is None:
                 return _empty_topk(self.spark)
             combined = combined.join(ms, "doc_id", "left_semi")
+        # every clause frame is already live (tombstones masked per
+        # clause), so only the allow/deny sets apply — _mask would
+        # anti-join the tombstone table a second time
         if allowed is not None:
             combined = combined.join(
                 allowed.select("doc_id"), "doc_id", "left_semi"
@@ -2717,6 +2718,7 @@ class Searcher:
                     .alias("score"),
                 )
             )
+        # pos is a live clause frame: allow/deny only (see bool_query)
         if allowed is not None:
             pos = pos.join(allowed.select("doc_id"), "doc_id", "left_semi")
         if excluded is not None:
@@ -2775,8 +2777,8 @@ class Searcher:
         Without one it falls back to the distinct doc_ids of the dl
         stream — a metadata-cheap derivation that misses dl=0 docs."""
         if self.doc_stats is not None:
-            return self._mask_deleted(self.doc_stats.select("doc_id"))
-        return self._mask_deleted(
+            return self._mask(self.doc_stats.select("doc_id"))
+        return self._mask(
             flat_postings(self.postings).select("doc_id").distinct()
         )
 
@@ -2824,17 +2826,12 @@ class Searcher:
             # rows that cannot match.
             return rarest, None, None
 
-        def term_blocks(t: str) -> DataFrame:
-            return self.postings.where(
-                F.col("bucket").isin(_term_buckets(self.spark, [t]))
-            ).where(F.col("term") == t)
-
         if meta[rarest][0] <= self._PHRASE_PREFILTER_MAX_DF:
             # localCheckpoint: the decoded rare doc set feeds TWO broadcast
             # subtrees (doc ids + distinct ranges) — without materializing
             # it once, the Python block decode would run once per subtree
             rare_ids = (
-                flat_postings(term_blocks(rarest))
+                flat_postings(self._term_blocks([rarest]))
                 .select("doc_id")
                 .localCheckpoint()
             )
@@ -2849,7 +2846,7 @@ class Searcher:
         # every term hot: two-phase doc-level intersection (cap-free)
         unioned = None
         for t in uniq:
-            part = flat_postings(term_blocks(t)).select("doc_id")
+            part = flat_postings(self._term_blocks([t])).select("doc_id")
             unioned = part if unioned is None else unioned.unionByName(part)
         cand = (
             unioned.groupBy("doc_id")
@@ -2863,17 +2860,23 @@ class Searcher:
         ).distinct()
         return None, cand, ranges
 
-    def _matched_docs(self, query_text: str) -> DataFrame | None:
+    def _matched_docs(
+        self,
+        query_text: str,
+        allowed: DataFrame | None = None,
+        excluded: DataFrame | None = None,
+    ) -> DataFrame | None:
         """Distinct live doc_ids matching the (disjunctive) query — the
         shared match-set base of every aggregation (facets / histogram /
-        stats / cardinality): one term+bucket-pruned decode, tombstones
-        masked, one distinct. None when no query term exists."""
+        stats / cardinality) and of ``sort_by``: one term+bucket-pruned
+        decode, masked (``_mask``), one distinct. None when no query term
+        exists."""
         plan = self._plan(query_text)
         if plan is None:
             return None
         _, blocks, _ = plan
-        return self._mask_deleted(
-            flat_postings(blocks).select("doc_id")
+        return self._mask(
+            flat_postings(blocks).select("doc_id"), allowed, excluded
         ).distinct()
 
     def page(
@@ -2977,18 +2980,10 @@ class Searcher:
         round-5 ADVICE). ``allowed``/``excluded`` compose like every other
         entry point (bool filter / must_not over the match set). Returns
         ``(doc_id, <col>)``."""
-        matched = self._matched_docs(query_text)
+        matched = self._matched_docs(query_text, allowed, excluded)
         v = self._attr_col(attrs, col)
         if matched is None:
             return attrs.select("doc_id", v).limit(0)
-        if allowed is not None:
-            matched = matched.join(
-                allowed.select("doc_id"), "doc_id", "left_semi"
-            )
-        if excluded is not None:
-            matched = matched.join(
-                excluded.select("doc_id"), "doc_id", "left_anti"
-            )
         key = v.asc_nulls_last() if ascending else v.desc_nulls_last()
         return (
             matched.join(attrs, "doc_id", "left")
@@ -3049,11 +3044,7 @@ class Searcher:
         if plan is None:
             return _empty_topk(self.spark)
         idfs, blocks, _ = plan
-        flat = self._mask_deleted(flat_postings(blocks))
-        if allowed is not None:
-            flat = flat.join(allowed.select("doc_id"), "doc_id", "left_semi")
-        if excluded is not None:
-            flat = flat.join(excluded.select("doc_id"), "doc_id", "left_anti")
+        flat = self._mask(flat_postings(blocks), allowed, excluded)
         scored = self._bm25_scored(flat, idfs)
         v = self._attr_col(attrs, col).cast("double")
         joined = scored.join(
@@ -3133,11 +3124,7 @@ class Searcher:
         if plan is None:
             return _empty_topk(self.spark)
         idfs, blocks, _ = plan
-        flat = self._mask_deleted(flat_postings(blocks))
-        if allowed is not None:
-            flat = flat.join(allowed.select("doc_id"), "doc_id", "left_semi")
-        if excluded is not None:
-            flat = flat.join(excluded.select("doc_id"), "doc_id", "left_anti")
+        flat = self._mask(flat_postings(blocks), allowed, excluded)
         scored = self._bm25_scored(flat, idfs)
         v = self._attr_col(attrs, col).cast("double")
         joined = scored.join(
@@ -3249,11 +3236,7 @@ class Searcher:
         if plan is None:
             return _empty_topk(self.spark)
         idfs, blocks, _ = plan
-        flat = self._mask_deleted(flat_postings(blocks))
-        if allowed is not None:
-            flat = flat.join(allowed.select("doc_id"), "doc_id", "left_semi")
-        if excluded is not None:
-            flat = flat.join(excluded.select("doc_id"), "doc_id", "left_anti")
+        flat = self._mask(flat_postings(blocks), allowed, excluded)
         scored = self._bm25_scored(flat, idfs)
         x = self._attr_col(attrs, col).cast("double")
         joined = scored.join(
@@ -3391,11 +3374,7 @@ class Searcher:
                 self._attr_col(attrs, col),
             ).limit(0)
         idfs, blocks, _ = plan
-        flat = self._mask_deleted(flat_postings(blocks))
-        if allowed is not None:
-            flat = flat.join(allowed.select("doc_id"), "doc_id", "left_semi")
-        if excluded is not None:
-            flat = flat.join(excluded.select("doc_id"), "doc_id", "left_anti")
+        flat = self._mask(flat_postings(blocks), allowed, excluded)
         scored = self._bm25_scored(flat, idfs)
         v = self._attr_col(attrs, col)
         joined = scored.join(
@@ -3562,13 +3541,7 @@ class Searcher:
             cands.append(sorted(set(cs)))
         terms = sorted({t for cs in cands for t in cs})
         # unigram cf for every candidate + the exact corpus token total
-        buckets = _term_buckets(self.spark, terms)
-        cf_rows = (
-            self.dictionary.where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(terms))
-            .select("term", "cf")
-            .collect()
-        )
+        cf_rows = self._term_entries(terms).select("term", "cf").collect()
         cf = {r["term"]: float(r["cf"]) for r in cf_rows}
         total = float(
             self.dictionary.agg(F.sum("cf").alias("t")).first()["t"] or 0
@@ -3587,11 +3560,8 @@ class Searcher:
             for b in cands[i + 1]
         }
         if pairs:
-            blocks = self.postings.where(
-                F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-            )
-            pos = self._mask_deleted(
-                flat_postings_positional(blocks).select(
+            pos = self._mask(
+                flat_postings_positional(self._term_blocks(terms)).select(
                     "term", "doc_id", F.explode("positions").alias("pos")
                 )
             )
@@ -3934,7 +3904,7 @@ class Searcher:
         blocks = blocks.where(
             F.col("range_id") == F.lit(doc_id >> self.range_bits)
         )
-        flat = self._mask_deleted(flat_postings(blocks)).where(
+        flat = self._mask(flat_postings(blocks)).where(
             F.col("doc_id") == F.lit(doc_id)
         )
         stats = F.broadcast(
@@ -5010,7 +4980,7 @@ class Searcher:
             return self.spark.createDataFrame([], out_schema)
         idfs, blocks, _ = plan
         scored = self._bm25_scored(
-            self._mask_deleted(flat_postings(blocks)), idfs
+            self._mask(flat_postings(blocks)), idfs
         )
         hits = scored.join(attrs, "doc_id", "inner").where(v.isNotNull()).select(
             v.cast("string").alias("value"), "doc_id", "score"
@@ -5196,14 +5166,10 @@ class Searcher:
         if df_t == 0:
             return _empty_topk(self.spark)
         idf = lucene_idf(self.n_docs, df_t)
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, [tok]))
-        ).where(F.col("term") == tok)
-        flat = self._mask_deleted(flat_postings_positional(blocks))
-        if allowed is not None:
-            flat = flat.join(allowed.select("doc_id"), "doc_id", "left_semi")
-        if excluded is not None:
-            flat = flat.join(excluded.select("doc_id"), "doc_id", "left_anti")
+        flat = self._mask(
+            flat_postings_positional(self._term_blocks([tok])),
+            allowed, excluded,
+        )
         sf = F.size(F.filter("positions", lambda p: p < F.lit(int(end))))
         scored = (
             flat.select("doc_id", "dl", sf.alias("sf"))
@@ -5252,24 +5218,11 @@ class Searcher:
         ``topk_blockmax``; ``skip_acc`` counts blocks skipped undecoded.
         """
         qterms = self._tok(query_text)
-        if not qterms:
+        plan = self._plan_required(qterms)
+        if plan is None:
             return _empty_topk(self.spark)
-        uniq = sorted(set(qterms))
-        meta = self._term_meta(uniq)
-        if any(meta[t][0] == 0 for t in uniq):
-            return _empty_topk(self.spark)
+        _, meta, order, blocks = plan
         idf_q = sum(lucene_idf(self.n_docs, meta[t][0]) for t in qterms)
-        order = sorted(uniq, key=lambda t: (meta[t][0], t))
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, uniq))
-        ).where(F.col("term").isin(uniq))
-        if len(uniq) > 1:
-            rare_ranges = (
-                blocks.where(F.col("term") == order[0])
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
         return self._run_range_scorer(
             _make_near_range_scorer(
                 idf_q, self.avgdl, k, self.range_bits, order, qterms, gap
@@ -5301,25 +5254,11 @@ class Searcher:
         slots. Plan shape, block pruning, tombstone/filter cogrouping and
         ``skip_acc`` are exactly ``topk_near``'s.
         """
-        qterms = self._tok(query_text)
-        if not qterms:
+        plan = self._plan_required(self._tok(query_text))
+        if plan is None:
             return _empty_topk(self.spark)
-        uniq = sorted(set(qterms))
-        meta = self._term_meta(uniq)
-        if any(meta[t][0] == 0 for t in uniq):
-            return _empty_topk(self.spark)
+        uniq, meta, order, blocks = plan
         idf_q = sum(lucene_idf(self.n_docs, meta[t][0]) for t in uniq)
-        order = sorted(uniq, key=lambda t: (meta[t][0], t))
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, uniq))
-        ).where(F.col("term").isin(uniq))
-        if len(uniq) > 1:
-            rare_ranges = (
-                blocks.where(F.col("term") == order[0])
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
         return self._run_range_scorer(
             _make_sloppy_range_scorer(
                 idf_q, self.avgdl, k, self.range_bits, order,
@@ -5372,9 +5311,7 @@ class Searcher:
         rarest, prefilter, rare_ranges = self._rare_prefilter(uniq, meta)
         parts: list[DataFrame] = []
         for t in uniq:
-            blocks_t = self.postings.where(
-                F.col("bucket").isin(_term_buckets(self.spark, [t]))
-            ).where(F.col("term") == t)
+            blocks_t = self._term_blocks([t])
             if rare_ranges is not None and t != rarest:
                 blocks_t = blocks_t.join(rare_ranges, "range_id", "left_semi")
             flat_t = flat_postings_positional(blocks_t)
@@ -5394,11 +5331,7 @@ class Searcher:
         unioned = parts[0]
         for p in parts[1:]:
             unioned = unioned.unionByName(p)
-        unioned = self._mask_deleted(unioned)
-        if allowed is not None:
-            unioned = unioned.join(
-                allowed.select("doc_id"), "doc_id", "left_semi"
-            )
+        unioned = self._mask(unioned, allowed)
         n_pos = len(qterms)
         grouped = (
             unioned.groupBy("doc_id")

@@ -134,3 +134,72 @@ def test_upsert_superseded_join_not_forced_broadcast(spark):
     small = superseded_doc_ids(doc_stats, small_keys)
     small.count()
     assert "BroadcastHashJoin" in _plan(small)
+
+
+def _term_scan_modes():
+    """Every query mode that scans postings by term, as
+    ``(searcher, bigram, attrs) -> DataFrame``; ``conjunctive`` modes also
+    scan the rarest term's ranges in a semi-join subquery."""
+    from rabbit_index_ingest_spark.datagen import VOCAB
+
+    q2 = f"{VOCAB[0]} {VOCAB[3]}"
+    q4 = f"{VOCAB[0]} {VOCAB[1]} {VOCAB[5]} {VOCAB[9]}"
+    return {
+        "blockmax": (lambda s, b, a: s.topk_blockmax(q4, 10), False),
+        "and": (lambda s, b, a: s.topk_blockmax_and(q2, 10), True),
+        "msm": (lambda s, b, a: s.topk_msm(q4, 10, msm=2), False),
+        "phrase": (lambda s, b, a: s.topk_phrase(b, 10), True),
+        "sloppy_phrase": (lambda s, b, a: s.topk_phrase(b, 10, slop=1), True),
+        "phrase_prefix": (
+            lambda s, b, a: s.topk_phrase_prefix(
+                f"{b.split()[0]} {VOCAB[0][:2]}", 10
+            ),
+            True,
+        ),
+        "near": (lambda s, b, a: s.topk_near(q2, 10, gap=3), True),
+        "near_unordered": (
+            lambda s, b, a: s.topk_near_unordered(q2, 10, slop=2), True
+        ),
+        "prefix_constant_score": (
+            lambda s, b, a: s.topk_prefix(VOCAB[0][:2], 10), False
+        ),
+        "span_first": (lambda s, b, a: s.topk_span_first(VOCAB[0], 5, 10), False),
+        "terms_set": (
+            lambda s, b, a: s.topk_terms_set([VOCAB[0], VOCAB[3]], a, "req", 10),
+            False,
+        ),
+        "dataframe": (lambda s, b, a: s.topk_dataframe(q4, 10), False),
+        "phrase_dataframe": (lambda s, b, a: s.topk_phrase_dataframe(b, 10), False),
+        "near_dataframe": (
+            lambda s, b, a: s.topk_near_dataframe(q2, 10, gap=3), False
+        ),
+    }
+
+
+@pytest.mark.parametrize("mode", sorted(_term_scan_modes()))
+def test_every_postings_scan_is_bucket_pruned(spark, stored, mode):
+    """Every postings scan a query plans — the rare-range semi-join
+    subquery of the conjunctive modes included — reads only the query
+    terms' storage partitions: its FileScan carries a ``bucket``
+    PartitionFilter. Checked on the distributed route, where the whole
+    scan sits in the query's own plan."""
+    import re
+
+    from rabbit_index_ingest_spark.analysis import py_tokenize
+    from rabbit_index_ingest_spark.datagen import transcripts_pandas
+
+    s = Searcher(spark, stored.postings, stored.dictionary, stored.n_docs, stored.avgdl)
+    s._local_max_blocks = 0  # the distributed route (small queries run locally)
+    bigram = " ".join(py_tokenize(transcripts_pandas(30)["text"].iloc[3])[:2])
+    attrs = stored.doc_stats.select("doc_id", F.lit(1).alias("req"))
+    fn, conjunctive = _term_scan_modes()[mode]
+    plan = _plan(fn(s, bigram, attrs))
+    scans = [
+        ln for ln in plan.splitlines()
+        if "FileScan" in ln and re.search(r"Location: [^,]*/postings", ln)
+    ]
+    assert len(scans) >= (2 if conjunctive else 1), plan
+    for ln in scans:
+        # a long filter list is cut short ("...") before its "]"
+        pf = re.search(r"PartitionFilters: \[([^\]]*)", ln)
+        assert pf and "bucket" in pf.group(1), ln

@@ -577,18 +577,13 @@ def test_constant_score_early_termination(spark, pcorpus):
     distinct docs are found (round-4 verdict item 3): results identical
     to the decode-everything reference, with blocks provably skipped on
     a hot expansion with small k."""
-    from rabbit_index_ingest_spark.index.query import (
-        _term_buckets,
-        flat_postings,
-    )
+    from rabbit_index_ingest_spark.index.query import flat_postings
 
     pdf, built, s = pcorpus
     # hottest possible expansion: the entire vocabulary
     terms = s.expand_wildcard("*", max_expansions=1_000_000)
     # reference: every live doc containing any expansion, doc_id asc
-    blocks = s.postings.where(
-        F.col("bucket").isin(_term_buckets(spark, terms))
-    ).where(F.col("term").isin(terms))
+    blocks = s.postings.where(F.col("term").isin(terms))
     want_all = sorted(
         r["doc_id"]
         for r in flat_postings(blocks).select("doc_id").distinct().collect()

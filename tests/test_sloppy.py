@@ -174,10 +174,7 @@ def test_sloppy_scorer_slop0_parity(spark, tiny):
     matches the exact phrase scorer bit-for-bit."""
     from pyspark.sql import functions as F
 
-    from rabbit_index_ingest_spark.index.query import (
-        _make_sloppy_range_scorer,
-        _term_buckets,
-    )
+    from rabbit_index_ingest_spark.index.query import _make_sloppy_range_scorer
 
     _, built, searcher = tiny
     qterms = ["alpha", "beta"]
@@ -188,9 +185,7 @@ def test_sloppy_scorer_slop0_parity(spark, tiny):
         idf, searcher.avgdl, 10, searcher.range_bits, order,
         [(t, i) for i, t in enumerate(qterms)], 0, True
     )
-    blocks = searcher.postings.where(
-        F.col("bucket").isin(_term_buckets(spark, qterms))
-    ).where(F.col("term").isin(qterms))
+    blocks = searcher.postings.where(F.col("term").isin(qterms))
     got = (
         searcher._run_range_scorer(scorer, blocks, meta, positions=True)
         .orderBy(F.desc("score"), F.asc("doc_id"))
