@@ -44,7 +44,7 @@ Elasticsearch 7.9.1, which this module re-implements natively).
 from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import reduce
 
 import numpy as np
@@ -121,6 +121,12 @@ class BuiltIndex:
     # the field stored UNPREFIXED (persisted with field_stats so
     # upsert/merge rebuild with the same prefix layout)
     default_field: str = "text"
+    # every doc id lies in [id_floor, next_doc_id): a fresh build's ids
+    # fill [id_base, id_base + n_docs) exactly; a merge keeps its docs'
+    # ids below the merged segments' high-water mark (IndexStore.save
+    # checks the written docs against these bounds)
+    id_floor: int = 0
+    next_doc_id: int = 0
 
     def release(self) -> None:
         """Unpersist build-time caches — call once the index is saved (or
@@ -759,7 +765,7 @@ def build_index_multifield(
         F.col(order_col).alias("turn_idx"),
         *[F.col(src).alias(f) for f, src in fields.items()],
     )
-    return build_index_prenumbered(
+    built = build_index_prenumbered(
         spark,
         numbered,
         list(fields),
@@ -773,6 +779,7 @@ def build_index_multifield(
         analyzer=analyzer,
         _ranged_cache=ranged_cache,
     )
+    return replace(built, id_floor=id_base)
 
 
 def build_index_prenumbered(
@@ -901,4 +908,5 @@ def build_index_prenumbered(
         cached=(toks, postings) if persist_postings else (toks,),
         field_stats=field_stats,
         default_field=default_field,
+        next_doc_id=next_doc_id,
     )

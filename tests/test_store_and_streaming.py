@@ -252,11 +252,12 @@ def _bucket_files(root):
 
 
 def test_bucketed_writes_place_whole_buckets_per_task(spark, root):
-    """postings and dictionary writes place rows by bucket id: bucket b is
-    written by task b mod n, n = min(N_TERM_BUCKETS, shuffle partitions,
-    cores), so every seg=N/bucket=NN directory holds exactly one part
-    file, and a small segment is still written by n tasks — after save,
-    upsert and merge alike."""
+    """On the Spark write route, postings and dictionary writes place
+    rows by bucket id: bucket b is written by task b mod n, n =
+    min(N_TERM_BUCKETS, shuffle partitions, cores), so every
+    seg=N/bucket=NN directory holds exactly one part file, and a small
+    segment is still written by n tasks — after save, upsert and merge
+    alike."""
     from rabbit_index_ingest_spark.index.build import N_TERM_BUCKETS
 
     n = min(
@@ -266,6 +267,7 @@ def test_bucketed_writes_place_whole_buckets_per_task(spark, root):
     )
     assert n > 1
     store = IndexStore(spark, root)
+    store._local_max_docs = 0  # the Spark write route
 
     def check():
         files = _bucket_files(root)
@@ -287,6 +289,165 @@ def test_bucketed_writes_place_whole_buckets_per_task(spark, root):
     check()
     store.merge_segments([0, seg])
     check()
+
+
+# ---- write routes: driver (pyarrow) vs Spark, one layout ----------------
+
+_FORCE = {"spark": 0, "local": 10**12}
+
+
+def _table_bytes(root):
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(root)
+        if "_manifest" not in d
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def _routed_store(spark, root, multi, local_max):
+    """save, an upsert of re-ingested keys plus one new key, a second
+    upsert and a merge of the first two segments, with the store's write
+    threshold set to ``local_max``; returns the store."""
+    from rabbit_index_ingest_spark.index.build import build_index_multifield
+
+    t = transcripts_df(spark, n_conv=24)
+    if multi:
+        t = t.withColumn("title", F.substring_index("text", " ", 2))
+    fields = {"text": "text", "title": "title"} if multi else {"text": "text"}
+    cols = ["conv_id", "turn_idx", *fields]
+    store = IndexStore(spark, root)
+    store._local_max_docs = local_max
+    store.save(build_index_multifield(spark, t, fields))
+    upd = t.where(F.col("conv_id") < "conv-00000006").withColumn(
+        "text", F.concat(F.col("text"), F.lit(" karo karo xenolith"))
+    )
+    extra = spark.createDataFrame(
+        [("conv-99999999", 0, "xenolith gryphon karo", "gryphon karo")],
+        "conv_id string, turn_idx int, text string, title string",
+    )
+    s1 = store.upsert(upd.select(*cols).unionByName(extra.select(*cols)))
+    s2 = store.upsert(
+        t.where(F.col("conv_id") == "conv-00000002")
+        .withColumn("text", F.lit("tenro karo gryphon palimpsest"))
+        .select(*cols)
+    )
+    store.merge_segments([0, s1])
+    assert store.segments() == [s2, s2 + 1]
+    return store
+
+
+def _route_results(spark, store):
+    from rabbit_index_ingest_spark.analysis import py_tokenize
+
+    L, s = _searcher(spark, store)
+    assert L.deleted_df is not None
+    toks = py_tokenize(L.docs.orderBy("doc_id").first()["text"])
+    phrase = " ".join(toks[:2])
+
+    def rows(df):
+        return sorted((r["doc_id"], repr(r["score"])) for r in df.collect())
+
+    return {
+        "or": rows(s.topk_blockmax("karo tenro xenolith", 40)),
+        "and": rows(s.topk_blockmax_and("karo xenolith", 40)),
+        "phrase": rows(s.topk_phrase(phrase, 40)),
+        "phrase_prefix": rows(s.topk_phrase_prefix(f"{toks[0]} {toks[1][:2]}", 40)),
+        "prefix": rows(s.topk_prefix("ka", 40)),
+        "bool": rows(
+            s.bool_query(
+                must=[{"match": {"query": "karo"}}],
+                should=[{"match_phrase": {"query": phrase}}],
+                must_not=[{"match": {"query": "gryphon"}}],
+                k=40,
+            )
+        ),
+    }
+
+
+@pytest.mark.parametrize("multi", [False, True], ids=["text", "text+title"])
+def test_driver_and_spark_write_routes_store_the_same_index(spark, tmp_path, multi):
+    """Every table of a store written on the driver route (pyarrow), on
+    the Spark route, and on both (base and merged segments by Spark,
+    upsert segments by the driver) is the same rows; all three answer
+    every query mode with identical (doc_id, repr(score)); every
+    seg=N/bucket=B directory holds one parquet file; and the driver
+    route stores no more bytes than Spark's."""
+    stores = {
+        route: _routed_store(spark, str(tmp_path / route), multi, lim)
+        for route, lim in (*_FORCE.items(), ("mixed", 60))
+    }
+    upserted, merged = stores["mixed"].segments()
+    docs_dir = os.path.join(stores["mixed"].root, "docs")
+    # mixed: the merged segment (> 60 docs) is Spark's, the upsert is not
+    assert os.path.exists(os.path.join(docs_dir, f"seg={merged:05d}", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(docs_dir, f"seg={upserted:05d}", "_SUCCESS"))
+
+    ref = stores["spark"]
+    tables = ["docs", "postings", "dictionary", "metrics", "corpus_stats"]
+    if multi:
+        tables.append("field_stats")
+    want = _route_results(spark, ref)
+    assert all(want.values()), want
+    for route, store in stores.items():
+        for table in tables:
+            a, b = ref._read_all(table), store._read_all(table)
+            assert a.schema == b.schema, (route, table)
+            assert a.exceptAll(b).count() == 0 == b.exceptAll(a).count(), (route, table)
+        ta, tb = ref.tombstones_df(), store.tombstones_df()
+        assert ta.exceptAll(tb).count() == 0 == tb.exceptAll(ta).count(), route
+        assert store._field_info() == ref._field_info(), route
+        assert store._layout() == ref._layout(), route
+        for key, names in _bucket_files(store.root).items():
+            assert len(names) == 1, (route, key, names)
+        assert _route_results(spark, store) == want, route
+    assert _table_bytes(stores["local"].root) <= _table_bytes(ref.root)
+
+
+def test_segment_above_threshold_is_written_by_spark(spark, root):
+    """A segment of ``_local_max_docs`` docs is written by the driver (one
+    ``part-00000.parquet`` per directory, no ``_SUCCESS`` marker); one
+    doc more and Spark writes it."""
+    t = transcripts_df(spark, n_conv=5)
+    for extra, spark_route in ((0, False), (-1, True)):
+        built = build_index(spark, t)
+        store = IndexStore(spark, root)
+        store._local_max_docs = built.n_docs + extra
+        store.save(built)
+        seg_dir = os.path.join(root, "docs", "seg=00000")
+        assert os.path.exists(os.path.join(seg_dir, "_SUCCESS")) == spark_route
+        names = [f for f in os.listdir(seg_dir) if f.endswith(".parquet")]
+        assert (names == ["part-00000.parquet"]) != spark_route, names
+        shutil.rmtree(root)
+
+
+@pytest.mark.parametrize("route", sorted(_FORCE))
+def test_broken_doc_id_assignment_fails_the_save(spark, tmp_path, monkeypatch, route):
+    """The shuffle-free doc-id path numbers a presorted file scan from a
+    probe's per-partition offsets; if the offsets are wrong, the save
+    checks the written docs against the build's id bounds and raises
+    instead of committing a shifted id space (both write routes)."""
+    from rabbit_index_ingest_spark.index import build as build_mod
+
+    path = str(tmp_path / "sorted_corpus")
+    transcripts_df(spark, n_conv=12, partitions=3).write.parquet(path)
+    corpus = spark.read.parquet(path).select("conv_id", "turn_idx", "text")
+    real = build_mod._presorted_partition_offsets
+    assert real(corpus, ("conv_id", "turn_idx")) is not None
+
+    def shifted(df, key_cols):
+        offsets, n = real(df, key_cols)
+        return {pid: off + 1 for pid, off in offsets.items()}, n
+
+    monkeypatch.setattr(build_mod, "_presorted_partition_offsets", shifted)
+    store = IndexStore(spark, str(tmp_path / "idx"))
+    store._local_max_docs = _FORCE[route]
+    built = build_index(spark, corpus)
+    with pytest.raises(RuntimeError, match="doc-id assignment is broken"):
+        store.save(built)
+    built.release()
+    assert not store.stage_done("seg0/docs")
 
 
 def test_load_reads_each_table_once_and_lists_on_driver(spark, root):
@@ -317,7 +478,11 @@ def test_load_reads_each_table_once_and_lists_on_driver(spark, root):
     assert 0 < len(jobs) <= 7, jobs
     for j in jobs:
         for s in tracker.getJobInfo(j).stageIds:
-            assert tracker.getStageInfo(s).numTasks != N_TERM_BUCKETS, (j, s)
+            # past spark.ui.retainedStages the status store evicts skipped
+            # stages (no completion time) first: a stage it no longer
+            # holds never ran a task
+            info = tracker.getStageInfo(s)
+            assert info is None or info.numTasks != N_TERM_BUCKETS, (j, s)
 
 
 def test_stats_rows_run_no_python_task(spark):
