@@ -121,11 +121,12 @@ class BuiltIndex:
     # the field stored UNPREFIXED (persisted with field_stats so
     # upsert/merge rebuild with the same prefix layout)
     default_field: str = "text"
-    # every doc id lies in [id_floor, next_doc_id): a fresh build's ids
-    # fill [id_base, id_base + n_docs) exactly; a merge keeps its docs'
-    # ids below the merged segments' high-water mark (IndexStore.save
-    # checks the written docs against these bounds)
-    id_floor: int = 0
+    # the doc-id space: a fresh build numbers its docs densely, so its ids
+    # are exactly id_floor .. next_doc_id - 1 (id_floor = id_base); a
+    # prenumbered build (a merge keeps its docs' ids) has id_floor None
+    # and ids somewhere below next_doc_id (IndexStore.save checks the
+    # written docs against this)
+    id_floor: int | None = None
     next_doc_id: int = 0
 
     def release(self) -> None:

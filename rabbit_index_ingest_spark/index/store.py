@@ -61,14 +61,16 @@ _LEGACY_RANGE_BITS = 16
 # (``IndexStore._write_arrow``): each table is collected over Arrow and
 # written with pyarrow, one collect job per table instead of Spark's
 # per-task, per-file write protocol (64 bucket files each for postings
-# and dictionary, whatever the segment's size). save() wall on local[4],
-# Spark route vs driver route, medians of 3 alternating reps on a cached
-# build: 2.46 vs 0.73 s at 3.5k turns, 2.24 vs 0.69 s at 21k and 2.51 vs
-# 1.42 s at 210k. The crossover lies above 210k turns; the threshold
-# stays below the largest size measured, because the driver holds the
-# collected tables (about 88 MB of docs and 55 MB of postings at 210k
-# turns, against the 1 GiB default spark.driver.maxResultSize). Larger
-# segments (the 8.4M-turn scaling corpus) keep the Spark write.
+# and dictionary, whatever the segment's size). The driver route was the
+# faster one at every size measured — save() wall on local[4], Spark
+# route vs driver route, medians of 3 alternating reps on a cached build:
+# 2.46 vs 0.73 s at 3.5k turns, 2.24 vs 0.69 s at 21k, 2.51 vs 1.42 s at
+# 210k — so this bound is not a speed crossover but a driver-memory
+# margin: the driver holds one collected table at a time, and the largest
+# (docs, ~420 Arrow bytes per transcript turn) is about 88 MB at 210k
+# turns, under a tenth of the default 1 GiB spark.driver.maxResultSize.
+# Corpora with much longer documents shrink that margin in proportion.
+# Larger segments (the 8.4M-turn scaling corpus) keep the Spark write.
 _LOCAL_MAX_DOCS = 200_000
 
 # physical tables; doc_stats is a logical projection of docs (see save())
@@ -141,17 +143,48 @@ def superseded_doc_ids(existing_doc_stats: DataFrame, new_keys: DataFrame) -> Da
     ).select("doc_id")
 
 
-def _check_doc_ids(built: BuiltIndex, n: int, lo, hi) -> None:
-    """Fail loudly unless the written docs of ``built`` hold exactly
-    ``n_docs`` rows with ids in ``[id_floor, next_doc_id)`` (``n`` rows,
-    ids ``lo``..``hi``)."""
-    if n != built.n_docs or (
-        n and not (built.id_floor <= lo and hi < built.next_doc_id)
-    ):
+def _doc_id_stats(built: BuiltIndex) -> list:
+    """Aggregates over a docs frame for ``_check_doc_ids``: rows, non-null
+    ids, min and max id, and the sum and sum of squares of ``doc_id -
+    id_floor`` (exact decimals: a square sum overflows a long past ~2M
+    docs)."""
+    d = (F.col("doc_id") - F.lit(built.id_floor or 0)).cast("decimal(38,0)")
+    return [
+        F.count(F.lit(1)).alias("n"), F.count("doc_id").alias("ids"),
+        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"),
+        F.sum(d).alias("s1"), F.sum(d * d).alias("s2"),
+    ]
+
+
+def _check_doc_ids(built: BuiltIndex, r) -> None:
+    """Fail loudly unless the docs behind the ``_doc_id_stats`` row ``r``
+    hold exactly ``n_docs`` rows, none with a null id (a partition the
+    offset map lacks). A fresh build (``id_floor`` set) must also have
+    min ``id_floor``, max ``next_doc_id - 1`` and the sum and sum of
+    squares of that dense range: a shifted offset map moves a bound, and
+    runs that overlap (partition sizes the probe did not see) duplicate
+    ids while leaving others unused, which changes the sums unless the
+    duplicated and the unused ids have equal sums and equal square sums.
+    A merge keeps its docs' ids, so it is checked for ``[0,
+    next_doc_id)`` only."""
+    n, lo, hi = r["n"], r["lo"], r["hi"]
+    ok = n == built.n_docs and r["ids"] == n
+    if ok and n and built.id_floor is None:
+        ok = 0 <= lo and hi < built.next_doc_id
+    elif ok and n:
+        ok = (
+            lo == built.id_floor and hi == built.next_doc_id - 1
+            and r["s1"] == n * (n - 1) // 2
+            and r["s2"] == (n - 1) * n * (2 * n - 1) // 6
+        )
+    if not ok:
+        floor = built.id_floor or 0
         raise RuntimeError(
-            f"doc-id assignment is broken: the docs hold {n} rows with ids "
-            f"[{lo}, {hi}], expected {built.n_docs} rows with ids in "
-            f"[{built.id_floor}, {built.next_doc_id}); save aborted"
+            f"doc-id assignment is broken: the docs hold {n} rows "
+            f"({n - r['ids']} with a null id), ids [{lo}, {hi}] with sums "
+            f"{r['s1']} and {r['s2']} above {floor}; expected "
+            f"{built.n_docs} rows with ids in [{floor}, {built.next_doc_id})"
+            f"{'' if built.id_floor is None else ', each once'}; save aborted"
         )
 
 
@@ -461,37 +494,24 @@ class IndexStore:
         os.replace(tmp, path)
 
     def _write_docs(self, built: BuiltIndex, segment: int, local: bool) -> None:
-        """The docs write, checked against the build's id bounds: exactly
-        ``n_docs`` rows with ids in ``[id_floor, next_doc_id)``. A fresh
-        build's ids then fill ``[next_doc_id - n_docs, next_doc_id)``, so
-        a broken doc-id assignment (``build._presorted_partition_offsets``
+        """The docs write, checked by ``_check_doc_ids``, so a broken
+        doc-id assignment (``build._presorted_partition_offsets``
         numbering from a partitioning the probe did not see) fails the
-        save instead of corrupting the id space. The figures are read off
-        the write itself: the collected table on the driver route (checked
-        before anything lands), an Observation on the Spark route."""
+        save instead of corrupting the id space. The figures are an
+        Observation on the write's own job: the collect on the driver
+        route (checked before anything lands), the Spark write
+        otherwise."""
         from pyspark.sql import Observation
 
-        if local:
-            import pyarrow.compute as pc
-
-            t = built.docs.toArrow()
-            ids = pc.min_max(t["doc_id"])
-            _check_doc_ids(built, t.num_rows, ids["min"].as_py(), ids["max"].as_py())
-            self._write_arrow(t, self._path("docs", segment))
-            return
-        if self._use_iceberg():
-            self._write(built.docs, "docs", segment)
-            return
         obs = Observation()
-        self._write(
-            built.docs.observe(
-                obs, F.count(F.lit(1)).alias("n"),
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"),
-            ),
-            "docs", segment,
-        )
-        r = obs.get
-        _check_doc_ids(built, int(r["n"]), r["lo"], r["hi"])
+        docs = built.docs.observe(obs, *_doc_id_stats(built))
+        if local:
+            t = docs.toArrow()
+            _check_doc_ids(built, obs.get)
+            self._write_arrow(t, self._path("docs", segment))
+        else:
+            self._write(docs, "docs", segment)
+            _check_doc_ids(built, obs.get)
 
     def save(self, built: BuiltIndex, segment: int = 0, resume: bool = False) -> None:
         """Persist all index tables for one segment, with stage checkpoints.
@@ -798,21 +818,27 @@ class IndexStore:
         self.log_manifest(f"seg{seg}/delete", "done", new_tombstones=n)
         return seg, n
 
-    def _write_tombstones(self, doc_ids: DataFrame, seg: int, local: bool) -> int:
-        """Write ``doc_ids`` as segment ``seg``'s tombstone file, on the
-        driver (``local``) or by Spark, and return its row count — read
-        off the write itself (the collected table's ``num_rows``, or an
-        Observation on the Spark write), never a separate count job."""
+    def _write_tombstones(
+        self, doc_ids, seg: int, local: bool, append: bool = False
+    ) -> int:
+        """Write ``doc_ids`` (a DataFrame, or on the driver route an Arrow
+        table already collected) as segment ``seg``'s tombstone file, on
+        the driver (``local``) or by Spark — replacing the directory, or
+        with ``append`` adding one file beside the ones there — and return
+        its row count, read off the write itself (the collected table's
+        ``num_rows``, or an Observation on the Spark write), never a
+        separate count job."""
+        import pyarrow as pa
         from pyspark.sql import Observation
 
         path = self._tomb_path(seg)
         if local:
-            t = doc_ids.toArrow()
-            self._write_arrow(t, path)
+            t = doc_ids if isinstance(doc_ids, pa.Table) else doc_ids.toArrow()
+            self._write_arrow(t, path, append=append)
             return t.num_rows
         obs = Observation()
         doc_ids.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
+            "append" if append else "overwrite"
         ).parquet(path)
         return int(obs.get["n"])
 
@@ -1410,7 +1436,7 @@ class IndexStore:
         # merged segments (those ARE purged by the anti-join above) into
         # the new segment's tombstone file. The carry follows the new
         # segment's write route.
-        carry, carried = None, 0
+        carried = 0
         merged_tomb_paths = [
             p for s in segs
             for p in [self._tomb_path(s)]
@@ -1432,13 +1458,6 @@ class IndexStore:
                     carry = carry.localCheckpoint()
                     carried = carry.count()
 
-        def put_carry(seg: int, append: bool) -> None:
-            path = self._tomb_path(seg)
-            if local:
-                self._write_arrow(carry, path, append=append)
-            else:
-                carry.write.mode("append" if append else "overwrite").parquet(path)
-
         # Persist the carried tombstones BEFORE deleting the merged
         # segments' directories (round-3 ADVICE, medium): a crash — or a
         # concurrent reader — in a write-after-delete window would lose
@@ -1447,7 +1466,7 @@ class IndexStore:
         # nonexistent or already-masked id is a no-op).
         if carried:
             if built.n_docs:
-                put_carry(new_seg, append=False)
+                self._write_tombstones(carry, new_seg, local)
             else:
                 # no new segment exists — writing under new_seg would
                 # create a phantom tombstone dir whose id the next
@@ -1457,7 +1476,7 @@ class IndexStore:
                 # no survivor there is no doc left to mask — drop it.
                 survivors = [s for s in self.segments() if s not in set(segs)]
                 if survivors:
-                    put_carry(survivors[0], append=True)
+                    self._write_tombstones(carry, survivors[0], local, append=True)
         import shutil
 
         for s in segs:

@@ -96,10 +96,13 @@ def test_iceberg_write_live(spark, tmp_path):
 
 
 class _RecordingWriter:
-    """Stands in for DataFrameWriterV2 — records the exact call chain."""
+    """Stands in for DataFrameWriterV2 — records the exact call chain,
+    and runs the frame into Spark's no-op sink as the real write would
+    run it (the docs write reads its doc-id check off that run)."""
 
-    def __init__(self, rec: dict, table: str):
+    def __init__(self, rec: dict, table: str, df):
         self.rec = rec
+        self.df = df
         self.entry = {"using": None, "partitionedBy": None, "action": None}
         rec[table] = self.entry
 
@@ -113,6 +116,7 @@ class _RecordingWriter:
 
     def createOrReplace(self):
         self.entry["action"] = "createOrReplace"
+        self.df.write.format("noop").mode("overwrite").save()
 
 
 def test_iceberg_save_write_shape_per_table(spark, tmp_path, monkeypatch):
@@ -130,7 +134,7 @@ def test_iceberg_save_write_shape_per_table(spark, tmp_path, monkeypatch):
     # patch the RUNTIME class (Spark 4: pyspark.sql.classic.dataframe
     # overrides the pyspark.sql.DataFrame facade's methods)
     monkeypatch.setattr(
-        type(built.docs), "writeTo", lambda self, tbl: _RecordingWriter(rec, tbl)
+        type(built.docs), "writeTo", lambda self, tbl: _RecordingWriter(rec, tbl, self)
     )
     store.save(built, segment=7)
 

@@ -422,12 +422,37 @@ def test_segment_above_threshold_is_written_by_spark(spark, root):
         shutil.rmtree(root)
 
 
+def _bad_offsets(fault, offsets, n):
+    """A wrong per-partition offset map for ``_presorted_partition_offsets``
+    of the kind ``fault`` names; the true map is ``offsets`` (pid ->
+    first id) over ``n`` rows in three partitions."""
+    pids = sorted(offsets, key=offsets.get)
+    starts = sorted(offsets.values())
+    sizes = [b - a for a, b in zip(starts, [*starts[1:], n])]
+    assert len(pids) == 3 and sizes[0] != sizes[2], sizes
+    if fault == "shifted":  # every id one too high: max = next_doc_id
+        return {p: o + 1 for p, o in offsets.items()}
+    if fault == "swapped":  # sizes of the first and last partition
+        # exchanged, same total: runs overlap or leave a gap
+        return {pids[0]: 0, pids[1]: sizes[2], pids[2]: sizes[2] + sizes[1]}
+    if fault == "overlap":  # the middle run starts one id early: bounds
+        # and row count hold, one id doubles and one is unused
+        return {**offsets, pids[1]: offsets[pids[1]] - 1}
+    assert fault == "missing"  # a partition absent from the map: null ids
+    return {p: o for p, o in offsets.items() if p != pids[1]}
+
+
+@pytest.mark.parametrize("fault", ["shifted", "swapped", "overlap", "missing"])
 @pytest.mark.parametrize("route", sorted(_FORCE))
-def test_broken_doc_id_assignment_fails_the_save(spark, tmp_path, monkeypatch, route):
+def test_broken_doc_id_assignment_fails_the_save(
+    spark, tmp_path, monkeypatch, route, fault
+):
     """The shuffle-free doc-id path numbers a presorted file scan from a
-    probe's per-partition offsets; if the offsets are wrong, the save
-    checks the written docs against the build's id bounds and raises
-    instead of committing a shifted id space (both write routes)."""
+    probe's per-partition offsets; if the offsets are wrong (shifted,
+    taken from other partition sizes, overlapping, or missing a
+    partition), the save checks the written docs against the build's
+    dense id range and raises instead of committing the broken id space
+    (both write routes)."""
     from rabbit_index_ingest_spark.index import build as build_mod
 
     path = str(tmp_path / "sorted_corpus")
@@ -436,11 +461,11 @@ def test_broken_doc_id_assignment_fails_the_save(spark, tmp_path, monkeypatch, r
     real = build_mod._presorted_partition_offsets
     assert real(corpus, ("conv_id", "turn_idx")) is not None
 
-    def shifted(df, key_cols):
+    def broken(df, key_cols):
         offsets, n = real(df, key_cols)
-        return {pid: off + 1 for pid, off in offsets.items()}, n
+        return _bad_offsets(fault, offsets, n), n
 
-    monkeypatch.setattr(build_mod, "_presorted_partition_offsets", shifted)
+    monkeypatch.setattr(build_mod, "_presorted_partition_offsets", broken)
     store = IndexStore(spark, str(tmp_path / "idx"))
     store._local_max_docs = _FORCE[route]
     built = build_index(spark, corpus)
@@ -465,24 +490,45 @@ def test_load_reads_each_table_once_and_lists_on_driver(spark, root):
         )
     )
     assert store.segments() == [0, 1]
-    sc = spark.sparkContext
-    group = "test-load-job-count"
-    sc.setJobGroup(group, "load")
-    try:
-        store.load()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setJobDescription(None)
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
+    jobs = _jobs_of(spark, store.load)
     assert 0 < len(jobs) <= 7, jobs
-    for j in jobs:
-        for s in tracker.getJobInfo(j).stageIds:
-            # past spark.ui.retainedStages the status store evicts skipped
-            # stages (no completion time) first: a stage it no longer
-            # holds never ran a task
-            info = tracker.getStageInfo(s)
-            assert info is None or info.numTasks != N_TERM_BUCKETS, (j, s)
+    for j, stages in jobs.items():
+        for s, num_tasks in stages.items():
+            assert num_tasks != N_TERM_BUCKETS, (j, s)
+
+
+def _jobs_of(spark, action) -> dict[int, dict[int, int]]:
+    """Run ``action`` and return ``{job id: {stage id: numTasks}}`` for
+    every job it launched, skipped stages included. The figures come
+    from a status store that listens only while ``action`` runs: the
+    application's own store evicts stages (skipped ones first) once the
+    session passes ``spark.ui.retainedStages``, which a long test session
+    does."""
+    sc = spark.sparkContext
+    jsc, jvm = sc._jsc.sc(), sc._jvm
+    status = jvm.org.apache.spark.status.AppStatusStore.createLiveStore(
+        jsc.conf(), jvm.scala.Option.empty()
+    )
+    listener = status.listener().get()
+    jsc.addSparkListener(listener)
+    try:
+        action()
+        jsc.listenerBus().waitUntilEmpty()
+    finally:
+        jsc.removeSparkListener(listener)
+    try:
+        job_list = status.jobsList(None)
+        out = {}
+        for i in range(job_list.size()):
+            job = job_list.apply(i)
+            ids = job.stageIds()
+            out[job.jobId()] = {
+                ids.apply(k): status.lastStageAttempt(ids.apply(k)).numTasks()
+                for k in range(ids.size())
+            }
+        return out
+    finally:
+        status.close()
 
 
 def test_stats_rows_run_no_python_task(spark):
