@@ -43,17 +43,22 @@ Elasticsearch 7.9.1, which this module re-implements natively).
 
 from __future__ import annotations
 
+from array import array
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass, replace
 from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..analysis import tokens_expr
+from ..analysis import py_tokenize, tokens_expr
+from ..functions.hashing import term_bucket
 from . import codec
 
 # Docs per BMW scoring range; blocks never span a range boundary.
@@ -98,7 +103,9 @@ BLOCKS_SCHEMA = T.StructType(
 
 @dataclass
 class BuiltIndex:
-    """The four index tables (SURVEY.md §1.2: replaces ceda-fbi/ceda-dirs)."""
+    """The four index tables (SURVEY.md §1.2: replaces ceda-fbi/ceda-dirs):
+    DataFrames from a Spark build, Arrow tables from an in-process one
+    (``build_index_arrow``)."""
 
     docs: DataFrame  # doc_id, conv_id, turn_idx, one column per field, dl
     doc_stats: DataFrame  # doc_id, conv_id, turn_idx, dl (default field)
@@ -909,5 +916,176 @@ def build_index_prenumbered(
         cached=(toks, postings) if persist_postings else (toks,),
         field_stats=field_stats,
         default_field=default_field,
+        next_doc_id=next_doc_id,
+    )
+
+
+# ------------------------ in-process (driver) build ------------------------
+#
+# A micro-batch segment of a few dozen docs costs the Spark build about a
+# dozen jobs, nearly all of it scheduling rather than work (the Python UDF
+# paper's point in PAPERS: on small inputs the cost of invoking an
+# operator outweighs its body). ``build_index_arrow`` builds the same
+# tables in this process from an Arrow table: the analyzer's Python twin
+# (``py_tokenize``; parity pinned by tests/test_analysis.py), the same
+# packer (``codec.pack_batch``) fed the occurrences in the shuffle's
+# (term, doc_id, pos) order, and the bucket hash's Python twin
+# (``hashing.term_bucket``). IndexStore routes a segment here below its
+# driver threshold; every table equals the Spark build's (test-pinned).
+
+
+class _Vocab(dict):
+    """term -> int code, numbered in first-seen order."""
+
+    def __missing__(self, term: str) -> int:
+        code = self[term] = len(self)
+        return code
+
+
+def assign_doc_ids_arrow(batch: pa.Table, id_base: int = 0) -> pa.Table:
+    """Driver twin of ``assign_doc_ids``: ``batch`` sorted by (conv_id,
+    turn_idx) — nulls first and strings by UTF-8 bytes, Spark's ascending
+    order — with ``doc_id = id_base + rank`` prepended."""
+    order = pc.sort_indices(
+        batch,
+        sort_keys=[("conv_id", "ascending"), ("turn_idx", "ascending")],
+        null_placement="at_start",
+    )
+    ordered = batch.take(order)
+    ids = np.arange(id_base, id_base + ordered.num_rows, dtype=np.int64)
+    return ordered.add_column(0, "doc_id", pa.array(ids))
+
+
+def build_index_arrow(
+    docs: pa.Table,
+    fields: Sequence[str] = (DEFAULT_FIELD,),
+    default_field: str = DEFAULT_FIELD,
+    id_base: int | None = None,
+    next_doc_id: int | None = None,
+    block_size: int = codec.BLOCK_SIZE,
+    range_bits: int = RANGE_BITS,
+    positions: bool = True,
+    analyzer: str = "simple",
+) -> BuiltIndex:
+    """In-process build: a ``BuiltIndex`` whose tables are Arrow tables
+    equal to the Spark build's. With ``id_base`` it is the twin of
+    ``build_index_multifield`` — ``docs`` holds (conv_id, turn_idx, one
+    column per field) and is numbered densely from ``id_base`` by
+    ``assign_doc_ids_arrow``; without, the twin of
+    ``build_index_prenumbered`` — ``docs`` carries its own ``doc_id``
+    (a merge keeps its docs' ids), all below ``next_doc_id``. The caller
+    bounds the size: everything is held here."""
+    fields = list(fields)
+    id_floor = id_base
+    if id_base is not None:
+        docs = assign_doc_ids_arrow(docs, id_base)
+        next_doc_id = id_base + docs.num_rows
+    else:
+        docs = docs.sort_by("doc_id")
+    docs = docs.combine_chunks()
+    n_docs = docs.num_rows
+    ids = docs["doc_id"].to_numpy()
+
+    # every field's occurrences (term, doc_id, dl, pos), as pack_postings
+    # explodes them; a field's token count is its dl (null for a null
+    # source, as Spark's size(null) under ANSI). Terms are coded as ints
+    # while they are read, so no per-occurrence string is kept, and the
+    # per-token work (prefix, code lookup) stays in C-level map() calls.
+    vocab = _Vocab()
+    occ_codes, occ_ids, occ_dls, occ_pos, lens = [], [], [], [], {}
+    for f in fields:
+        prefix = "" if f == default_field else f + FIELD_SEP
+        codes, n_toks = array("q"), []
+        for text in docs[f].to_pylist():
+            toks = py_tokenize(text, analyzer)
+            n_toks.append(len(toks))
+            codes.extend(map(vocab.__getitem__, map(prefix.__add__, toks)))
+        occ_codes.append(np.frombuffer(codes, dtype=np.int64))
+        n = lens[f] = np.array(n_toks, dtype=np.int64)
+        occ_ids.append(np.repeat(ids, n))
+        occ_dls.append(np.repeat(n, n))
+        occ_pos.append(np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n))
+    # code-point order of the terms = Spark's UTF-8 byte order: the
+    # occurrences sort by (term rank, doc_id, pos), the shuffle's order.
+    # They were emitted in (doc_id, pos) order within each field, and a
+    # term belongs to one field, so a stable sort on the rank is enough.
+    by_term = sorted(vocab.items())
+    terms = np.array([t for t, _ in by_term], dtype=object)
+    rank = np.empty(len(vocab), dtype=np.int64)
+    rank[[c for _, c in by_term]] = np.arange(len(vocab))
+    occ_rank = rank[np.concatenate(occ_codes)]
+    order = np.argsort(occ_rank, kind="stable")
+    oid, pos = np.concatenate(occ_ids)[order], np.concatenate(occ_pos)[order]
+    blocks = codec.pack_batch(
+        occ_rank[order], oid >> range_bits, oid, np.concatenate(occ_dls)[order],
+        block_size, pos=pos if positions else None,
+    )
+
+    # the blocks come out term-sorted: a term's blocks are one run, so its
+    # bucket is hashed once and its dictionary row is one reduceat
+    branks = np.asarray(blocks["term"], dtype=np.int64)
+    nb = len(branks)
+    starts = np.flatnonzero(np.r_[True, branks[1:] != branks[:-1]]) if nb else np.empty(0, np.int64)
+    uterms = terms[branks[starts]]
+    blocks["term"] = terms[branks]
+    buckets = np.fromiter(
+        (term_bucket(t, N_TERM_BUCKETS) for t in uterms), np.int32, len(starts)
+    )
+    postings = pa.Table.from_pydict(
+        {
+            **{c: blocks[c] for c in _BLOCK_COLS},
+            "bucket": np.repeat(buckets, np.diff(np.r_[starts, nb])),
+        },
+        schema=to_arrow_schema(BLOCKS_SCHEMA).append(pa.field("bucket", pa.int32())),
+    )
+
+    def per_term(ufunc, col: str) -> np.ndarray:
+        v = np.asarray(blocks[col], dtype=np.int64)
+        return ufunc.reduceat(v, starts) if nb else v
+
+    dictionary = pa.table(
+        {
+            "term": pa.array(uterms, pa.string()),
+            "df": per_term(np.add, "n_docs"),
+            "cf": per_term(np.add, "tf_sum"),
+            "max_tf": per_term(np.maximum, "max_tf"),
+            "min_dl": per_term(np.minimum, "min_dl"),
+            "bucket": buckets,
+        }
+    )
+    dl = pa.array(
+        lens[default_field].astype(np.int32),
+        mask=docs[default_field].is_null().to_numpy(zero_copy_only=False),
+    )
+    docs = docs.select(["doc_id", "conv_id", "turn_idx", *fields]).append_column("dl", dl)
+
+    total_tokens = int(lens[default_field].sum())
+    avgdl = (total_tokens / n_docs) if n_docs else 0.0
+    corpus_stats = pa.Table.from_pylist(
+        [dict(zip(CORPUS_STATS_SCHEMA.names, (
+            n_docs, avgdl, total_tokens, next_doc_id, positions, analyzer, range_bits,
+        )))],
+        schema=to_arrow_schema(CORPUS_STATS_SCHEMA),
+    )
+    field_stats = None
+    if len(fields) > 1:
+        rows = []
+        for f in fields:
+            dc, tt = int((lens[f] > 0).sum()), int(lens[f].sum())
+            rows.append(dict(zip(FIELD_STATS_SCHEMA.names, (f, dc, (tt / dc) if dc else 0.0, tt))))
+        field_stats = pa.Table.from_pylist(rows, schema=to_arrow_schema(FIELD_STATS_SCHEMA))
+    return BuiltIndex(
+        docs=docs,
+        doc_stats=docs.select(["doc_id", "conv_id", "turn_idx", "dl"]),
+        corpus_stats=corpus_stats,
+        dictionary=dictionary,
+        postings=postings,
+        n_docs=n_docs,
+        avgdl=avgdl,
+        positions=positions,
+        analyzer=analyzer,
+        field_stats=field_stats,
+        default_field=default_field,
+        id_floor=id_floor,
         next_doc_id=next_doc_id,
     )

@@ -2320,6 +2320,10 @@ class Searcher:
         minimum_should_match denominator (the ES unmatchable-clause
         contract, same as ``topk_msm``); in must_not it excludes nothing.
 
+        The set may hold tombstoned docs: its callers (``bool_query``,
+        ``topk_boosting``) mask their combined frame once (``_mask``)
+        instead of every clause anti-joining the tombstone table.
+
         Scored clause kinds (ES query DSL shapes):
 
         * ``{"match": {"query": text[, "operator": "or"|"and"]
@@ -2327,11 +2331,11 @@ class Searcher:
         * ``{"match_phrase": {"query": text[, "boost": w]}}``
         * ``{"prefix": {"value": p[, "boost": w]}}`` — ES's
           constant_score rewrite: every matching doc scores 1.0·boost.
-        * ``{"match_all": {[, "boost": w]}}`` — every LIVE doc at
-          constant 1.0·boost (the ES match_all query).
+        * ``{"match_all": {[, "boost": w]}}`` — every doc at constant
+          1.0·boost (the ES match_all query).
         * ``{"ids": {"values": [doc_id, ...][, "boost": w]}}`` — the ES
           ids query: the given INTERNAL doc_ids at constant 1.0·boost
-          (live docs only); an empty list matches nothing.
+          (indexed ids only); an empty list matches nothing.
         * ``{"fuzzy": {"value": t[, "fuzziness": n][, "prefix_length": p]
           [, "max_expansions": m][, "boost": w]}}``,
           ``{"wildcard": {"value": pat[, "boost": w]}}``,
@@ -2372,7 +2376,7 @@ class Searcher:
                 if min_match > len(idfs):
                     return None
             scored = self._bm25_scored(
-                self._mask(flat_postings(blocks)), idfs,
+                flat_postings(blocks), idfs,
                 require_n=require_n, min_match=min_match,
             )
         elif kind == "match_phrase":
@@ -2385,7 +2389,7 @@ class Searcher:
                 return None
             scored = ms.select("doc_id", F.lit(1.0).alias("score"))
         elif kind == "match_all":
-            scored = self._all_docs_attrs().select(
+            scored = self._all_doc_ids().select(
                 "doc_id", F.lit(1.0).alias("score")
             )
         elif kind == "ids":
@@ -2396,9 +2400,8 @@ class Searcher:
                 [(v,) for v in sorted(set(vals))], "doc_id long"
             )
             scored = (
-                self._mask(ids_df)
-                .join(
-                    self._all_docs_attrs(), "doc_id", "left_semi"
+                ids_df.join(
+                    self._all_doc_ids(), "doc_id", "left_semi"
                 )  # only INDEXED ids match (ES drops unknown ids)
                 .select("doc_id", F.lit(1.0).alias("score"))
             )
@@ -2438,23 +2441,20 @@ class Searcher:
         return scored
 
     def _prefix_matchset(self, prefix: str) -> DataFrame | None:
-        """Distinct live doc_ids containing ANY dictionary term with the
+        """Distinct doc_ids containing ANY dictionary term with the
         prefix (Lucene constant_score multi-term rewrite's match set):
         term-pruned block scan → cheap positionless decode → distinct."""
         return self._terms_matchset(self.expand_prefix(prefix, 1 << 20))
 
     def _terms_matchset(self, terms: list[str]) -> DataFrame | None:
-        """Distinct live doc_ids containing ANY of ``terms`` — the
+        """Distinct doc_ids containing ANY of ``terms`` — the
         constant_score multi-term rewrite's match set shared by the
         prefix / fuzzy / wildcard / regexp clause kinds: term-pruned
-        block scan → cheap positionless decode → distinct."""
+        block scan → cheap positionless decode → distinct. Unmasked, as
+        every ``_clause_scored`` set."""
         if not terms:
             return None
-        return (
-            self._mask(flat_postings(self._term_blocks(terms)))
-            .select("doc_id")
-            .distinct()
-        )
+        return flat_postings(self._term_blocks(terms)).select("doc_id").distinct()
 
     def _clause_matchset(
         self, clause: dict, attrs: DataFrame | None
@@ -2471,7 +2471,8 @@ class Searcher:
         (``doc_id`` + attribute columns, the same convention as
         ``sort_by`` and the aggregations — derive it from the docs table
         so Catalyst pushes the predicate to the parquet scan); scored
-        kinds reuse ``_clause_scored`` and drop the score column."""
+        kinds reuse ``_clause_scored`` and drop the score column. Like
+        theirs, the set may hold tombstoned docs."""
         (kind, body), = clause.items()
         if kind in ("term", "range", "exists", "terms"):
             if attrs is None:
@@ -2551,10 +2552,13 @@ class Searcher:
         clause's postings); the combine is ONE union + groupBy(doc_id)
         shuffle carrying (score, is_must) — the match-all-musts and msm
         gates are HAVING predicates on that same aggregation, never a
-        join chain. Filters left-semi-join on doc_id (AQE broadcasts
-        selective ones) and must_not anti-joins; nothing collects to the
-        driver. Replaces the reference's delegation of bool queries to
-        Elasticsearch (rabbit_indexer delegates all search to ES 7.9.1).
+        join chain. The clause frames are not masked one by one: the
+        combined frame anti-joins the tombstone table once (``_mask``,
+        with the allow/deny sets). Filters left-semi-join on doc_id (AQE
+        broadcasts selective ones) and must_not anti-joins; nothing
+        collects to the driver. Replaces the reference's delegation of
+        bool queries to Elasticsearch (rabbit_indexer delegates all
+        search to ES 7.9.1).
 
         ``allowed``/``excluded`` are plain doc_id allow/deny frames (the
         convention every other query mode uses) composing as one extra
@@ -2632,17 +2636,7 @@ class Searcher:
             if ms is None:
                 return _empty_topk(self.spark)
             combined = combined.join(ms, "doc_id", "left_semi")
-        # every clause frame is already live (tombstones masked per
-        # clause), so only the allow/deny sets apply — _mask would
-        # anti-join the tombstone table a second time
-        if allowed is not None:
-            combined = combined.join(
-                allowed.select("doc_id"), "doc_id", "left_semi"
-            )
-        if excluded is not None:
-            combined = combined.join(
-                excluded.select("doc_id"), "doc_id", "left_anti"
-            )
+        combined = self._mask(combined, allowed, excluded)
         combined = self._apply_must_not(combined, must_not, attrs)
         return combined.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -2718,11 +2712,8 @@ class Searcher:
                     .alias("score"),
                 )
             )
-        # pos is a live clause frame: allow/deny only (see bool_query)
-        if allowed is not None:
-            pos = pos.join(allowed.select("doc_id"), "doc_id", "left_semi")
-        if excluded is not None:
-            pos = pos.join(excluded.select("doc_id"), "doc_id", "left_anti")
+        # the clause frames are unmasked: one mask (see bool_query)
+        pos = self._mask(pos, allowed, excluded)
         return pos.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_query_string(
@@ -2752,7 +2743,7 @@ class Searcher:
             return self.bool_query(
                 must_not=spec["must_not"],
                 filter=(filter or [{"exists": {"col": "doc_id"}}]),
-                attrs=attrs if attrs is not None else self._all_docs_attrs(),
+                attrs=attrs if attrs is not None else self._all_doc_ids(),
                 k=k,
                 allowed=allowed,
                 excluded=excluded,
@@ -2770,17 +2761,20 @@ class Searcher:
         )
 
     def _all_docs_attrs(self) -> DataFrame:
-        """Minimal attrs frame covering every live doc (match_all's /
+        """Minimal attrs frame covering every live doc: ``_all_doc_ids``
+        with the tombstones masked."""
+        return self._mask(self._all_doc_ids())
+
+    def _all_doc_ids(self) -> DataFrame:
+        """Every indexed doc_id, tombstoned ones included (match_all's /
         ids' candidate set). With a ``doc_stats`` roster (pass it at
         construction — one doc_id column prune of the docs table) this is
         ES-exact INCLUDING zero-token docs, which appear in no posting.
         Without one it falls back to the distinct doc_ids of the dl
         stream — a metadata-cheap derivation that misses dl=0 docs."""
         if self.doc_stats is not None:
-            return self._mask(self.doc_stats.select("doc_id"))
-        return self._mask(
-            flat_postings(self.postings).select("doc_id").distinct()
-        )
+            return self.doc_stats.select("doc_id")
+        return flat_postings(self.postings).select("doc_id").distinct()
 
     def _rare_prefilter(
         self, uniq: list[str], meta: dict[str, tuple[int, int, int]]

@@ -96,26 +96,32 @@ def start_incremental_index(
     """foreachBatch incremental indexing: each micro-batch is upserted as a
     new index segment (IndexStore.upsert — doc_as_upsert semantics).
     checkpointLocation gives the at-least-once replay cursor; deterministic
-    doc keys make replays idempotent (the A15 ack analogue)."""
-    from ..index.store import IndexStore
+    doc keys make replays idempotent (the A15 ack analogue). An empty
+    micro-batch adds no segment: ``upsert`` returns -1 for it, and the
+    first batch's build is saved only when it holds a doc — so no batch
+    pays a separate emptiness job (a custom ``upsert_fn`` still gets
+    non-empty batches only)."""
+    from ..index.store import IndexStore, _job_description
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         if upsert_fn is not None:
-            upsert_fn(spark, store_root, batch_df)
-        else:
-            store = IndexStore(spark, store_root)
-            if store.segments():
-                store.upsert(batch_df.select("conv_id", "turn_idx", "text"))
-            else:
-                from ..index.build import build_index
+            if not batch_df.isEmpty():
+                upsert_fn(spark, store_root, batch_df)
+            return
+        store = IndexStore(spark, store_root)
+        turns = batch_df.select("conv_id", "turn_idx", "text")
+        if store.segments():
+            store.upsert(turns)
+            return
+        from ..index.build import build_index
 
-                built = build_index(
-                    spark, batch_df.select("conv_id", "turn_idx", "text")
-                )
-                store.save(built, segment=0)
+        with _job_description(spark, "build seg=0"):
+            built = build_index(spark, turns)
+        if built.n_docs == 0:
+            built.release()
+            return
+        store.save(built, segment=0)
 
     return (
         stream.writeStream.foreachBatch(handle)

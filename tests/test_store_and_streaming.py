@@ -422,6 +422,228 @@ def test_segment_above_threshold_is_written_by_spark(spark, root):
         shutil.rmtree(root)
 
 
+# ---- build routes: in-process (driver) vs Spark ---------------------------
+
+_SPECIAL_TEXTS = [
+    "ΟΔΟΣ οδός ΣΟΦΟΣ straße STRASSE ẞ karo",
+    "İstanbul ISTANBUL ıi karo tenro",
+    "漢字テスト かな 한국어 karo 0123 4.5 can't",
+]
+
+
+def _build_route_store(spark, root, local_max, multi, positions, analyzer):
+    """save a 12-conversation base, upsert a batch holding re-ingested
+    keys, a duplicated key, an empty text, a null text and non-ASCII
+    texts, upsert a second batch re-ingesting keys of both, then merge
+    the first two segments (the second batch's tombstones stay) — every
+    build and write with the store's driver threshold at ``local_max``.
+    Returns the store and the build route each step took."""
+    from rabbit_index_ingest_spark.index import store as store_mod
+    from rabbit_index_ingest_spark.index.build import build_index_multifield
+
+    t = transcripts_df(spark, n_conv=12).withColumn(
+        "title", F.substring_index("text", " ", 2)
+    )
+    fields = {"text": "text", "title": "title"} if multi else {"text": "text"}
+    cols = ["conv_id", "turn_idx", *fields]
+    store = IndexStore(spark, root)
+    store._local_max_docs = local_max
+    store.save(build_index_multifield(
+        spark, t.select(*cols), fields, positions=positions, analyzer=analyzer
+    ))
+    rows = [("conv-00000001", 0, "karo karo reingested first", "re one")]
+    rows += [("conv-00000001", 0, "karo karo reingested second", "re two")]
+    rows += [("conv-00000003", 1, "", "empty text"), ("conv-00000004", 2, None, None)]
+    rows += [("conv-x", i, text, text.split()[0]) for i, text in enumerate(_SPECIAL_TEXTS)]
+    rows += [("conv-y", 0, "karo tenro straße οδος 漢字テスト", None)]
+    schema = "conv_id string, turn_idx int, text string, title string"
+    extra = spark.createDataFrame(rows, schema).select(*cols)
+    again = spark.createDataFrame([
+        ("conv-x", 0, "ΟΔΟΣ karo tenro again", "again"),
+        ("conv-00000005", 0, "karo karo straße later", "later"),
+        ("conv-z", 0, "tenro 漢字テスト karo", "z"),
+    ], schema).select(*cols)
+    routes = []
+    real = store_mod.build_index_arrow
+
+    def spy(*a, **kw):
+        routes.append("driver")
+        return real(*a, **kw)
+
+    store_mod.build_index_arrow = spy
+    try:
+        seg = store.upsert(
+            t.where(F.col("conv_id") < "conv-00000003").select(*cols).unionByName(extra)
+        )
+        routes.append(seg)
+        routes.append(store.upsert(again))
+        routes.append(store.merge_segments([0, seg]))
+    finally:
+        store_mod.build_index_arrow = real
+    return store, routes
+
+
+@pytest.mark.parametrize(
+    "multi,positions,analyzer",
+    [(False, True, "simple"), (False, False, "standard"),
+     (True, True, "standard"), (True, False, "simple")],
+    ids=["text-pos-simple", "text-nopos-standard", "title-pos-standard",
+         "title-nopos-simple"],
+)
+def test_in_process_and_spark_builds_store_the_same_index(
+    spark, tmp_path, multi, positions, analyzer
+):
+    """An upsert and a merge built in process (driver route) store the
+    same tables as the Spark build (``_local_max_docs = 0``): equal
+    schemas and no ``exceptAll`` row either way for every table, the
+    tombstones and the metrics included; and OR, AND and phrase queries
+    return identical (doc_id, repr(score)) under the tombstones."""
+    stores = {}
+    for route, lim in _FORCE.items():
+        stores[route], steps = _build_route_store(
+            spark, str(tmp_path / route), lim, multi, positions, analyzer
+        )
+        driver = ["driver"] * (route == "local")
+        assert steps == [*driver, 1, *driver, 2, *driver, 3], (route, steps)
+    ref, got = stores["spark"], stores["local"]
+    tables = ["docs", "postings", "dictionary", "metrics", "corpus_stats"]
+    tables += ["field_stats"] * multi
+    for table in tables:
+        a, b = ref._read_all(table), got._read_all(table)
+        assert a.schema == b.schema, table
+        assert a.exceptAll(b).count() == 0 == b.exceptAll(a).count(), table
+    ta, tb = ref.tombstones_df(), got.tombstones_df()
+    assert ta.count() > 0
+    assert ta.exceptAll(tb).count() == 0 == tb.exceptAll(ta).count()
+
+    def results(store):
+        L = store.load()
+        s = Searcher(
+            spark, L.postings, L.dictionary, L.n_docs, L.avgdl,
+            deleted_df=L.deleted_df, analyzer=L.analyzer,
+        )
+
+        def rows(df):
+            return sorted((r["doc_id"], repr(r["score"])) for r in df.collect())
+
+        out = {
+            "or": rows(s.topk_blockmax("karo straße οδος i 漢字テスト", 40)),
+            "and": rows(s.topk_blockmax_and("karo tenro", 40)),
+        }
+        if positions:
+            out["phrase"] = rows(s.topk_phrase("karo karo", 40))
+        return out
+
+    want = results(ref)
+    assert all(want.values()), want
+    assert results(got) == want
+
+
+def test_build_route_threshold_boundary(spark, tmp_path, monkeypatch):
+    """An upsert batch of n deduped docs is built in process when the
+    driver threshold is n and by Spark at n - 1; with the in-process
+    build capped at n - 1 (``_LOCAL_BUILD_MAX_DOCS``) Spark builds it and
+    the driver still writes it. A merge is routed on its segments'
+    corpus_stats n_docs the same way."""
+    from rabbit_index_ingest_spark.index import store as store_mod
+
+    calls = []
+    real = store_mod.build_index_arrow
+    monkeypatch.setattr(
+        store_mod, "build_index_arrow",
+        lambda *a, **kw: calls.append(1) or real(*a, **kw),
+    )
+    base = transcripts_df(spark, n_conv=4)
+    batch = base.where(F.col("conv_id") == "conv-00000001").withColumn(
+        "text", F.concat("text", F.lit(" xenolith"))
+    )
+    n = batch.count()
+    big = 10**12
+
+    def routes(store, lim, cap, run):
+        store._local_max_docs = lim
+        monkeypatch.setattr(store_mod, "_LOCAL_BUILD_MAX_DOCS", cap)
+        calls.clear()
+        new_seg = run()
+        docs_dir = os.path.join(store.root, "docs", f"seg={new_seg:05d}")
+        spark_write = os.path.exists(os.path.join(docs_dir, "_SUCCESS"))
+        return bool(calls), not spark_write
+
+    for lim, cap, want in ((n, big, (True, True)), (n - 1, big, (False, False)),
+                           (big, n - 1, (False, True))):
+        store = IndexStore(spark, str(tmp_path / f"up{lim}_{cap}"))
+        monkeypatch.setattr(store_mod, "_LOCAL_BUILD_MAX_DOCS", big)
+        store.save(build_index(spark, base))
+        # duplicates dedup to n
+        got = routes(store, lim, cap, lambda: store.upsert(batch.unionByName(batch)))
+        assert got == want, (lim, cap, got)
+    # the build route counts the tombstoned docs (corpus_stats n_docs);
+    # the write route follows the n fewer docs the merge keeps
+    n_merge = sum(store.segment_sizes().values())
+    for lim, cap, want in ((n_merge, big, (True, True)),
+                           (n_merge - 1, big, (False, True)),
+                           (big, n_merge - 1, (False, True))):
+        other = IndexStore(spark, store.root + f"_m{lim}_{cap}")
+        shutil.copytree(store.root, other.root)
+        got = routes(other, lim, cap, lambda: other.merge_segments([0, 1]))
+        assert got == want, (lim, cap, got)
+
+
+@pytest.mark.parametrize("fault", ["shifted", "duplicated"])
+def test_broken_in_process_numbering_fails_the_save(spark, tmp_path, monkeypatch, fault):
+    """If the in-process build's doc numbering is wrong (every id one too
+    high, or one id used twice and another not at all), the upsert's save
+    checks the Arrow docs against the build's dense id range and raises
+    before the docs stage is marked done."""
+    import pyarrow as pa
+
+    from rabbit_index_ingest_spark.index import build as build_mod
+
+    real = build_mod.assign_doc_ids_arrow
+
+    def broken(batch, id_base=0):
+        t = real(batch, id_base)
+        ids = t["doc_id"].to_numpy().copy()
+        if fault == "shifted":
+            ids += 1
+        else:
+            ids[1] = ids[2]
+        return t.set_column(0, "doc_id", pa.array(ids, pa.int64()))
+
+    store = IndexStore(spark, str(tmp_path / "idx"))
+    store.save(build_index(spark, transcripts_df(spark, n_conv=4)))
+    monkeypatch.setattr(build_mod, "assign_doc_ids_arrow", broken)
+    batch = transcripts_df(spark, n_conv=6).where(F.col("conv_id") >= "conv-00000004")
+    with pytest.raises(RuntimeError, match="doc-id assignment is broken"):
+        store.upsert(batch)
+    assert not store.stage_done("seg1/docs")
+
+
+def test_driver_route_upsert_jobs(spark, root):
+    """A driver-route upsert of an 80-turn parquet batch (60 new turns,
+    20 re-ingested keys) runs at most 10 Spark jobs: the batch's dedup
+    and collect, the store's stats and the superseded ids; the build and
+    the writes run none."""
+    t = transcripts_df(spark, n_conv=60)
+    store = IndexStore(spark, root)
+    store.save(build_index(spark, t))
+    new = (
+        t.where(F.col("conv_id") < "conv-00000012")
+        .withColumn("conv_id", F.concat("conv_id", F.lit("-new")))
+        .limit(60)
+    )
+    re = t.where(F.col("turn_idx") == 0).limit(20).withColumn(
+        "text", F.concat("text", F.lit(" xenolith"))
+    )
+    path = os.path.join(root + "_batch")
+    new.unionByName(re).coalesce(1).write.parquet(path)
+    batch = spark.read.parquet(path)
+    assert batch.count() == 80
+    jobs = _jobs_of(spark, lambda: store.upsert(batch))
+    assert 0 < len(jobs) <= 10, jobs
+    assert len(store.tombstones()) == 20
+
+
 def _bad_offsets(fault, offsets, n):
     """A wrong per-partition offset map for ``_presorted_partition_offsets``
     of the kind ``fault`` names; the true map is ``offsets`` (pid ->
@@ -585,6 +807,41 @@ def test_streaming_incremental_index(spark, tmp_path):
     )
     q2.awaitTermination(60)
     assert IndexStore(spark, root).segments() == segs_before
+
+
+def test_streaming_empty_micro_batches_add_no_segment(spark, tmp_path):
+    """An empty file as the stream's first micro-batch leaves the store
+    without a segment, and an empty file after data leaves the segment
+    list unchanged (no emptiness job: the segment-0 build and the upsert
+    both see the empty batch and write nothing)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from rabbit_index_ingest_spark.datagen import TRANSCRIPT_SCHEMA
+    from rabbit_index_ingest_spark.streaming.ingest import (
+        read_transcript_stream,
+        start_incremental_index,
+    )
+
+    src, ckpt, root = (str(tmp_path / d) for d in ("src", "ckpt", "idx"))
+    os.makedirs(src)
+    schema = to_arrow_schema(TRANSCRIPT_SCHEMA)
+
+    def drop_and_trigger(name, table):
+        pq.write_table(table, os.path.join(src, name))
+        q = start_incremental_index(read_transcript_stream(spark, src), root, ckpt)
+        q.awaitTermination(120)
+        return IndexStore(spark, root).segments()
+
+    empty = pa.Table.from_pylist([], schema=schema)
+    assert drop_and_trigger("b0.parquet", empty) == []
+    data = pa.Table.from_pandas(
+        transcripts_pandas(3)[schema.names], schema=schema, preserve_index=False
+    )
+    assert drop_and_trigger("b1.parquet", data) == [0]
+    assert drop_and_trigger("b2.parquet", empty) == [0]
+    assert IndexStore(spark, root).load().n_docs == data.num_rows
 
 
 def test_streaming_dimension_refresh_picks_up_changes(spark, tmp_path):
@@ -782,7 +1039,8 @@ def test_upsert_duplicate_keys_in_batch_last_write_wins(spark, root):
 
 
 def test_upsert_tombstones_never_hit_driver_at_1e5(spark, root):
-    """10^5-tombstone upsert: the superseded set stays a DataFrame
+    """10^5-tombstone upsert on the Spark route (a batch below the driver
+    threshold collects its keys): the superseded set stays a DataFrame
     (parquet tombstone table), load() does not collect it, and both query
     paths mask every tombstone."""
     n = 100_000
@@ -794,6 +1052,7 @@ def test_upsert_tombstones_never_hit_driver_at_1e5(spark, root):
         F.concat(F.lit("alpha beta gamma doc "), F.col("id")).alias("text"),
     )
     store = IndexStore(spark, root)
+    store._local_max_docs = 0
     store.save(build_index(spark, base), segment=0)
     # re-ingest EVERY key → 10^5 tombstones
     store.upsert(base.withColumn("text", F.concat(F.col("text"), F.lit(" v2"))))
