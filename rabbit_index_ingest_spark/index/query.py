@@ -29,10 +29,13 @@ the transport. A mode only supplies its kernel, built by a
 ``_make_*_range_scorer`` factory: ``kernel(base, pdf, C) -> (rows,
 skipped)`` scores one doc range (contract on the chassis). The same
 kernels run over two transports, picked per query from the terms'
-estimated block count: below ``_LOCAL_MAX_BLOCKS`` and without a side
-frame the pruned blocks are collected over Arrow and scored on the
-driver; otherwise they are grouped (or cogrouped with the side frame) by
-doc range into an ``applyInPandas`` stage.
+estimated block count: below ``_LOCAL_MAX_BLOCKS``, without an allow-
+or deny-list and with at most ``_LOCAL_MAX_TOMBSTONES`` tombstones, the
+pruned blocks (and the tombstone table, once per Searcher) are collected
+over Arrow and scored on the driver; otherwise they are grouped (or
+cogrouped with the side frame) by doc range into an ``applyInPandas``
+stage. Both transports feed each range's dead ids to the same chassis
+body, so there is one masking path.
 
 Every query reads postings and dictionary rows through ONE owner of the
 term-pruned scan, ``_term_rows`` (``Searcher._term_blocks`` for posting
@@ -107,6 +110,21 @@ _SCORE_COLS = [
 # the threshold sits below all three, leaving room for hosts with more
 # cores, where the distributed route's per-block cost is lower.
 _LOCAL_MAX_BLOCKS = 1536
+
+# A query may take the local route over a tombstone table of at most this
+# many rows: the table is collected once per Searcher (``limit(cap + 1)``
+# over Arrow, one Spark job) and each range's dead ids feed the live
+# bitmap on the driver. The collect costs 0.22 s for 10^5 ids and 0.69 s
+# for 10^6, but the cogrouped stage it replaces shuffles the same ids on
+# every query. A 2-term OR on a 3.5k-turn index, local[4], a fresh
+# Searcher per query (so each pays the collect), local vs cogrouped
+# route, medians of 4 alternating reps: 0.60 vs 1.13 s with 10^3
+# tombstones, 0.98 vs 1.01 s with 10^5, 1.43 vs 1.99 s with 10^6 and 1.74
+# vs 2.59 s with 2*10^6. So this cap is a driver-memory bound (8 MB of ids
+# at 10^6), not a speed crossover; a table above it costs one wasted
+# collect of cap + 1 rows per Searcher (0.96 s) before its queries go
+# distributed.
+_LOCAL_MAX_TOMBSTONES = 1_000_000
 
 
 # the dictionary columns the scorers plan from: (df, max_tf, min_dl)
@@ -401,8 +419,9 @@ class Searcher:
         doc_stats: DataFrame | None = None,
     ):
         """``deleted_df``: the tombstoned doc_ids as a DataFrame
-        (``LoadedIndex.deleted_df``), cogrouped per doc range by the
-        scorers — never collected to the driver.
+        (``LoadedIndex.deleted_df``). The local scorer route collects it
+        up to the cap (``_LOCAL_MAX_TOMBSTONES`` rows) once per Searcher;
+        above the cap it is cogrouped per doc range and never collected.
 
         ``probe_min_blocks`` gates the global-θ₀ seed probe (see
         ``_seed_theta0``): queries whose estimated decode volume is below
@@ -445,9 +464,13 @@ class Searcher:
         # dictionary scan (the dictionary is immutable for a Searcher's
         # lifetime; df=0 is cached too so absent terms don't re-scan)
         self._df_cache: dict[str, tuple[int, int, int]] = {}
-        # scorer transport threshold (see _run_range_scorer); tests set it
-        # per instance to force one route
+        # scorer transport thresholds (see _run_range_scorer); tests set
+        # them per instance to force one route
         self._local_max_blocks = _LOCAL_MAX_BLOCKS
+        self._local_max_tombstones = _LOCAL_MAX_TOMBSTONES
+        # the tombstone ids the local route collected (``_local_dead``):
+        # None until the first local query, False over the cap
+        self._dead_ids: np.ndarray | bool | None = None
 
     def _term_blocks(self, terms: list[str]) -> DataFrame:
         """The term-pruned scan: the posting blocks of ``terms``, read from
@@ -536,6 +559,22 @@ class Searcher:
             return left, None
         return left, side.repartition(n, F.col("range_id")).groupBy("range_id")
 
+    def _local_dead(self) -> np.ndarray | None:
+        """The tombstoned doc_ids for the local scorer route, sorted:
+        ``deleted_df`` collected once per Searcher, up to the cap
+        (``limit(self._local_max_tombstones + 1)`` over Arrow), and
+        cached like ``_df_cache`` (a Searcher's tables never change).
+        None when the table holds more rows than the cap; that is cached
+        too, so an over-cap table is never collected again and its
+        queries take the cogrouped route."""
+        if self._dead_ids is None:
+            cap = self._local_max_tombstones
+            t = self.deleted_df.select("doc_id").limit(cap + 1).toArrow()
+            self._dead_ids = (
+                np.unique(t["doc_id"].to_numpy()) if t.num_rows <= cap else False
+            )
+        return None if self._dead_ids is False else self._dead_ids
+
     def _run_range_scorer(
         self,
         kernel,
@@ -568,26 +607,30 @@ class Searcher:
         every row.
 
         Transport, chosen from the query terms' estimated block count
-        (``_estimated_blocks(meta)``):
+        (``_estimated_blocks(meta)``) and the side inputs:
 
-        * **local** — below ``self._local_max_blocks`` and with no side
-          frame: the pruned blocks are collected over Arrow
-          (``toPandas``), every range's kernel runs on the driver and the
-          merged rows come back as a ``LocalRelation`` DataFrame. A
-          Python-UDF stage's fixed cost is several times a few hundred
-          blocks' kernel time.
+        * **local** — below ``self._local_max_blocks``, with no
+          ``allowed`` or ``excluded`` frame and a tombstone table of at
+          most ``self._local_max_tombstones`` rows: the pruned blocks are
+          collected over Arrow (``toPandas``), the tombstone ids are
+          collected up to the cap once per Searcher (``_local_dead``),
+          every range's kernel runs on the driver, fed its dead ids
+          through the same per-range body as the cogroup, and the merged
+          rows come back as a ``LocalRelation`` DataFrame. A Python-UDF
+          stage's fixed cost is several times a few hundred blocks'
+          kernel time.
         * **distributed** — otherwise: the blocks are grouped by doc range
           (``_group_by_range``) into ``applyInPandas`` and, when a side
           frame exists (``_side_frame``: tombstone table, allow- and
           deny-lists), cogrouped with each range's side rows — neither
-          set ever leaves the cluster, vs collecting a Python set, which
-          caps at ~10^6 entries. With ``k`` the merge is the global
+          set leaves the cluster, vs collecting a Python set, which caps
+          at ~10^6 entries. With ``k`` the merge is the global
           TakeOrderedAndProject.
 
         ``label`` names the Spark jobs the chassis launches itself (the
-        local route's block collect): ``<label> k=… terms=… route=local``.
+        local route's tombstone and block collects): ``<label> k=…
+        terms=… tombstones`` and ``<label> k=… terms=… route=local``.
         """
-        side_df = self._side_frame(allowed, excluded)
         cols = [*_SCORE_COLS, "pos_bytes"] if positions else _SCORE_COLS
         # closure state only — the UDF must not capture self (SparkSession)
         range_bits = self.range_bits
@@ -626,14 +669,35 @@ class Searcher:
         def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             return cg(key, pdf, None)
 
-        if side_df is None and _estimated_blocks(meta) < self._local_max_blocks:
+        on_driver = (
+            allowed is None and excluded is None
+            and _estimated_blocks(meta) < self._local_max_blocks
+        )
+        dead = None
+        if on_driver and self.deleted_df is not None:
+            with _job_description(
+                self.spark, f"{label} k={k} terms={len(meta)} tombstones"
+            ):
+                dead = self._local_dead()
+            on_driver = dead is not None
+        if on_driver:
+
+            def dead_side(rid: int) -> pd.DataFrame | None:
+                # the range's dead ids as the cogroup's side rows (kind=0)
+                if dead is None:
+                    return None
+                lo, hi = np.searchsorted(
+                    dead, [rid << range_bits, (rid + 1) << range_bits]
+                )
+                return pd.DataFrame({"doc_id": dead[lo:hi], "kind": 0})
+
             with _job_description(
                 self.spark,
                 f"{label} k={k} terms={len(meta)} route=local",
             ):
                 pdf = blocks.select(*cols).toPandas()
                 outs = [
-                    plain((rid,), g.reset_index(drop=True))
+                    cg((rid,), g.reset_index(drop=True), dead_side(int(rid)))
                     for rid, g in pdf.groupby("range_id", sort=True)
                 ]
                 rows = (
@@ -648,7 +712,7 @@ class Searcher:
                 return self.spark.createDataFrame(rows, TOPK_SCHEMA)
 
         grouped, side_g = self._group_by_range(
-            blocks.select(*cols), side_df, meta
+            blocks.select(*cols), self._side_frame(allowed, excluded), meta
         )
         if side_g is None:
             local = grouped.applyInPandas(plain, TOPK_SCHEMA)

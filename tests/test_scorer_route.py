@@ -1,9 +1,11 @@
 """Scorer transport routing (Searcher._run_range_scorer): a query whose
-estimated block count is below the threshold and that has no side frame
-(tombstones, allow- or deny-list) is scored on the driver over collected
-blocks; every other query runs the grouped or cogrouped pandas-UDF stage.
-Both routes run the same kernels, so results (doc_id and the exact score)
-and the skipped-block total must be identical.
+estimated block count is below the threshold, that has no allow- or
+deny-list and whose tombstone table holds at most the tombstone cap is
+scored on the driver over collected blocks (and collected tombstones);
+every other query runs the grouped or cogrouped pandas-UDF stage. Both
+routes run the same kernels behind the same masking body, so results
+(doc_id and the exact score) and the skipped-block total must be
+identical.
 """
 
 from __future__ import annotations
@@ -111,18 +113,35 @@ def _run(spark, s, fn):
     return df, rows, acc.value
 
 
+def _dead(spark) -> tuple[DataFrame, set[int]]:
+    """A tombstone table: every third doc of range 0 and every doc of
+    range 1."""
+    ids = {*range(0, 1 << RANGE_BITS, 3), *range(1 << RANGE_BITS, 2 << RANGE_BITS)}
+    return spark.createDataFrame([(i,) for i in sorted(ids)], "doc_id long"), ids
+
+
 def test_routes_agree_for_every_kernel(spark, corpus):
+    """Every mode, without and with a tombstone table (one doc range of
+    it all dead): identical rows and skip totals on both routes; the
+    local route plans no pandas stage, the distributed one a grouped
+    stage, or a cogrouped one over the tombstones."""
     built, bigram = corpus
-    local = _searcher(spark, built, LOCAL)
-    dist = _searcher(spark, built, DISTRIBUTED)
-    for name, fn in _modes(bigram).items():
-        ldf, lrows, lskip = _run(spark, local, fn)
-        ddf, drows, dskip = _run(spark, dist, fn)
-        assert lrows, f"{name}: fixture query matched nothing"
-        assert lrows == drows, name
-        assert lskip == dskip, (name, lskip, dskip)
-        assert "FlatMapGroupsInPandas" not in _plan(ldf), name
-        assert "FlatMapGroupsInPandas" in _plan(ddf), name
+    assert built.n_docs > 2 << RANGE_BITS
+    dead_df, dead = _dead(spark)
+    for kw, stage in (({}, "FlatMapGroupsInPandas"),
+                      ({"deleted_df": dead_df}, "FlatMapCoGroupsInPandas")):
+        local = _searcher(spark, built, LOCAL, **kw)
+        dist = _searcher(spark, built, DISTRIBUTED, **kw)
+        for name, fn in _modes(bigram).items():
+            ldf, lrows, lskip = _run(spark, local, fn)
+            ddf, drows, dskip = _run(spark, dist, fn)
+            assert lrows, f"{name}: fixture query matched nothing"
+            assert lrows == drows, (name, stage)
+            assert lskip == dskip, (name, stage, lskip, dskip)
+            assert "GroupsInPandas" not in _plan(ldf), name
+            assert stage in _plan(ddf), name
+            if kw:
+                assert not {d for d, _ in lrows} & dead, name
 
 
 def test_or_query_skips_blocks_on_both_routes(spark, corpus):
@@ -139,29 +158,68 @@ def test_or_query_skips_blocks_on_both_routes(spark, corpus):
 
 @pytest.mark.parametrize("side", ["tombstones", "allowed", "excluded", "both"])
 def test_side_frames_stay_distributed(spark, corpus, side):
-    """A side frame always takes the cogrouped stage, even far below the
-    threshold: tombstones and allow/deny lists never reach the driver."""
+    """An allow- or deny-list always takes the cogrouped stage, even far
+    below the threshold: those frames never reach the driver. A
+    tombstone table takes the local route up to the tombstone cap and
+    the cogrouped stage above it (cap set per instance)."""
     built, _ = corpus
     ids = spark.createDataFrame([(i,) for i in range(0, 400, 3)], "doc_id long")
     kw = {"deleted_df": ids} if side == "tombstones" else {}
-    s = _searcher(spark, built, LOCAL, **kw)
     q = f"{VOCAB[0]} {VOCAB[3]}"
     allowed = ids if side in ("allowed", "both") else None
     excluded = (
         spark.createDataFrame([(i,) for i in range(0, 400, 7)], "doc_id long")
         if side in ("excluded", "both") else None
     )
-    for df in (
-        s.topk_blockmax(q, 10, allowed=allowed, excluded=excluded),
-        s.topk_phrase(q, 10, allowed=allowed, excluded=excluded),
-        s.topk_prefix(VOCAB[0][:2], 10, allowed=allowed, excluded=excluded),
-    ):
-        assert "FlatMapCoGroupsInPandas" in _plan(df), side
-    # and the cogrouped answer equals the forced-distributed one
+    # the tombstone case: at the cap (134 ids) local, one below it cogrouped
+    caps = (134, 133) if side == "tombstones" else (None,)
     d = _searcher(spark, built, DISTRIBUTED, **kw)
     want = d.topk_blockmax(q, 10, allowed=allowed, excluded=excluded).collect()
-    got = s.topk_blockmax(q, 10, allowed=allowed, excluded=excluded).collect()
-    assert got == want
+    for cap in caps:
+        s = _searcher(spark, built, LOCAL, **kw)
+        if cap is not None:
+            s._local_max_tombstones = cap
+        cogrouped = cap != 134
+        for df in (
+            s.topk_blockmax(q, 10, allowed=allowed, excluded=excluded),
+            s.topk_phrase(q, 10, allowed=allowed, excluded=excluded),
+            s.topk_prefix(VOCAB[0][:2], 10, allowed=allowed, excluded=excluded),
+        ):
+            assert ("FlatMapCoGroupsInPandas" in _plan(df)) == cogrouped, (side, cap)
+        # and the answer equals the forced-distributed one
+        got = s.topk_blockmax(q, 10, allowed=allowed, excluded=excluded).collect()
+        assert got == want, (side, cap)
+
+
+def test_tombstone_cap_boundary_picks_the_route(spark, corpus, monkeypatch):
+    """A tombstone table of exactly the cap's rows is collected once per
+    Searcher and its queries take the local route; one row over the cap
+    sends them to the cogrouped stage, and the over-cap table is not
+    collected again by later queries."""
+    built, _ = corpus
+    dead_df, dead = _dead(spark)
+    q = f"{VOCAB[0]} {VOCAB[3]}"
+    collects = []
+    cls = type(dead_df)
+    orig = cls.toArrow
+
+    def spy(self):
+        collects.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(cls, "toArrow", spy)
+    results = []
+    for cap, cogrouped in ((len(dead), False), (len(dead) - 1, True)):
+        s = _searcher(spark, built, LOCAL, deleted_df=dead_df)
+        s._local_max_tombstones = cap
+        collects.clear()
+        plans = [_plan(s.topk_blockmax(q, 10)), _plan(s.topk_phrase(q, 10))]
+        assert len(collects) == 1, cap
+        for plan in plans:
+            assert ("FlatMapCoGroupsInPandas" in plan) == cogrouped, cap
+            assert "FlatMapGroupsInPandas" not in plan, cap
+        results.append(s.topk_blockmax(q, 10).collect())
+    assert results[0] == results[1]
 
 
 def test_threshold_boundary_picks_the_route(spark, corpus):

@@ -621,9 +621,11 @@ def test_broken_in_process_numbering_fails_the_save(spark, tmp_path, monkeypatch
 
 def test_driver_route_upsert_jobs(spark, root):
     """A driver-route upsert of an 80-turn parquet batch (60 new turns,
-    20 re-ingested keys) runs at most 10 Spark jobs: the batch's dedup
-    and collect, the store's stats and the superseded ids; the build and
-    the writes run none."""
+    20 re-ingested keys) runs at most 4 Spark jobs, each labelled with
+    the upsert's segment: the batch's dedup and collect (``build``) and
+    the superseded ids (``tombstones``). The store's schemas and stats
+    rows are read on the driver, and the build and the writes run no
+    job."""
     t = transcripts_df(spark, n_conv=60)
     store = IndexStore(spark, root)
     store.save(build_index(spark, t))
@@ -639,8 +641,12 @@ def test_driver_route_upsert_jobs(spark, root):
     new.unionByName(re).coalesce(1).write.parquet(path)
     batch = spark.read.parquet(path)
     assert batch.count() == 80
-    jobs = _jobs_of(spark, lambda: store.upsert(batch))
-    assert 0 < len(jobs) <= 10, jobs
+    seg = []
+    jobs = _jobs_of(spark, lambda: seg.append(store.upsert(batch)))
+    assert seg == [1]
+    assert 0 < len(jobs) <= 4, jobs
+    labels = {label for label, _ in jobs.values()}
+    assert labels == {"upsert seg=1 build", "upsert seg=1 tombstones"}, jobs
     assert len(store.tombstones()) == 20
 
 
@@ -698,11 +704,12 @@ def test_broken_doc_id_assignment_fails_the_save(
 
 
 def test_load_reads_each_table_once_and_lists_on_driver(spark, root):
-    """load() on a two-segment store launches at most 7 Spark jobs (one
-    read per table; the corpus_stats aggregate) and no distributed
-    listing of a segment's N_TERM_BUCKETS bucket directories."""
-    from rabbit_index_ingest_spark.index.build import N_TERM_BUCKETS
-
+    """load() on a two-segment tombstoned store launches no Spark job:
+    every table's schema comes from one footer read on the driver, the
+    stats rows are read with pyarrow, and the bucket directories are
+    listed on the driver (a distributed listing would be a job). A
+    1-term query on the loaded index takes the local route over the
+    tombstones: no cogrouped pandas stage."""
     store = IndexStore(spark, root)
     store.save(build_index(spark, transcripts_df(spark, n_conv=20)))
     store.upsert(
@@ -712,16 +719,82 @@ def test_load_reads_each_table_once_and_lists_on_driver(spark, root):
         )
     )
     assert store.segments() == [0, 1]
-    jobs = _jobs_of(spark, store.load)
-    assert 0 < len(jobs) <= 7, jobs
-    for j, stages in jobs.items():
-        for s, num_tasks in stages.items():
-            assert num_tasks != N_TERM_BUCKETS, (j, s)
+    assert store.tombstones()
+    loaded = []
+    jobs = _jobs_of(spark, lambda: loaded.append(store.load()))
+    assert jobs == {}, jobs
+    L = loaded[0]
+    s = Searcher(spark, L.postings, L.dictionary, L.n_docs, L.avgdl, deleted_df=L.deleted_df)
+    df = s.topk_blockmax("xenolith", 10)
+    assert "FlatMapCoGroupsInPandas" not in df._jdf.queryExecution().executedPlan().toString()
+    assert [r["doc_id"] for r in df.collect()] == [L.n_docs - 1]
 
 
-def _jobs_of(spark, action) -> dict[int, dict[int, int]]:
-    """Run ``action`` and return ``{job id: {stage id: numTasks}}`` for
-    every job it launched, skipped stages included. The figures come
+def _schema_store(spark, root, kind):
+    """A two-segment tombstoned store of the ``kind`` the schema parity
+    test covers: driver-written, Spark-written, multi-field,
+    positionless, or legacy (segment 0's corpus_stats lacks the
+    positions and analyzer columns, the upserted segment 1 has them)."""
+    import pyarrow.parquet as pq
+
+    from rabbit_index_ingest_spark.index.build import build_index_multifield
+
+    t = transcripts_df(spark, n_conv=8)
+    fields = {"text": "text"}
+    if kind == "multi":
+        t = t.withColumn("title", F.substring_index("text", " ", 2))
+        fields["title"] = "title"
+    store = IndexStore(spark, root)
+    if kind == "spark":
+        store._local_max_docs = 0
+    store.save(build_index_multifield(spark, t, fields, positions=kind != "positionless"))
+    if kind == "legacy":
+        part = os.path.join(root, "corpus_stats", "seg=00000", "part-00000.parquet")
+        pq.write_table(pq.read_table(part).drop_columns(["positions", "analyzer"]), part)
+    batch = t.where(F.col("conv_id") == "conv-00000001").withColumn(
+        "text", F.concat("text", F.lit(" xenolith"))
+    )
+    assert store.upsert(batch.select("conv_id", "turn_idx", *fields)) == 1
+    assert store.tombstones()
+    return store
+
+
+@pytest.mark.parametrize("kind", ["driver", "spark", "multi", "positionless", "legacy"])
+def test_read_schema_matches_spark_inference(spark, tmp_path, kind):
+    """Every table read with the driver-side footer schema
+    (``_read_schema``) has the schema Spark infers for the same
+    directory, partition columns included; the tombstone read too. On
+    the legacy store Spark's inference reads only the first file's
+    footer (segment 0, which lacks the newer stats columns), so there
+    the footer schema, read from the newest segment, equals the merged
+    schema of all files and extends the inferred one."""
+    store = _schema_store(spark, str(tmp_path / kind), kind)
+    tables = ["docs", "postings", "dictionary", "corpus_stats", "metrics"]
+    if kind == "multi":
+        tables.append("field_stats")
+    for table in tables:
+        tdir = os.path.join(store.root, table)
+        got = store._read_all(table).schema
+        want = spark.read.parquet(tdir).drop("seg").schema
+        if kind == "legacy" and table == "corpus_stats":
+            merged = spark.read.option("mergeSchema", "true").parquet(tdir)
+            by_name = lambda schema: {f.name: f for f in schema}  # noqa: E731
+            assert by_name(got) == by_name(merged.drop("seg").schema)
+            assert set(got.names) - set(want.names) == {"positions", "analyzer"}
+            assert by_name(want).items() <= by_name(got).items()
+            continue
+        assert got == want, (kind, table)
+    paths = store._tomb_segments()
+    assert store.tombstones_df().schema == spark.read.parquet(*paths).select("doc_id").schema
+    L = store.load()
+    assert (L.positions, L.analyzer) == (kind != "positionless", "simple")
+
+
+def _jobs_of(spark, action) -> dict[int, tuple[str | None, dict[int, int]]]:
+    """Run ``action`` and return ``{job id: (description, {stage id:
+    numTasks})}`` for every job it launched, skipped stages included;
+    the description is the job's ``spark.job.description`` (None if
+    unset). The figures come
     from a status store that listens only while ``action`` runs: the
     application's own store evicts stages (skipped ones first) once the
     session passes ``spark.ui.retainedStages``, which a long test session
@@ -744,10 +817,14 @@ def _jobs_of(spark, action) -> dict[int, dict[int, int]]:
         for i in range(job_list.size()):
             job = job_list.apply(i)
             ids = job.stageIds()
-            out[job.jobId()] = {
-                ids.apply(k): status.lastStageAttempt(ids.apply(k)).numTasks()
-                for k in range(ids.size())
-            }
+            desc = job.description()
+            out[job.jobId()] = (
+                desc.get() if desc.isDefined() else None,
+                {
+                    ids.apply(k): status.lastStageAttempt(ids.apply(k)).numTasks()
+                    for k in range(ids.size())
+                },
+            )
         return out
     finally:
         status.close()
