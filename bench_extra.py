@@ -198,13 +198,24 @@ def main() -> None:
         t[name + "_rep2"] = round(time.time() - t0, 3)
         sc.setJobDescription(None)
 
-    # ---------- decode isolation (df-twin cost attribution) ----------
+    # ---------- block scan of the hot pair, through each term source ----
+    # (the local scorer route's read: the loaded store's files with
+    # pyarrow vs the DataFrame source's Arrow collect of the same rows)
     from rabbit_index_ingest_spark.index.query import (
+        _SCORE_COLS,
+        _FrameSource,
         flat_postings,
         flat_postings_positional,
     )
 
-    blocks_hot = searcher._term_blocks([VOCAB[0], VOCAB[1]])
+    hot = [VOCAB[0], VOCAB[1]]
+    frame_source = _FrameSource(loaded.postings, loaded.dictionary, loaded.deleted_df)
+    for name, source in (("scan_hot_files", searcher._source), ("scan_hot_frames", frame_source)):
+        source.blocks(hot, _SCORE_COLS)  # warm
+        timed(name, lambda source=source: source.blocks(hot, _SCORE_COLS))
+
+    # ---------- decode isolation (df-twin cost attribution) ----------
+    blocks_hot = searcher._term_blocks(hot)
     fp = flat_postings(blocks_hot)
     with open(os.path.join(plans_dir, "decode_flat.txt"), "w") as f:
         f.write(_explain_str(fp))

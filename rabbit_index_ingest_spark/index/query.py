@@ -31,17 +31,32 @@ skipped)`` scores one doc range (contract on the chassis). The same
 kernels run over two transports, picked per query from the terms'
 estimated block count: below ``_LOCAL_MAX_BLOCKS``, without an allow-
 or deny-list and with at most ``_LOCAL_MAX_TOMBSTONES`` tombstones, the
-pruned blocks (and the tombstone table, once per Searcher) are collected
-over Arrow and scored on the driver; otherwise they are grouped (or
+pruned blocks (and the tombstone ids, once per Searcher) are read from
+the term source and scored on the driver; otherwise they are grouped (or
 cogrouped with the side frame) by doc range into an ``applyInPandas``
 stage. Both transports feed each range's dead ids to the same chassis
 body, so there is one masking path.
 
-Every query reads postings and dictionary rows through ONE owner of the
-term-pruned scan, ``_term_rows`` (``Searcher._term_blocks`` for posting
-blocks, ``Searcher._term_entries`` for dictionary rows) — the only code
-that knows the ``bucket`` storage layout. The DataFrame paths mask dead,
-allowed and excluded docs through ONE live mask, ``Searcher._mask``.
+A block-max query's scan is a ``_Scan`` value (terms plus range prunes),
+read one of two ways: the distributed route plans it as a DataFrame
+(``Searcher._scan_frame``), the local route reads its rows from the
+Searcher's **term source** and prunes them with numpy. There are two
+term sources, with one interface (``meta``, ``blocks``, ``dead_ids``):
+
+* the **file source** (``store.StoreFiles``) — the frames that
+  ``IndexStore.load()`` returns for a parquet store carry it. It reads
+  the terms' dictionary rows, posting blocks and the tombstones from the
+  store's bucket files with pyarrow on the driver: no Spark job.
+* the **DataFrame source** (``_FrameSource``) — every other set of
+  frames: a ``BuiltIndex``, an Iceberg store, frames a caller builds or
+  derives (a derived frame is a new object and loses the file source).
+  It collects ``_term_rows`` scans, one Spark job per read.
+
+``_term_rows`` is the one owner of the term-pruned DataFrame scan of
+posting blocks (``Searcher._term_blocks``) and dictionary rows;
+``StoreFiles`` is its twin over the files. The DataFrame paths mask
+dead, allowed and excluded docs through ONE live mask,
+``Searcher._mask``.
 
 Replaces: the reference's delegation of search to Elasticsearch 7.9.1
 (Lucene 8.6 block-max WAND + BM25 k1=1.2 b=0.75; constants pinned in
@@ -50,6 +65,7 @@ codec.K1 / codec.B).
 
 from __future__ import annotations
 
+import dataclasses
 import math
 import re
 from collections.abc import Iterator
@@ -63,7 +79,7 @@ from pyspark.sql import types as T
 from ..analysis import py_tokenize
 from . import codec
 from .build import RANGE_BITS
-from .store import _job_description
+from .store import _job_description, store_files
 
 FLAT_SCHEMA = T.StructType(
     [
@@ -112,18 +128,20 @@ _SCORE_COLS = [
 _LOCAL_MAX_BLOCKS = 1536
 
 # A query may take the local route over a tombstone table of at most this
-# many rows: the table is collected once per Searcher (``limit(cap + 1)``
-# over Arrow, one Spark job) and each range's dead ids feed the live
-# bitmap on the driver. The collect costs 0.22 s for 10^5 ids and 0.69 s
-# for 10^6, but the cogrouped stage it replaces shuffles the same ids on
-# every query. A 2-term OR on a 3.5k-turn index, local[4], a fresh
+# many rows: the ids are read once per Searcher and each range's dead ids
+# feed the live bitmap on the driver. The file source reads the tombstone
+# files with pyarrow after summing their footers' row counts, so an
+# over-cap table is never read. The DataFrame source collects the table
+# (``limit(cap + 1)`` over Arrow, one Spark job): 0.22 s for 10^5 ids and
+# 0.69 s for 10^6, but the cogrouped stage it replaces shuffles the same
+# ids on every query. A 2-term OR on a 3.5k-turn index, local[4], a fresh
 # Searcher per query (so each pays the collect), local vs cogrouped
 # route, medians of 4 alternating reps: 0.60 vs 1.13 s with 10^3
 # tombstones, 0.98 vs 1.01 s with 10^5, 1.43 vs 1.99 s with 10^6 and 1.74
 # vs 2.59 s with 2*10^6. So this cap is a driver-memory bound (8 MB of ids
-# at 10^6), not a speed crossover; a table above it costs one wasted
-# collect of cap + 1 rows per Searcher (0.96 s) before its queries go
-# distributed.
+# at 10^6), not a speed crossover. Over it, the DataFrame source costs one
+# wasted collect of cap + 1 rows per Searcher (0.96 s) before its queries
+# go distributed; the file source costs one footer read per file.
 _LOCAL_MAX_TOMBSTONES = 1_000_000
 
 
@@ -383,10 +401,11 @@ def _term_rows(table: DataFrame, terms: list[str]) -> DataFrame:
     """The rows of ``terms`` in a term-partitioned index table (postings
     or dictionary, both stored under ``bucket = xxhash64(term) mod
     N_TERM_BUCKETS``): the terms' buckets as a partition filter, then the
-    ``term`` filter. The one place that knows the bucket layout. Buckets
-    are computed driver-side with the pure-Python twin of Spark's xxhash64
+    ``term`` filter. The one place that knows the bucket layout of a
+    frame (``store.StoreFiles`` knows it of the files). Buckets are
+    computed driver-side with the pure-Python twin of Spark's xxhash64
     (functions/hashing.py, parity asserted in tests/test_hashing.py), so
-    the lookup costs no Spark job."""
+    planning the lookup costs no Spark job."""
     from ..functions.hashing import term_bucket
     from .build import N_TERM_BUCKETS
 
@@ -394,6 +413,66 @@ def _term_rows(table: DataFrame, terms: list[str]) -> DataFrame:
     return table.where(F.col("bucket").isin(buckets)).where(
         F.col("term").isin(list(terms))
     )
+
+
+class _FrameSource:
+    """The DataFrame term source (see the module docstring): the term
+    rows and tombstones of any frames, collected through Spark, one job
+    per read. ``store.StoreFiles`` is its driver-side twin, with the same
+    three methods."""
+
+    def __init__(self, postings: DataFrame, dictionary: DataFrame, deleted_df):
+        self.postings = postings
+        self.dictionary = dictionary
+        self.deleted_df = deleted_df
+
+    def meta(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
+        """term → (df, max_tf, min_dl); absent terms are left out."""
+        rows = _term_rows(self.dictionary, terms).select("term", *_META_COLS).collect()
+        return {
+            r["term"]: (int(r["df"]), int(r["max_tf"]), int(r["min_dl"]))
+            for r in rows
+        }
+
+    def blocks(self, terms: list[str], cols: list[str]) -> pd.DataFrame:
+        """The posting blocks of ``terms``, ``cols`` only."""
+        return _term_rows(self.postings, terms).select(*cols).toPandas()
+
+    def dead_ids(self, cap: int) -> np.ndarray | None:
+        """The tombstoned doc_ids, or None over ``cap`` rows: the table is
+        collected up to ``cap + 1`` rows to tell."""
+        t = self.deleted_df.select("doc_id").limit(cap + 1).toArrow()
+        return t["doc_id"].to_numpy() if t.num_rows <= cap else None
+
+
+@dataclasses.dataclass(frozen=True)
+class _Scan:
+    """A block-max query's term-pruned block scan, before any read: the
+    posting blocks of ``terms`` in the doc ranges that hold a block of
+    ``rare`` (the conjunctive modes' range prune, ``rare`` ⊆ ``terms``;
+    empty: every range) and at least ``min_terms`` distinct terms
+    (``topk_msm``'s range prune; 0: every range). Both prunes are
+    lossless: a range they drop holds no match.
+
+    The distributed route plans it as a DataFrame
+    (``Searcher._scan_frame``: semi-joins); the local route reads the
+    terms' blocks from the term source and prunes them here."""
+
+    terms: tuple[str, ...]
+    rare: tuple[str, ...] = ()
+    min_terms: int = 0
+
+    def prune(self, pdf: pd.DataFrame) -> pd.DataFrame:
+        """The rows of ``pdf`` (the blocks of ``terms``) in the ranges
+        both prunes keep, in their order."""
+        rid = pdf["range_id"].to_numpy()
+        keep = np.ones(len(pdf), dtype=bool)
+        if self.rare:
+            keep &= np.isin(rid, rid[pdf["term"].isin(self.rare).to_numpy()])
+        if self.min_terms:
+            nt = pdf[keep].groupby("range_id")["term"].nunique()
+            keep &= np.isin(rid, nt.index[nt >= self.min_terms].to_numpy())
+        return pdf if keep.all() else pdf[keep].reset_index(drop=True)
 
 
 class Searcher:
@@ -419,9 +498,13 @@ class Searcher:
         doc_stats: DataFrame | None = None,
     ):
         """``deleted_df``: the tombstoned doc_ids as a DataFrame
-        (``LoadedIndex.deleted_df``). The local scorer route collects it
-        up to the cap (``_LOCAL_MAX_TOMBSTONES`` rows) once per Searcher;
-        above the cap it is cogrouped per doc range and never collected.
+        (``LoadedIndex.deleted_df``). The local scorer route reads it up
+        to the cap (``_LOCAL_MAX_TOMBSTONES`` rows) once per Searcher;
+        above the cap it is cogrouped per doc range.
+
+        The term source (module docstring): the file source when
+        ``postings``, ``dictionary`` and ``deleted_df`` (if given) are the
+        frames of one ``IndexStore.load()``, else the DataFrame source.
 
         ``probe_min_blocks`` gates the global-θ₀ seed probe (see
         ``_seed_theta0``): queries whose estimated decode volume is below
@@ -468,30 +551,27 @@ class Searcher:
         # them per instance to force one route
         self._local_max_blocks = _LOCAL_MAX_BLOCKS
         self._local_max_tombstones = _LOCAL_MAX_TOMBSTONES
-        # the tombstone ids the local route collected (``_local_dead``):
-        # None until the first local query, False over the cap
+        # the tombstone ids the local route read (``_local_dead``): None
+        # until the first local query, False over the cap
         self._dead_ids: np.ndarray | bool | None = None
+        files = store_files(postings)
+        self._source = (
+            files
+            if files is not None and store_files(dictionary) is files
+            and (deleted_df is None or store_files(deleted_df) is files)
+            else _FrameSource(postings, dictionary, deleted_df)
+        )
 
     def _term_blocks(self, terms: list[str]) -> DataFrame:
         """The term-pruned scan: the posting blocks of ``terms``, read from
         their storage buckets only (``_term_rows``)."""
         return _term_rows(self.postings, terms)
 
-    def _term_entries(self, terms: list[str]) -> DataFrame:
-        """The dictionary rows of ``terms`` (``_term_blocks``' twin)."""
-        return _term_rows(self.dictionary, terms)
-
     def _term_meta(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
-        """term → (df, max_tf, min_dl) from the dictionary (cached)."""
+        """term → (df, max_tf, min_dl) from the term source (cached)."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            rows = (
-                self._term_entries(missing).select("term", *_META_COLS).collect()
-            )
-            found = {
-                r["term"]: (int(r["df"]), int(r["max_tf"]), int(r["min_dl"]))
-                for r in rows
-            }
+            found = self._source.meta(missing)
             for t in missing:
                 self._df_cache[t] = found.get(t, (0, 0, 0))
         return {t: self._df_cache[t] for t in terms}
@@ -560,25 +640,51 @@ class Searcher:
         return left, side.repartition(n, F.col("range_id")).groupBy("range_id")
 
     def _local_dead(self) -> np.ndarray | None:
-        """The tombstoned doc_ids for the local scorer route, sorted:
-        ``deleted_df`` collected once per Searcher, up to the cap
-        (``limit(self._local_max_tombstones + 1)`` over Arrow), and
-        cached like ``_df_cache`` (a Searcher's tables never change).
-        None when the table holds more rows than the cap; that is cached
-        too, so an over-cap table is never collected again and its
-        queries take the cogrouped route."""
+        """The tombstoned doc_ids for the local scorer route, sorted: read
+        from the term source once per Searcher, up to the cap
+        (``self._local_max_tombstones``), and cached like ``_df_cache`` (a
+        Searcher's tables never change). None when the table holds more
+        rows than the cap; that is cached too, so an over-cap table is
+        not looked at again and its queries take the cogrouped route."""
         if self._dead_ids is None:
-            cap = self._local_max_tombstones
-            t = self.deleted_df.select("doc_id").limit(cap + 1).toArrow()
-            self._dead_ids = (
-                np.unique(t["doc_id"].to_numpy()) if t.num_rows <= cap else False
-            )
+            ids = self._source.dead_ids(self._local_max_tombstones)
+            self._dead_ids = False if ids is None else np.unique(ids)
         return None if self._dead_ids is False else self._dead_ids
+
+    def _scan_frame(self, blocks: _Scan | DataFrame) -> DataFrame:
+        """The DataFrame of a block scan (a frame is returned as is): the
+        terms' ``_term_blocks``, semi-joined to the rare group's distinct
+        ``range_id``s (block metadata only, read from the rare terms' own
+        buckets) and to the ranges holding ``min_terms`` distinct terms
+        (a metadata-only countDistinct over the pruned scan)."""
+        if isinstance(blocks, DataFrame):
+            return blocks
+        frame = self._term_blocks(list(blocks.terms))
+        if blocks.rare:
+            rare_ranges = self._term_blocks(list(blocks.rare)).select("range_id").distinct()
+            frame = frame.join(rare_ranges, "range_id", "left_semi")
+        if blocks.min_terms:
+            viable = (
+                frame.groupBy("range_id")
+                .agg(F.countDistinct("term").alias("_nt"))
+                .where(F.col("_nt") >= blocks.min_terms)
+                .select("range_id")
+            )
+            frame = frame.join(viable, "range_id", "left_semi")
+        return frame
+
+    def _scan_rows(self, blocks: _Scan | DataFrame, cols: list[str]) -> pd.DataFrame:
+        """The local route's blocks, ``cols`` only: a scan's terms read
+        from the term source and pruned with numpy (``_Scan.prune``); a
+        frame collected over Arrow."""
+        if isinstance(blocks, DataFrame):
+            return blocks.select(*cols).toPandas()
+        return blocks.prune(self._source.blocks(list(blocks.terms), cols))
 
     def _run_range_scorer(
         self,
         kernel,
-        blocks: DataFrame,
+        blocks: _Scan | DataFrame,
         meta: dict[str, tuple[int, int, int]],
         k: int | None = None,
         allowed: DataFrame | None = None,
@@ -612,14 +718,15 @@ class Searcher:
         * **local** — below ``self._local_max_blocks``, with no
           ``allowed`` or ``excluded`` frame and a tombstone table of at
           most ``self._local_max_tombstones`` rows: the pruned blocks are
-          collected over Arrow (``toPandas``), the tombstone ids are
-          collected up to the cap once per Searcher (``_local_dead``),
-          every range's kernel runs on the driver, fed its dead ids
-          through the same per-range body as the cogroup, and the merged
-          rows come back as a ``LocalRelation`` DataFrame. A Python-UDF
-          stage's fixed cost is several times a few hundred blocks'
-          kernel time.
-        * **distributed** — otherwise: the blocks are grouped by doc range
+          read from the term source (``_scan_rows``), the tombstone ids
+          once per Searcher (``_local_dead``), every range's kernel runs
+          on the driver, fed its dead ids through the same per-range body
+          as the cogroup, and the merged rows come back as a
+          ``LocalRelation`` DataFrame. A Python-UDF stage's fixed cost is
+          several times a few hundred blocks' kernel time; on the file
+          source the route runs no Spark job at all.
+        * **distributed** — otherwise: the scan's DataFrame
+          (``_scan_frame``) is grouped by doc range
           (``_group_by_range``) into ``applyInPandas`` and, when a side
           frame exists (``_side_frame``: tombstone table, allow- and
           deny-lists), cogrouped with each range's side rows — neither
@@ -627,8 +734,11 @@ class Searcher:
           at ~10^6 entries. With ``k`` the merge is the global
           TakeOrderedAndProject.
 
+        ``blocks`` is a ``_Scan``, or a frame of posting blocks that the
+        local route collects as it is.
+
         ``label`` names the Spark jobs the chassis launches itself (the
-        local route's tombstone and block collects): ``<label> k=…
+        DataFrame source's tombstone and block collects): ``<label> k=…
         terms=… tombstones`` and ``<label> k=… terms=… route=local``.
         """
         cols = [*_SCORE_COLS, "pos_bytes"] if positions else _SCORE_COLS
@@ -695,7 +805,7 @@ class Searcher:
                 self.spark,
                 f"{label} k={k} terms={len(meta)} route=local",
             ):
-                pdf = blocks.select(*cols).toPandas()
+                pdf = self._scan_rows(blocks, cols)
                 outs = [
                     cg((rid,), g.reset_index(drop=True), dead_side(int(rid)))
                     for rid, g in pdf.groupby("range_id", sort=True)
@@ -712,7 +822,8 @@ class Searcher:
                 return self.spark.createDataFrame(rows, TOPK_SCHEMA)
 
         grouped, side_g = self._group_by_range(
-            blocks.select(*cols), self._side_frame(allowed, excluded), meta
+            self._scan_frame(blocks).select(*cols),
+            self._side_frame(allowed, excluded), meta,
         )
         if side_g is None:
             local = grouped.applyInPandas(plain, TOPK_SCHEMA)
@@ -724,8 +835,9 @@ class Searcher:
 
     def _plan(
         self, query_text: str
-    ) -> tuple[dict[str, float], DataFrame, dict[str, tuple[int, int, int]]] | None:
-        """Analyze query (shared tokenizer), fetch idfs, prune block scan."""
+    ) -> tuple[dict[str, float], _Scan, dict[str, tuple[int, int, int]]] | None:
+        """Analyze query (shared tokenizer), fetch idfs, prune block scan
+        (a ``_Scan`` of the present terms; ``_scan_frame`` plans it)."""
         terms = sorted(set(self._tok(query_text)))
         if not terms:
             return None
@@ -735,13 +847,13 @@ class Searcher:
         }
         if not idfs:
             return None
-        return idfs, self._term_blocks(list(idfs)), meta
+        return idfs, _Scan(tuple(idfs)), meta
 
     def _seed_theta0(
         self,
         idfs: dict[str, float],
         meta: dict[str, tuple[int, int, int]],
-        blocks: DataFrame,
+        blocks: _Scan | DataFrame,
         k: int,
         avgdls: dict[str, float] | None = None,
         cursor: tuple[float, int] | None = None,
@@ -793,7 +905,7 @@ class Searcher:
             * (1.0 - codec.B + codec.B * F.col("min_dl") / F.lit(adl_star))
         )
         rows = (
-            blocks.where(F.col("term") == t_star)
+            self._scan_frame(blocks).where(F.col("term") == t_star)
             .orderBy(ub.desc())
             .limit(nprobe)
             .select("doc_bytes", "tf_bytes", "dl_bytes")
@@ -917,7 +1029,7 @@ class Searcher:
         idfs, blocks, _ = plan
         idfs = _fold_boosts(idfs, boosts)  # ES query-time boost
         scored = self._bm25_scored(
-            self._mask(flat_postings(blocks)), idfs
+            self._mask(flat_postings(self._scan_frame(blocks))), idfs
         )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1080,7 +1192,7 @@ class Searcher:
         if plan is None:
             return _empty_topk(self.spark)
         idfs, blocks, _ = plan
-        flat = self._mask(flat_postings(blocks))
+        flat = self._mask(flat_postings(self._scan_frame(blocks)))
         # per (doc, term) contribution rows, then one aggregation
         per = flat.select(
             "doc_id",
@@ -1170,8 +1282,7 @@ class Searcher:
             groups[pt] = gi
         if not idfs:
             return None
-        blocks = self._term_blocks(list(idfs))
-        return idfs, avgdls, groups, blocks, {t: meta[t] for t in idfs}
+        return idfs, avgdls, groups, _Scan(tuple(idfs)), {t: meta[t] for t in idfs}
 
     def topk_multimatch(
         self,
@@ -1258,7 +1369,7 @@ class Searcher:
         if plan is None:
             return _empty_topk(self.spark)
         idfs, avgdls, groups, blocks, _ = plan
-        flat = self._mask(flat_postings(blocks))
+        flat = self._mask(flat_postings(self._scan_frame(blocks)))
         tmap = F.broadcast(
             self.spark.createDataFrame(
                 [(t, idfs[t], avgdls[t], groups[t]) for t in sorted(idfs)],
@@ -1413,15 +1524,9 @@ class Searcher:
                 excluded=excluded,
             )
         order = sorted(idfs, key=lambda t: (meta[t][0], t))
-        # range-level prune: metadata-only countDistinct over the already
-        # term/bucket-pruned block scan — no byte columns read
-        viable_ranges = (
-            blocks.groupBy("range_id")
-            .agg(F.countDistinct("term").alias("_nt"))
-            .where(F.col("_nt") >= msm)
-            .select("range_id")
-        )
-        blocks = blocks.join(viable_ranges, "range_id", "left_semi")
+        # range-level prune: ranges holding fewer than msm distinct query
+        # terms (block metadata only — no byte columns read)
+        blocks = dataclasses.replace(blocks, min_terms=msm)
         return self._run_range_scorer(
             _make_msm_range_scorer(
                 idfs, self.avgdl, k, self.range_bits, order, msm
@@ -1600,7 +1705,7 @@ class Searcher:
         # this lookup launches no job for an expanded term list
         local = self._run_range_scorer(
             _make_constscore_range_scorer(k, self.range_bits),
-            self._term_blocks(terms), self._term_meta(terms),
+            _Scan(tuple(terms)), self._term_meta(terms),
             allowed=allowed, excluded=excluded, skip_acc=skip_acc,
             label="topk_expanded",
         )
@@ -1937,7 +2042,7 @@ class Searcher:
         slots = [(i, [t]) for i, t in enumerate(fixed)]
         slots.append((len(fixed), sorted(exps)))
         blocks = self._in_rare_ranges(
-            self._term_blocks(sorted(meta)), groups[0], len(groups)
+            _Scan(tuple(sorted(meta))), groups[0], len(groups)
         )
         return self._run_range_scorer(
             _make_multiphrase_range_scorer(
@@ -1949,20 +2054,17 @@ class Searcher:
 
     # ---------------- boolean / filtered / phrase retrieval ----------------
 
-    def _in_rare_ranges(
-        self, blocks: DataFrame, rare: list[str], n_groups: int
-    ) -> DataFrame:
+    @staticmethod
+    def _in_rare_ranges(blocks: _Scan, rare: list[str], n_groups: int) -> _Scan:
         """The range prune of the conjunctive block-max modes: ``blocks``
-        semi-joined to the distinct ``range_id``s of the rarest required
-        term (or or-group) ``rare``, one of ``n_groups`` required groups.
-        Block metadata only, read from ``rare``'s own buckets, so a hot
+        restricted to the doc ranges of the rarest required term (or
+        or-group) ``rare``, one of ``n_groups`` required groups, so a hot
         term's blocks in ranges the rare group never touches drop before
-        the shuffle. Lossless: a range without ``rare`` holds no match.
-        With one group the blocks are returned unchanged."""
+        the scoring (``_Scan``). Lossless: a range without ``rare`` holds
+        no match. With one group the scan is returned unchanged."""
         if n_groups < 2:
             return blocks
-        rare_ranges = self._term_blocks(rare).select("range_id").distinct()
-        return blocks.join(rare_ranges, "range_id", "left_semi")
+        return dataclasses.replace(blocks, rare=tuple(rare))
 
     def _mask(
         self,
@@ -2008,7 +2110,7 @@ class Searcher:
         plan = self._plan(query_text)
         assert plan is not None
         idfs, blocks, _ = plan
-        flat = self._mask(flat_postings(blocks), allowed)
+        flat = self._mask(flat_postings(self._scan_frame(blocks)), allowed)
         scored = self._bm25_scored(flat, idfs, require_n=len(terms))
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -2046,7 +2148,7 @@ class Searcher:
         idfs, blocks, _ = plan
         if len(idfs) < msm:
             return _empty_topk(self.spark)
-        flat = self._mask(flat_postings(blocks), allowed)
+        flat = self._mask(flat_postings(self._scan_frame(blocks)), allowed)
         scored = self._bm25_scored(flat, idfs, min_match=msm)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -2073,7 +2175,7 @@ class Searcher:
             return _empty_topk(self.spark)
         idfs, blocks, _ = plan
         idfs = _fold_boosts(idfs, boosts)
-        flat = self._mask(flat_postings(blocks), allowed)
+        flat = self._mask(flat_postings(self._scan_frame(blocks)), allowed)
         scored = self._bm25_scored(flat, idfs)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -2160,9 +2262,7 @@ class Searcher:
         if any(meta[t][0] == 0 for t in uniq):
             return None
         order = sorted(uniq, key=lambda t: (meta[t][0], t))
-        blocks = self._in_rare_ranges(
-            self._term_blocks(uniq), order[:1], len(order)
-        )
+        blocks = self._in_rare_ranges(_Scan(tuple(uniq)), order[:1], len(order))
         return uniq, meta, order, blocks
 
     def _phrase_ranked(
@@ -2440,7 +2540,7 @@ class Searcher:
                 if min_match > len(idfs):
                     return None
             scored = self._bm25_scored(
-                flat_postings(blocks), idfs,
+                flat_postings(self._scan_frame(blocks)), idfs,
                 require_n=require_n, min_match=min_match,
             )
         elif kind == "match_phrase":
@@ -2934,7 +3034,7 @@ class Searcher:
             return None
         _, blocks, _ = plan
         return self._mask(
-            flat_postings(blocks).select("doc_id"), allowed, excluded
+            flat_postings(self._scan_frame(blocks)).select("doc_id"), allowed, excluded
         ).distinct()
 
     def page(
@@ -3102,7 +3202,7 @@ class Searcher:
         if plan is None:
             return _empty_topk(self.spark)
         idfs, blocks, _ = plan
-        flat = self._mask(flat_postings(blocks), allowed, excluded)
+        flat = self._mask(flat_postings(self._scan_frame(blocks)), allowed, excluded)
         scored = self._bm25_scored(flat, idfs)
         v = self._attr_col(attrs, col).cast("double")
         joined = scored.join(
@@ -3182,7 +3282,7 @@ class Searcher:
         if plan is None:
             return _empty_topk(self.spark)
         idfs, blocks, _ = plan
-        flat = self._mask(flat_postings(blocks), allowed, excluded)
+        flat = self._mask(flat_postings(self._scan_frame(blocks)), allowed, excluded)
         scored = self._bm25_scored(flat, idfs)
         v = self._attr_col(attrs, col).cast("double")
         joined = scored.join(
@@ -3294,7 +3394,7 @@ class Searcher:
         if plan is None:
             return _empty_topk(self.spark)
         idfs, blocks, _ = plan
-        flat = self._mask(flat_postings(blocks), allowed, excluded)
+        flat = self._mask(flat_postings(self._scan_frame(blocks)), allowed, excluded)
         scored = self._bm25_scored(flat, idfs)
         x = self._attr_col(attrs, col).cast("double")
         joined = scored.join(
@@ -3432,7 +3532,7 @@ class Searcher:
                 self._attr_col(attrs, col),
             ).limit(0)
         idfs, blocks, _ = plan
-        flat = self._mask(flat_postings(blocks), allowed, excluded)
+        flat = self._mask(flat_postings(self._scan_frame(blocks)), allowed, excluded)
         scored = self._bm25_scored(flat, idfs)
         v = self._attr_col(attrs, col)
         joined = scored.join(
@@ -3599,7 +3699,7 @@ class Searcher:
             cands.append(sorted(set(cs)))
         terms = sorted({t for cs in cands for t in cs})
         # unigram cf for every candidate + the exact corpus token total
-        cf_rows = self._term_entries(terms).select("term", "cf").collect()
+        cf_rows = _term_rows(self.dictionary, terms).select("term", "cf").collect()
         cf = {r["term"]: float(r["cf"]) for r in cf_rows}
         total = float(
             self.dictionary.agg(F.sum("cf").alias("t")).first()["t"] or 0
@@ -3959,7 +4059,7 @@ class Searcher:
             return empty
         idfs, blocks, meta = plan
         doc_id = int(doc_id)
-        blocks = blocks.where(
+        blocks = self._scan_frame(blocks).where(
             F.col("range_id") == F.lit(doc_id >> self.range_bits)
         )
         flat = self._mask(flat_postings(blocks)).where(
@@ -5038,7 +5138,7 @@ class Searcher:
             return self.spark.createDataFrame([], out_schema)
         idfs, blocks, _ = plan
         scored = self._bm25_scored(
-            self._mask(flat_postings(blocks)), idfs
+            self._mask(flat_postings(self._scan_frame(blocks))), idfs
         )
         hits = scored.join(attrs, "doc_id", "inner").where(v.isNotNull()).select(
             v.cast("string").alias("value"), "doc_id", "score"

@@ -21,7 +21,7 @@ that contract on a data lake:
   (conv_id, turn_idx) key appends a new *segment* (Lucene-style: immutable
   additive postings + a per-segment parquet **tombstone table** of
   superseded doc_ids). Queries mask tombstones at block-decode time: a
-  small table (at most ``query._LOCAL_MAX_TOMBSTONES`` rows) is collected
+  small table (at most ``query._LOCAL_MAX_TOMBSTONES`` rows) is read
   once per Searcher for the driver-side scorer route, the way Lucene's
   near-real-time reopen reads live-docs bitsets in process; a larger one
   stays a DataFrame, cogrouped per doc range. ``compact()`` anti-joins
@@ -32,7 +32,9 @@ that contract on a data lake:
   one parquet footer read on the driver (``IndexStore._read_schema``), and
   the per-segment stats rows are read with pyarrow
   (``IndexStore._rows``): ``load()`` launches no Spark job; jobs run for
-  data only.
+  data only. The frames ``load()`` returns carry a ``StoreFiles`` source,
+  through which a ``Searcher`` reads a small query's term rows and the
+  tombstones with pyarrow too.
 
 * **At-least-once → exactly-once (A15/A16)** — every build stage commits a
   manifest row (stage, partition/bucket, row counts, bytes, status) under
@@ -165,6 +167,110 @@ def _data_files(path: str) -> Iterator[str]:
                 yield os.path.join(dirpath, f)
 
 
+class StoreFiles:
+    """The file term source of a parquet store: the dictionary rows,
+    posting blocks and tombstones that a ``Searcher`` over ``load()``'s
+    frames reads on the driver with pyarrow, with no Spark job. It reads
+    the same ``<table>/seg=N/bucket=B`` files as the frames' scans, and
+    only the buckets of the terms asked for.
+
+    The segment lists and the tombstone files are pinned when the source
+    is made (at ``load()``), as Spark's file index pins a read's files: a
+    segment that a later upsert adds is not read against the old
+    ``n_docs`` and dictionary. A committed segment's bucket files never
+    change, so they are listed on first use and cached."""
+
+    def __init__(self, root: str, segments: dict[str, list[int]], tombstones: list[str]):
+        self.root = root
+        self._segments = segments  # table -> segment ids
+        self._tombstones = tombstones  # tombstone data files
+        self._bucket_files: dict[tuple[str, int], list[str]] = {}
+
+    def _files(self, table: str, terms) -> list[str]:
+        """The data files of ``terms``' buckets in every pinned segment of
+        ``table``, in the order Spark's file scan reads them: largest
+        first (it packs splits by descending length), ties in path
+        order. So both sources hand the kernels the same row order."""
+        from ..functions.hashing import term_bucket
+
+        files = []
+        for b in sorted({term_bucket(t, N_TERM_BUCKETS) for t in terms}):
+            if (table, b) not in self._bucket_files:
+                self._bucket_files[table, b] = [
+                    (os.path.getsize(f), f)
+                    for s in self._segments[table]
+                    for f in _data_files(
+                        os.path.join(self.root, table, f"seg={s:05d}", f"bucket={b}")
+                    )
+                ]
+            files += self._bucket_files[table, b]
+        return [f for _, f in sorted(files, key=lambda sf: (-sf[0], sf[1]))]
+
+    def rows(self, table: str, terms, columns: list[str]):
+        """The rows of ``terms`` in ``table`` (``postings`` or
+        ``dictionary``) as one Arrow table of ``columns``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        wanted = pa.array(sorted(set(terms)), pa.string())
+        read = list(dict.fromkeys(["term", *columns]))
+        files = self._files(table, terms)
+        if not files:  # no segment holds these buckets: the empty table
+            first = next(_data_files(os.path.join(self.root, table)))
+            files, wanted = [first], pa.array([], pa.string())
+        parts = []
+        for f in files:
+            t = pq.read_table(f, columns=read)
+            t = t.filter(pc.is_in(t["term"], value_set=wanted)).select(columns)
+            # every field nullable, as the frames read them: a Spark
+            # write keeps non-null fields required, a driver write not
+            parts.append(pa.Table.from_arrays(t.columns, names=columns))
+        return pa.concat_tables(parts)
+
+    def blocks(self, terms, columns: list[str]):
+        """The posting blocks of ``terms``, ``columns`` only, as pandas:
+        the columns, dtypes and row order of the frame source's Arrow
+        collect."""
+        return self.rows("postings", terms, columns).to_pandas()
+
+    def meta(self, terms) -> dict[str, tuple[int, int, int]]:
+        """term → (df, max_tf, min_dl) over every pinned segment, combined
+        as the loaded dictionary frame's aggregate combines them (df
+        summed, max of ``max_tf``, min of ``min_dl``). Absent terms are
+        left out."""
+        t = self.rows("dictionary", terms, ["term", "df", "max_tf", "min_dl"])
+        agg = t.group_by("term").aggregate(
+            [("df", "sum"), ("max_tf", "max"), ("min_dl", "min")]
+        )
+        return {
+            term: (int(df), int(mx), int(mn))
+            for term, df, mx, mn in zip(
+                *(agg[c].to_pylist() for c in ("term", "df_sum", "max_tf_max", "min_dl_min"))
+            )
+        }
+
+    def dead_ids(self, cap: int):
+        """The tombstoned doc_ids, or None when the tombstone files hold
+        more than ``cap`` rows: the count comes from the parquet footers,
+        so an over-cap table is never read."""
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        if sum(pq.ParquetFile(f).metadata.num_rows for f in self._tombstones) > cap:
+            return None
+        return np.concatenate(
+            [pq.read_table(f, columns=["doc_id"])["doc_id"].to_numpy() for f in self._tombstones]
+            or [np.empty(0, np.int64)]
+        )
+
+
+def store_files(df: DataFrame | None) -> StoreFiles | None:
+    """The file source ``IndexStore.load()`` attached to ``df``, if any
+    (a frame derived from it is a new object and carries none)."""
+    return None if df is None else vars(df).get("_store_files")
+
+
 def superseded_doc_ids(existing_doc_stats: DataFrame, new_keys: DataFrame) -> DataFrame:
     """Old doc_ids whose (conv_id, turn_idx) key reappears in the new batch
     (``new_keys`` columns: k1, k2).
@@ -294,6 +400,19 @@ class Layout:
 
 @dataclass
 class LoadedIndex:
+    """A stored index as ``IndexStore.load()`` found it: lazy frames over
+    the files of the segments present at load time, and the totals of
+    those segments.
+
+    On a parquet store ``postings``, ``dictionary`` and ``deleted_df``
+    carry a ``StoreFiles`` source over the same files: a ``Searcher``
+    built from them reads small queries' term rows and tombstones on the
+    driver, with no Spark job.
+
+    A LoadedIndex is invalid after ``merge_segments``, ``maybe_merge`` or
+    ``compact``: they delete the segment files it reads, for its frames
+    and its file source alike. Load the store again after them."""
+
     docs: DataFrame
     doc_stats: DataFrame
     corpus_stats: DataFrame
@@ -309,9 +428,10 @@ class LoadedIndex:
     # the index's persisted analyzer (legacy stores: "simple")
     analyzer: str = "simple"
     # tombstones as a TABLE (None = no deletes); load() runs no job for
-    # it. Queries collect a table of at most query._LOCAL_MAX_TOMBSTONES
-    # rows once per Searcher for the local scorer route, and cogroup /
-    # anti-join a larger one without collecting it.
+    # it. The local scorer route reads a table of at most
+    # query._LOCAL_MAX_TOMBSTONES rows once per Searcher (from the files
+    # on a parquet store, else by a collect); a larger one is cogrouped /
+    # anti-joined without reaching the driver.
     deleted_df: DataFrame | None = None
     # multi-field indexes: per-field (field, doc_count, avgdl, total_tokens)
     # merged across segments; None for single-field indexes. Pass to
@@ -937,9 +1057,9 @@ class IndexStore:
         """All tombstoned doc_ids as a DataFrame (None if no deletes),
         read with ``_read_schema`` (no Spark job). Written by upsert(),
         anti-joined by compact(); at query time a table of at most
-        ``query._LOCAL_MAX_TOMBSTONES`` rows is collected once per
-        Searcher for the local scorer route, a larger one is cogrouped
-        per doc range and never collected."""
+        ``query._LOCAL_MAX_TOMBSTONES`` rows is read once per Searcher
+        for the local scorer route, a larger one is cogrouped per doc
+        range and never collected."""
         paths = self._tomb_segments()
         if not paths:
             return None
@@ -1209,8 +1329,11 @@ class IndexStore:
             )
         n_docs = layout.n_docs
         avgdl = (layout.total_tokens / n_docs) if n_docs else 0.0
+        # the file source's segment lists, pinned with the frames' reads
+        segments = {t: self._table_segments(t) for t in ("dictionary", "postings")}
         dictionary = self._merged_dictionary()
         postings = self._read_all("postings")
+        deleted_df = self.tombstones_df()
         # multi-field index: merge per-field stats across segments
         # (doc_count/total_tokens sum; avgdl recomputed from the sums)
         field_stats = None
@@ -1244,6 +1367,15 @@ class IndexStore:
                     "is_default",
                 )
             )
+        if not self._use_iceberg():
+            # the frames a Searcher receives carry the file source (see
+            # ``store_files``): Searcher(loaded.postings, ...) finds it
+            files = StoreFiles(self.root, segments, [
+                f for d in self._tomb_segments() for f in _data_files(d)
+            ])
+            for frame in (dictionary, postings, deleted_df):
+                if frame is not None:
+                    frame._store_files = files
         return LoadedIndex(
             docs=docs,
             doc_stats=doc_stats,
@@ -1252,7 +1384,7 @@ class IndexStore:
             postings=postings,
             n_docs=n_docs,
             avgdl=avgdl,
-            deleted_df=self.tombstones_df(),
+            deleted_df=deleted_df,
             # high-water mark carried in the 1-row-per-segment stats table
             # (build.py corpus_stats) — no max(doc_id) scan of docs
             next_doc_id=layout.next_doc_id,
@@ -1263,7 +1395,10 @@ class IndexStore:
 
     def _merged_dictionary(self) -> DataFrame:
         """df/cf summed across segments (Lucene-style: includes deleted
-        docs until compaction — matches ES 7 scoring behavior)."""
+        docs until compaction — matches ES 7 scoring behavior). A
+        Searcher over a loaded parquet store looks its query terms up
+        with ``StoreFiles.meta`` instead, the same sums on the driver;
+        this frame serves the term expansions and the DataFrame paths."""
         d = self._read_all("dictionary")
         return d.groupBy("term", "bucket").agg(
             F.sum("df").alias("df"),
@@ -1372,6 +1507,11 @@ class IndexStore:
             rows = None
             if not self._use_iceberg():
                 cap = min(self._local_max_docs, _LOCAL_BUILD_MAX_DOCS)
+                # checkpointed across the collect: a batch over the cap is
+                # then built (and its superseded keys found) from the
+                # deduped rows the collect computed, not by a second key
+                # cast and last-write-wins shuffle over the source
+                batch = batch.localCheckpoint(eager=False)
                 rows = batch.limit(cap + 1).toArrow()
             in_process = rows is not None and self._build_local(rows.num_rows)
             if in_process:

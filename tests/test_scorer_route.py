@@ -1,17 +1,22 @@
 """Scorer transport routing (Searcher._run_range_scorer): a query whose
 estimated block count is below the threshold, that has no allow- or
 deny-list and whose tombstone table holds at most the tombstone cap is
-scored on the driver over collected blocks (and collected tombstones);
-every other query runs the grouped or cogrouped pandas-UDF stage. Both
-routes run the same kernels behind the same masking body, so results
-(doc_id and the exact score) and the skipped-block total must be
-identical.
+scored on the driver over blocks (and tombstones) read from the term
+source — the store's files for a loaded store, collected frames
+otherwise; every other query runs the grouped or cogrouped pandas-UDF
+stage. Both routes and both sources run the same kernels behind the
+same masking body, so results (doc_id and the exact score) and the
+skipped-block total must be identical.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import os
+
 import pytest
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from rabbit_index_ingest_spark.analysis import py_tokenize
 from rabbit_index_ingest_spark.datagen import VOCAB, transcripts_df, transcripts_pandas
@@ -21,8 +26,9 @@ from rabbit_index_ingest_spark.index.query import (
     Searcher,
     _LOCAL_MAX_BLOCKS,
     _estimated_blocks,
+    _FrameSource,
 )
-from rabbit_index_ingest_spark.index.store import IndexStore
+from rabbit_index_ingest_spark.index.store import IndexStore, StoreFiles, store_files
 
 N_CONV = 300
 RANGE_BITS = 8  # several doc ranges, so the local route groups too
@@ -38,10 +44,55 @@ def corpus(spark):
         spark, transcripts_df(spark, n_conv=N_CONV),
         range_bits=RANGE_BITS, block_size=BLOCK_SIZE,
     )
-    # a bigram that occurs in the corpus, for the positional kernels
-    bigram = " ".join(py_tokenize(transcripts_pandas(N_CONV)["text"].iloc[3])[:2])
-    yield built, bigram
+    yield built, _bigram()
     built.release()
+
+
+def _bigram() -> str:
+    """A bigram that occurs in the corpus (conversation 0), for the
+    positional kernels."""
+    return " ".join(py_tokenize(transcripts_pandas(N_CONV)["text"].iloc[3])[:2])
+
+
+@pytest.fixture(scope="module")
+def stored(spark, tmp_path_factory):
+    """The corpus saved as a two-segment store — conversations 0-199 in
+    segment 0, the rest numbered on in segment 1, so one doc range holds
+    blocks of both — with the ``_dead`` ids deleted, and loaded.
+    ``load()`` rejects a range layout other than the engine's, so it
+    loads this one with its guard set to the module's ``RANGE_BITS``."""
+    from rabbit_index_ingest_spark.index import store as store_mod
+
+    t = transcripts_df(spark, n_conv=N_CONV)
+    first = F.col("conv_id") < f"conv-{200:08d}"
+    store = IndexStore(spark, str(tmp_path_factory.mktemp("parity") / "idx"))
+    n = 0
+    for seg, part in enumerate((t.where(first), t.where(~first))):
+        built = build_index(
+            spark, part, range_bits=RANGE_BITS, block_size=BLOCK_SIZE, id_base=n
+        )
+        store.save(built, segment=seg)
+        n += built.n_docs
+    assert n % (1 << RANGE_BITS)  # segment 1 starts inside a range
+    dead_df, dead = _dead(spark)
+    store.delete_matching(dead_df)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(store_mod, "RANGE_BITS", RANGE_BITS)
+        loaded = store.load()
+    assert store.segments() == [0, 1] and loaded.n_docs == n
+    return loaded, dead
+
+
+def _frames_only(loaded):
+    """``loaded`` with its frames as new objects over the same plans: no
+    file source, so a Searcher over them takes the DataFrame source."""
+    def same(df):
+        return None if df is None else type(df)(df._jdf, df.sparkSession)
+
+    return dataclasses.replace(
+        loaded, postings=same(loaded.postings), dictionary=same(loaded.dictionary),
+        deleted_df=same(loaded.deleted_df),
+    )
 
 
 def _searcher(spark, built, route: int | None, **kw) -> Searcher:
@@ -120,28 +171,62 @@ def _dead(spark) -> tuple[DataFrame, set[int]]:
     return spark.createDataFrame([(i,) for i in sorted(ids)], "doc_id long"), ids
 
 
-def test_routes_agree_for_every_kernel(spark, corpus):
-    """Every mode, without and with a tombstone table (one doc range of
-    it all dead): identical rows and skip totals on both routes; the
-    local route plans no pandas stage, the distributed one a grouped
-    stage, or a cogrouped one over the tombstones."""
-    built, bigram = corpus
-    assert built.n_docs > 2 << RANGE_BITS
-    dead_df, dead = _dead(spark)
-    for kw, stage in (({}, "FlatMapGroupsInPandas"),
-                      ({"deleted_df": dead_df}, "FlatMapCoGroupsInPandas")):
-        local = _searcher(spark, built, LOCAL, **kw)
-        dist = _searcher(spark, built, DISTRIBUTED, **kw)
-        for name, fn in _modes(bigram).items():
-            ldf, lrows, lskip = _run(spark, local, fn)
+def test_routes_agree_for_every_kernel(spark, stored):
+    """Every mode on a two-segment store, without and with its tombstone
+    table (one doc range of it all dead), on the local route over the
+    file source and over the DataFrame source and on the distributed
+    route: identical rows and skip totals. The local routes plan no
+    pandas stage, the distributed one a grouped stage, or a cogrouped one
+    over the tombstones."""
+    loaded, dead = stored
+    frames = _frames_only(loaded)
+    assert loaded.n_docs > 2 << RANGE_BITS
+    for tombstones, stage in ((False, "FlatMapGroupsInPandas"),
+                              (True, "FlatMapCoGroupsInPandas")):
+        def make(idx, route):
+            return _searcher(
+                spark, idx, route, deleted_df=idx.deleted_df if tombstones else None
+            )
+
+        files, frame, dist = make(loaded, LOCAL), make(frames, LOCAL), make(loaded, DISTRIBUTED)
+        assert isinstance(files._source, StoreFiles)
+        assert isinstance(frame._source, _FrameSource)
+        for name, fn in _modes(_bigram()).items():
+            fdf, frows, fskip = _run(spark, files, fn)
+            ldf, lrows, lskip = _run(spark, frame, fn)
             ddf, drows, dskip = _run(spark, dist, fn)
-            assert lrows, f"{name}: fixture query matched nothing"
-            assert lrows == drows, (name, stage)
-            assert lskip == dskip, (name, stage, lskip, dskip)
+            assert frows, f"{name}: fixture query matched nothing"
+            assert frows == lrows == drows, (name, stage)
+            assert fskip == lskip == dskip, (name, stage, fskip, lskip, dskip)
+            assert "GroupsInPandas" not in _plan(fdf), name
             assert "GroupsInPandas" not in _plan(ldf), name
             assert stage in _plan(ddf), name
-            if kw:
-                assert not {d for d, _ in lrows} & dead, name
+            if tombstones:
+                assert not {d for d, _ in frows} & dead, name
+
+
+def test_file_source_reads_what_the_frames_collect(spark, stored):
+    """The file source hands the kernels the DataFrame source's inputs:
+    the same block rows in the same order, columns and dtypes (bytes for
+    the binary columns), the same combined term stats over both segments
+    and the same tombstone ids."""
+    import numpy as np
+    import pandas as pd
+
+    from rabbit_index_ingest_spark.index.query import _SCORE_COLS
+
+    loaded, dead = stored
+    files = store_files(loaded.postings)
+    frame = _FrameSource(loaded.postings, loaded.dictionary, loaded.deleted_df)
+    terms = [VOCAB[0], VOCAB[1], VOCAB[5], VOCAB[9], "absentterm"]
+    cols = [*_SCORE_COLS, "pos_bytes"]
+    got, want = files.blocks(terms, cols), frame.blocks(terms, cols)
+    pd.testing.assert_frame_equal(got, want)
+    assert type(got["doc_bytes"].iloc[0]) is bytes
+    assert files.meta(terms) == frame.meta(terms)
+    assert "absentterm" not in files.meta(terms)
+    assert set(files.dead_ids(10**6).tolist()) == dead
+    assert np.array_equal(np.sort(files.dead_ids(10**6)), np.sort(frame.dead_ids(10**6)))
 
 
 def test_or_query_skips_blocks_on_both_routes(spark, corpus):
@@ -222,6 +307,47 @@ def test_tombstone_cap_boundary_picks_the_route(spark, corpus, monkeypatch):
     assert results[0] == results[1]
 
 
+def test_stored_tombstone_cap_boundary_picks_the_route(spark, stored, monkeypatch):
+    """The file source's twin of the test above: a tombstone table of
+    exactly the cap's rows is read once per Searcher, each file once, and
+    its queries take the local route; one row over the cap, the files'
+    footers alone send the queries to the cogrouped stage — no tombstone
+    file is read and nothing is collected, by the first query or later
+    ones."""
+    import pyarrow.parquet as pq
+
+    loaded, dead = stored
+    q = f"{VOCAB[0]} {VOCAB[3]}"
+    tomb_files = store_files(loaded.deleted_df)._tombstones
+    assert tomb_files
+    reads, collects = [], []
+    read_table = pq.read_table
+
+    def spy_read(source, *args, **kwargs):
+        reads.append(str(source))
+        return read_table(source, *args, **kwargs)
+
+    cls = type(loaded.postings)
+    to_arrow, to_pandas = cls.toArrow, cls.toPandas
+    monkeypatch.setattr(pq, "read_table", spy_read)
+    monkeypatch.setattr(cls, "toArrow", lambda self: collects.append(1) or to_arrow(self))
+    monkeypatch.setattr(cls, "toPandas", lambda self: collects.append(1) or to_pandas(self))
+    results = []
+    for cap, cogrouped in ((len(dead), False), (len(dead) - 1, True)):
+        s = _searcher(spark, loaded, LOCAL, deleted_df=loaded.deleted_df)
+        s._local_max_tombstones = cap
+        reads.clear()
+        plans = [_plan(s.topk_blockmax(q, 10)), _plan(s.topk_phrase(q, 10))]
+        assert not collects, cap
+        tomb_reads = sorted(r for r in reads if f"{os.sep}_tombstones{os.sep}" in r)
+        assert tomb_reads == ([] if cogrouped else sorted(tomb_files)), cap
+        for plan in plans:
+            assert ("FlatMapCoGroupsInPandas" in plan) == cogrouped, cap
+            assert "FlatMapGroupsInPandas" not in plan, cap
+        results.append(s.topk_blockmax(q, 10).collect())
+    assert results[0] == results[1]
+
+
 def test_threshold_boundary_picks_the_route(spark, corpus):
     """At the threshold the query runs the grouped pandas stage; one block
     below it, the local route."""
@@ -257,14 +383,44 @@ def test_default_threshold_routes_a_large_query_distributed(spark, corpus):
 
 
 def test_local_collect_is_bucket_pruned_and_labelled(spark, monkeypatch, tmp_path):
-    """The local route's block collect scans only the query terms'
-    storage partitions (PartitionFilters on ``bucket``) and runs under a
+    """The local route reads only the query terms' storage partitions. On
+    a loaded store the query opens only those terms' ``bucket=B`` files
+    (dictionary and postings) and runs no Spark job. Over a BuiltIndex's
+    frames its one block collect filters on ``bucket`` and runs under a
     job description naming the query and the route."""
+    import pyarrow.parquet as pq
+    from test_store_and_streaming import _jobs_of
+
+    from rabbit_index_ingest_spark.functions.hashing import term_bucket
+    from rabbit_index_ingest_spark.index.build import N_TERM_BUCKETS
+
+    t = transcripts_df(spark, n_conv=30)
     store = IndexStore(spark, str(tmp_path / "idx"))
-    store.save(build_index(spark, transcripts_df(spark, n_conv=30)), segment=0)
+    store.save(build_index(spark, t), segment=0)
     loaded = store.load()
+    q = f"{VOCAB[0]} {VOCAB[1]} {VOCAB[2]} {VOCAB[4]}"
+    opened = []
+    read_table = pq.read_table
+
+    def spy_read(source, *args, **kwargs):
+        opened.append(str(source))
+        return read_table(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", spy_read)
+    s = Searcher(
+        spark, loaded.postings, loaded.dictionary, loaded.n_docs, loaded.avgdl
+    )
+    rows = []
+    jobs = _jobs_of(spark, lambda: rows.append(s.topk_blockmax(q, 10).collect()))
+    assert jobs == {}, jobs
+    assert len(rows[0]) == 10
+    buckets = {f"bucket={term_bucket(w, N_TERM_BUCKETS)}" for w in q.split()}
+    assert {p.split(os.sep)[-4] for p in opened} == {"dictionary", "postings"}
+    assert {p.split(os.sep)[-2] for p in opened} == buckets, opened
+
+    built = build_index(spark, t)
     seen = []
-    cls = type(loaded.postings)  # the session's DataFrame implementation
+    cls = type(built.postings)  # the session's DataFrame implementation
     orig = cls.toPandas
 
     def spy(self):
@@ -277,15 +433,12 @@ def test_local_collect_is_bucket_pruned_and_labelled(spark, monkeypatch, tmp_pat
         return orig(self)
 
     monkeypatch.setattr(cls, "toPandas", spy)
-    s = Searcher(
-        spark, loaded.postings, loaded.dictionary, loaded.n_docs, loaded.avgdl
-    )
-    q = f"{VOCAB[0]} {VOCAB[1]} {VOCAB[2]} {VOCAB[4]}"
-    s.topk_blockmax(q, 10).collect()
+    s = Searcher(spark, built.postings, built.dictionary, built.n_docs, built.avgdl)
+    assert s.topk_blockmax(q, 10).collect() == rows[0]
+    built.release()
     assert len(seen) == 1
     plan, desc = seen[0]
-    seg = plan[plan.index("PartitionFilters"):][:500]
-    assert "bucket" in seg, seg
+    assert "bucket#" in plan[plan.index("InMemoryTableScan"):][:800], plan
     assert desc == "topk_blockmax k=10 terms=4 route=local"
     # the caller's description is restored afterwards
     assert spark.sparkContext.getLocalProperty("spark.job.description") is None

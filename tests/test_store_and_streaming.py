@@ -730,6 +730,98 @@ def test_load_reads_each_table_once_and_lists_on_driver(spark, root):
     assert [r["doc_id"] for r in df.collect()] == [L.n_docs - 1]
 
 
+def test_small_queries_on_a_loaded_store_run_no_job(spark, root):
+    """A Searcher over a loaded parquet store reads term stats, posting
+    blocks and tombstones from the store's files, so a small query runs
+    no Spark job: the freshness probe (``load()``, a fresh Searcher and a
+    top-10 OR on a two-segment tombstoned store) and, on that Searcher,
+    a 4-term OR with k=100, a 2-term AND and a hot-bigram phrase. Their
+    rows equal those of a Searcher over the same frames without the
+    file source."""
+    from rabbit_index_ingest_spark.analysis import py_tokenize
+    from rabbit_index_ingest_spark.datagen import VOCAB
+
+    t = transcripts_df(spark, n_conv=40)
+    store = IndexStore(spark, root)
+    store.save(build_index(spark, t))
+    store.upsert(
+        t.where(F.col("turn_idx") == 0).limit(10)
+        .withColumn("text", F.concat("text", F.lit(" xenolith")))
+    )
+    assert store.segments() == [0, 1] and store.tombstones()
+    bigram = " ".join(py_tokenize(transcripts_pandas(40)["text"].iloc[3])[:2])
+    queries = {
+        "probe": lambda s: s.topk_blockmax("xenolith", 10),
+        "or": lambda s: s.topk_blockmax(" ".join(VOCAB[i] for i in (0, 6, 17, 33)), 100),
+        "and": lambda s: s.topk_blockmax_and(f"{VOCAB[0]} {VOCAB[7]}", 10),
+        "phrase": lambda s: s.topk_phrase(bigram, 10),
+    }
+
+    def searcher(L):
+        return Searcher(
+            spark, L.postings, L.dictionary, L.n_docs, L.avgdl,
+            deleted_df=L.deleted_df, analyzer=L.analyzer,
+        )
+
+    got = {}
+
+    def probe():
+        L = store.load()
+        got["searcher"] = searcher(L)
+        got["probe"] = queries["probe"](got["searcher"]).collect()
+
+    assert _jobs_of(spark, probe) == {}
+    for name in ("or", "and", "phrase"):
+        jobs = _jobs_of(
+            spark, lambda: got.__setitem__(name, queries[name](got["searcher"]).collect())
+        )
+        assert jobs == {}, (name, jobs)
+    L = store.load()
+    same = type(L.postings)
+    frames = Searcher(
+        spark, same(L.postings._jdf, spark), same(L.dictionary._jdf, spark),
+        L.n_docs, L.avgdl, deleted_df=same(L.deleted_df._jdf, spark),
+    )
+    for name, fn in queries.items():
+        assert got[name], name
+        assert fn(frames).collect() == got[name], name
+
+
+def test_spark_build_route_dedups_the_batch_once(spark, tmp_path):
+    """On the Spark build route an upsert computes its deduped batch
+    once: the collect that picks the route caches it, so the build and
+    the superseded-id join read the cached rows instead of casting and
+    shuffling the source again. A Python UDF over the source counts its
+    row evaluations: one per row."""
+    store = IndexStore(spark, str(tmp_path / "idx"))
+    store.save(build_index(spark, transcripts_df(spark, n_conv=10)))
+    store._local_max_docs = 0  # the Spark build and write
+    evals = spark.sparkContext.accumulator(0)
+
+    def seen(text):
+        evals.add(1)
+        return text
+
+    rows = [
+        ("conv-00000001", 0, "xenolith one"),
+        ("conv-00000001", 0, "xenolith two"),
+        ("conv-00099999", 0, "gryphon"),
+    ]
+    batch = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, text string"
+    ).withColumn("text", F.udf(seen, "string")("text"))
+    assert store.upsert(batch) == 1
+    assert evals.value == len(rows)
+    L = store.load()
+    s = Searcher(spark, L.postings, L.dictionary, L.n_docs, L.avgdl, deleted_df=L.deleted_df)
+    assert len(store.tombstones()) == 1
+    hits = [r["doc_id"] for r in s.topk_blockmax("xenolith", 10).collect()]
+    texts = {
+        r["doc_id"]: r["text"] for r in L.docs.where(F.col("doc_id").isin(hits)).collect()
+    }
+    assert list(texts.values()) == ["xenolith two"]
+
+
 def _schema_store(spark, root, kind):
     """A two-segment tombstoned store of the ``kind`` the schema parity
     test covers: driver-written, Spark-written, multi-field,
