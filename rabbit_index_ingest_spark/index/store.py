@@ -288,6 +288,40 @@ def superseded_doc_ids(existing_doc_stats: DataFrame, new_keys: DataFrame) -> Da
     ).select("doc_id")
 
 
+def _last_write_wins(raw, pick: list[str], content: dict[str, str]):
+    """Driver twin of an upsert's Spark pick,
+    ``groupBy(conv_id, turn_idx).agg(max(struct(*pick)))``: of each key's
+    rows in the Arrow table ``raw``, the one whose ``pick`` columns are
+    greatest, compared in order as Spark orders a struct (nulls
+    smallest, strings by UTF-8 bytes); null keys form one group, as in
+    Spark. Returns conv_id, turn_idx and each field ``f`` read from its
+    column ``content[f]``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys = ["conv_id", "turn_idx"]
+    raw = raw.take(pc.sort_indices(
+        raw, sort_keys=[(c, "ascending") for c in keys + pick],
+        null_placement="at_start",
+    ))
+    # each key is one run of rows, its greatest pick last
+    n = raw.num_rows
+    last = np.ones(n, dtype=bool)
+    if n > 1:
+        same = np.ones(n - 1, dtype=bool)
+        for c in keys:
+            a, b = raw[c].slice(0, n - 1), raw[c].slice(1)
+            eq = pc.or_(pc.fill_null(pc.equal(a, b), False), pc.and_(pc.is_null(a), pc.is_null(b)))
+            same &= eq.to_numpy(zero_copy_only=False)
+        last[:-1] = ~same
+    raw = raw.filter(pa.array(last))
+    return pa.table({
+        "conv_id": raw["conv_id"], "turn_idx": raw["turn_idx"],
+        **{f: raw[c] for f, c in content.items()},
+    })
+
+
 def _doc_id_stats(built: BuiltIndex) -> list:
     """Aggregates over a docs frame for ``_check_doc_ids``: rows, non-null
     ids, min and max id, and the sum and sum of squares of ``doc_id -
@@ -1425,26 +1459,41 @@ class IndexStore:
         append its tables, and tombstone the superseded old doc_ids. Old
         segments are never rewritten (cheap, atomic-per-table); queries
         mask tombstones. Returns the new segment id (-1 for an empty
-        batch).
+        batch). A store with no segment takes the same path: its first
+        upsert builds segment 0 from ``id_base`` 0 with the settings of
+        the empty ``_layout()``, and supersedes nothing (no tombstone
+        file).
 
-        Build route (``_build_local``), decided once on the deduped batch,
-        which is collected over Arrow up to the in-process cap + 1 rows: a
-        batch within the cap is built in process
-        (``build_index_arrow``) and its superseded ids are one semi-join
-        of the docs' keys with the collected keys; a larger batch, or any
-        batch of an Iceberg store, runs the Spark build, and its
-        superseded set goes DataFrame→parquet without touching the
-        driver, so a 10^9-delete re-ingestion is fine.
+        Build route (``_build_local``): the batch's keys (cast to the
+        store's key types in Spark), ``ts`` and content columns are
+        checkpointed as they come, with no shuffle, and collected over
+        Arrow up to the in-process cap + 1 rows. Within the cap the
+        last-write-wins pick runs on the driver (``_last_write_wins``)
+        and the batch is built in process (``build_index_arrow``). Over
+        the cap, the pick is Spark's aggregate over the checkpointed
+        rows, checkpointed in turn and collected the same way, and the
+        route is decided on its count; so the source and the aggregate
+        each run once, whichever route follows. A deduped batch over the
+        cap, and any batch of an Iceberg store, runs the Spark build.
+
+        Superseded ids (old doc_ids whose key reappears in the batch):
+        after an in-process build into a store of at most
+        ``_local_max_docs`` docs (its ``corpus_stats`` n_docs), the docs
+        files' key columns are read with pyarrow and semi-joined with the
+        batch's keys on the driver (``_superseded_local``), so such an
+        upsert runs one Spark job: the batch's collect. Otherwise a Spark
+        semi-join of the docs' keys goes DataFrame→parquet without
+        touching the driver, so a 10^9-delete re-ingestion is fine. Both
+        read the docs before the new segment lands.
 
         Fixed driver cost is kept minimal (round-3 verdict item 5): upsert
         needs only the id high-water mark + the persisted settings (the
         stats rows, read on the driver by ``_layout`` and
-        ``_field_info``) and a lazy key projection of the docs table —
-        never the full ``load()`` (dictionary/postings/tombstone frames
-        are unused), and the tombstone count is read off the write itself
-        instead of a separate re-read + count() job. So every Spark job
-        an upsert launches runs under an ``upsert seg=N …`` (or ``save
-        seg=N …``) description.
+        ``_field_info``) and the docs' key types (one footer read) —
+        never the full ``load()`` — and the tombstone count is read off
+        the write itself instead of a separate re-read + count() job. So
+        every Spark job an upsert launches runs under an ``upsert seg=N
+        …`` (or ``save seg=N …``) description.
         """
         # rebuild segments with the store's field layout (fields + default
         # from the persisted field_stats table)
@@ -1454,19 +1503,18 @@ class IndexStore:
         # follow the index's settings — a positionless index must not
         # silently become mixed-format after an upsert (round-3 ADVICE)
         layout = self._layout()
-        existing_keys = self._read_all("docs").select(
-            "doc_id", "conv_id", "turn_idx"
-        )
-        # normalize batch KEY dtypes to the store's schema: a batch
-        # carrying e.g. turn_idx as long on an int store would write a
-        # segment whose parquet physical type (INT64) conflicts with the
-        # existing INT32 files and make the whole docs table unreadable
-        # (partition discovery requires one physical type per column)
-        store_types = {f.name: f.dataType for f in existing_keys.schema.fields}
-        for batch_col, store_col in ((id_col, "conv_id"), (order_col, "turn_idx")):
-            new_turns = new_turns.withColumn(
-                batch_col, F.col(batch_col).cast(store_types[store_col])
-            )
+        segs = self.segments()
+        keys = [F.col(id_col), F.col(order_col)]
+        if segs:
+            # normalize batch KEY dtypes to the store's schema: a batch
+            # carrying e.g. turn_idx as long on an int store would write a
+            # segment whose parquet physical type (INT64) conflicts with
+            # the existing INT32 files and make the whole docs table
+            # unreadable (partition discovery requires one physical type
+            # per column). The cast runs in Spark, ahead of the
+            # checkpoint, so ANSI overflow still raises there.
+            types = self._read_schema([self._path("docs", s) for s in segs])
+            keys = [k.cast(types[c].dataType) for k, c in zip(keys, ("conv_id", "turn_idx"))]
         # in-batch last-write-wins: the reference applies messages one at a
         # time, so a batch carrying the same (conv_id, turn_idx) twice must
         # leave exactly ONE live version. Deterministic pick: max (ts,
@@ -1482,37 +1530,43 @@ class IndexStore:
                 f"upsert batch is missing content column(s) {missing}; "
                 f"this index's scored fields are {tgt_cols}"
             )
-        pick_cols = [
-            F.col(c).alias(f"_c{i}") for i, c in enumerate(tgt_cols)
-        ]
-        if "ts" in new_turns.columns:
-            pick_cols.insert(0, F.col("ts"))
-        batch = (
-            new_turns.groupBy(id_col, order_col)
-            .agg(F.max(F.struct(*pick_cols)).alias("_m"))
-            .select(
-                F.col(id_col).alias("conv_id"),
-                F.col(order_col).alias("turn_idx"),
-                *[
-                    F.col(f"_m._c{tgt_cols.index(c)}").alias(f)
-                    for f, c in src.items()
-                ],
-            )
+        has_ts = "ts" in new_turns.columns
+        pick = ["ts"] * has_ts + [f"_c{i}" for i in range(len(tgt_cols))]
+        raw = new_turns.select(
+            keys[0].alias("conv_id"), keys[1].alias("turn_idx"),
+            *[F.col("ts")] * has_ts,
+            *[F.col(c).alias(f"_c{i}") for i, c in enumerate(tgt_cols)],
         )
+        content = {f: f"_c{tgt_cols.index(c)}" for f, c in src.items()}
+
+        def deduped(frame: DataFrame) -> DataFrame:
+            return (
+                frame.groupBy("conv_id", "turn_idx")
+                .agg(F.max(F.struct(*pick)).alias("_m"))
+                .select("conv_id", "turn_idx", *[
+                    F.col(f"_m.{c}").alias(f) for f, c in content.items()
+                ])
+            )
+
         settings = dict(
             default_field=default_field, positions=layout.positions,
             analyzer=layout.analyzer,
         )
         with _job_description(self.spark, f"upsert seg={seg} build"):
-            rows = None
-            if not self._use_iceberg():
+            if self._use_iceberg():
+                rows, batch = None, deduped(raw)
+            else:
                 cap = min(self._local_max_docs, _LOCAL_BUILD_MAX_DOCS)
-                # checkpointed across the collect: a batch over the cap is
-                # then built (and its superseded keys found) from the
-                # deduped rows the collect computed, not by a second key
-                # cast and last-write-wins shuffle over the source
-                batch = batch.localCheckpoint(eager=False)
+                # checkpointed across each collect: over the cap, the
+                # pick and then the build read the rows the collect
+                # computed instead of evaluating the source again
+                batch = raw.localCheckpoint(eager=False)
                 rows = batch.limit(cap + 1).toArrow()
+                if rows.num_rows <= cap:
+                    rows = _last_write_wins(rows, pick, content)
+                else:
+                    batch = deduped(batch).localCheckpoint(eager=False)
+                    rows = batch.limit(cap + 1).toArrow()
             in_process = rows is not None and self._build_local(rows.num_rows)
             if in_process:
                 built = build_index_arrow(
@@ -1530,30 +1584,50 @@ class IndexStore:
             self.log_manifest(f"seg{seg}/upsert", "done", new_tombstones=0)
             return -1
         # superseded: old doc_ids whose key reappears in the new batch
-        if in_process:
-            # the batch's keys are on the driver: one broadcast semi-join
-            # of the docs' keys, collected before the segment lands
-            with _job_description(self.spark, f"upsert seg={seg} tombstones"):
-                keys = self.spark.createDataFrame(
-                    rows.select(["conv_id", "turn_idx"]).rename_columns(["k1", "k2"])
-                )
-                superseded = superseded_doc_ids(
-                    existing_keys, F.broadcast(keys)
-                ).toArrow()
+        if not segs:
+            superseded = None  # a first segment supersedes nothing
+        elif in_process and self._local(layout.n_docs):
+            superseded = self._superseded_local(segs, rows)
         else:
-            new_keys = built.doc_stats.select(
+            new_keys = (batch if in_process else built.doc_stats).select(
                 F.col("conv_id").alias("k1"), F.col("turn_idx").alias("k2")
             )
+            existing_keys = self._read_all("docs").select("doc_id", "conv_id", "turn_idx")
             superseded = superseded_doc_ids(existing_keys, new_keys)
         local = in_process or self._local(built.n_docs)
         self.save(built, segment=seg)
-        # the tombstones follow their segment's write route; their count
-        # is read off the write — no separate re-read + count() job
-        # (round-3 verdict item 5)
-        with _job_description(self.spark, f"upsert seg={seg} tombstones"):
-            n_new = self._write_tombstones(superseded, seg, local)
+        n_new = 0
+        if superseded is not None:
+            # the tombstones follow their segment's write route; their
+            # count is read off the write — no separate re-read + count()
+            # job (round-3 verdict item 5)
+            with _job_description(self.spark, f"upsert seg={seg} tombstones"):
+                n_new = self._write_tombstones(superseded, seg, local)
         self.log_manifest(f"seg{seg}/upsert", "done", new_tombstones=n_new)
         return seg
+
+    def _superseded_local(self, segs: list[int], rows):
+        """The doc_ids of segments ``segs`` whose (conv_id, turn_idx)
+        reappears in the Arrow batch ``rows``, as an Arrow table: the
+        docs files' key columns read with pyarrow and semi-joined with
+        the batch's keys on the driver. A null key matches nothing, as
+        under Spark's ``==`` join."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        keys = ["conv_id", "turn_idx"]
+        parts = [
+            pq.read_table(f, columns=["doc_id", *keys])
+            for s in segs
+            for f in _data_files(self._path("docs", s))
+        ]
+        # every field nullable: a Spark write keeps non-null fields
+        # required, a driver write not
+        docs = pa.concat_tables(
+            pa.Table.from_arrays(t.columns, names=t.column_names) for t in parts
+        )
+        batch = rows.select(keys).cast(docs.select(keys).schema)
+        return docs.join(batch, keys, join_type="left semi").select(["doc_id"])
 
     def segment_sizes(self) -> dict[int, int]:
         """seg → live-ish doc count (the per-segment corpus_stats rows —

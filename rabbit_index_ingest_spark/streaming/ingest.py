@@ -17,6 +17,8 @@ equivalents, implemented here over Structured Streaming:
 * periodic dimension refresh → dimension re-resolved inside each
                           ``foreachBatch`` (broadcast joins re-plan per
                           micro-batch)
+* one bulk action per batch → one ``IndexStore.upsert`` per micro-batch,
+                          the first one too (it builds segment 0)
 """
 
 from __future__ import annotations
@@ -94,14 +96,16 @@ def start_incremental_index(
     upsert_fn: Callable[[SparkSession, str, DataFrame], None] | None = None,
 ):
     """foreachBatch incremental indexing: each micro-batch is upserted as a
-    new index segment (IndexStore.upsert — doc_as_upsert semantics).
+    new index segment (IndexStore.upsert — doc_as_upsert semantics),
+    the stream's first batch included: into an empty store ``upsert``
+    builds segment 0, so every batch gets the same last-write-wins pick
+    (by ``ts`` when the stream carries it) and the same build route.
     checkpointLocation gives the at-least-once replay cursor; deterministic
     doc keys make replays idempotent (the A15 ack analogue). An empty
-    micro-batch adds no segment: ``upsert`` returns -1 for it, and the
-    first batch's build is saved only when it holds a doc — so no batch
-    pays a separate emptiness job (a custom ``upsert_fn`` still gets
-    non-empty batches only)."""
-    from ..index.store import IndexStore, _job_description
+    micro-batch adds no segment: ``upsert`` returns -1 for it, so no
+    batch pays a separate emptiness job (a custom ``upsert_fn`` still
+    gets non-empty batches only)."""
+    from ..index.store import IndexStore
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -109,19 +113,8 @@ def start_incremental_index(
             if not batch_df.isEmpty():
                 upsert_fn(spark, store_root, batch_df)
             return
-        store = IndexStore(spark, store_root)
-        turns = batch_df.select("conv_id", "turn_idx", "text")
-        if store.segments():
-            store.upsert(turns)
-            return
-        from ..index.build import build_index
-
-        with _job_description(spark, "build seg=0"):
-            built = build_index(spark, turns)
-        if built.n_docs == 0:
-            built.release()
-            return
-        store.save(built, segment=0)
+        cols = ["conv_id", "turn_idx", "text", *["ts"] * ("ts" in batch_df.columns)]
+        IndexStore(spark, store_root).upsert(batch_df.select(*cols))
 
     return (
         stream.writeStream.foreachBatch(handle)

@@ -621,11 +621,11 @@ def test_broken_in_process_numbering_fails_the_save(spark, tmp_path, monkeypatch
 
 def test_driver_route_upsert_jobs(spark, root):
     """A driver-route upsert of an 80-turn parquet batch (60 new turns,
-    20 re-ingested keys) runs at most 4 Spark jobs, each labelled with
-    the upsert's segment: the batch's dedup and collect (``build``) and
-    the superseded ids (``tombstones``). The store's schemas and stats
-    rows are read on the driver, and the build and the writes run no
-    job."""
+    20 re-ingested keys) runs exactly one Spark job, labelled with the
+    upsert's segment: the collect of its batch (``build``). The
+    last-write-wins pick, the build, the superseded-id lookup (the docs
+    files' keys, read with pyarrow) and the writes run on the driver, and
+    the store's schemas and stats rows are read there too."""
     t = transcripts_df(spark, n_conv=60)
     store = IndexStore(spark, root)
     store.save(build_index(spark, t))
@@ -644,10 +644,127 @@ def test_driver_route_upsert_jobs(spark, root):
     seg = []
     jobs = _jobs_of(spark, lambda: seg.append(store.upsert(batch)))
     assert seg == [1]
-    assert 0 < len(jobs) <= 4, jobs
-    labels = {label for label, _ in jobs.values()}
-    assert labels == {"upsert seg=1 build", "upsert seg=1 tombstones"}, jobs
+    assert [label for label, _ in jobs.values()] == ["upsert seg=1 build"], jobs
     assert len(store.tombstones()) == 20
+
+
+def test_upsert_into_an_empty_store_builds_segment_0(spark, root):
+    """An upsert into a root with no segment builds segment 0 from doc id
+    0 in one Spark job (the batch's collect), with the last-write-wins
+    pick, and writes no tombstone directory."""
+    t = transcripts_df(spark, n_conv=3)
+    dup = t.where(F.col("turn_idx") == 0).withColumn(
+        "text", F.concat("text", F.lit(" xenolith"))
+    )
+    store = IndexStore(spark, root)
+    seg = []
+    jobs = _jobs_of(spark, lambda: seg.append(store.upsert(t.unionByName(dup))))
+    assert seg == [0]
+    assert [label for label, _ in jobs.values()] == ["upsert seg=0 build"], jobs
+    assert not os.path.exists(os.path.join(root, "_tombstones"))
+    L = store.load()
+    n = t.count()
+    assert (L.n_docs, L.next_doc_id) == (n, n)
+    texts = [r["text"] for r in L.docs.where(F.col("turn_idx") == 0).collect()]
+    assert len(texts) == 3 and all(x.endswith(" xenolith") for x in texts)
+
+
+def _pick_parity_store(spark, root, local_max):
+    """A two-field store (text, title) holding a doc with a null conv_id,
+    upserted with two adversarial batches under the driver threshold
+    ``local_max``. The first carries ``ts`` and a long ``turn_idx``: a
+    key three times with a ``ts`` tie broken by text, a key whose ``ts``
+    and text tie so the title decides, a null ``ts`` against a null
+    text, and a null conv_id, which must not supersede the stored
+    null-keyed doc. The second has no ``ts``: a key twice, picked by
+    text."""
+    from rabbit_index_ingest_spark.index.build import build_index_multifield
+
+    schema = "conv_id string, turn_idx int, text string, title string"
+    base = transcripts_df(spark, n_conv=4).withColumn(
+        "title", F.substring_index("text", " ", 2)
+    ).select("conv_id", "turn_idx", "text", "title").unionByName(
+        spark.createDataFrame([(None, 0, "karo nullkey stored", "stored")], schema)
+    )
+    store = IndexStore(spark, root)
+    store._local_max_docs = local_max
+    store.save(build_index_multifield(spark, base, {"text": "text", "title": "title"}))
+    t1, t2 = "2024-01-01 00:00:00", "2024-01-02 00:00:00"
+    first = spark.createDataFrame([
+        ("conv-00000001", 0, t1, "karo zulu older", "z"),
+        ("conv-00000001", 0, t2, "karo alpha tie", "a"),
+        ("conv-00000001", 0, t2, "karo bravo tie", "b"),
+        ("conv-00000002", 1, t2, "karo same text", "title one"),
+        ("conv-00000002", 1, t2, "karo same text", "title two"),
+        ("conv-00000003", 0, None, "karo null ts", "n"),
+        ("conv-00000003", 0, t1, None, "null text"),
+        (None, 0, t1, "karo nullkey batch", "b"),
+        ("conv-new", 3, t1, "karo brand new", None),
+    ], "conv_id string, turn_idx long, ts string, text string, title string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    second = spark.createDataFrame([
+        ("conv-00000002", 2, "karo yankee", "y"),
+        ("conv-00000002", 2, "karo xray", "x"),
+        ("conv-new", 3, "karo newer", "n2"),
+    ], schema)
+    assert store.upsert(first) == 1
+    assert store.upsert(second) == 2
+    return store
+
+
+def test_driver_pick_matches_spark_pick(spark, tmp_path):
+    """The driver's last-write-wins pick and superseded lookup
+    (``_local_max_docs`` large) leave the same docs rows and tombstones
+    as Spark's aggregate and semi-join (``_local_max_docs = 0``) on
+    adversarial batches: ties, nulls, a batch without ``ts``, two
+    content fields, a long ``turn_idx`` on an int store and a null
+    conv_id, which supersedes nothing."""
+    docs, tombs = {}, {}
+    for route, lim in _FORCE.items():
+        store = _pick_parity_store(spark, str(tmp_path / route), lim)
+        docs[route] = sorted(
+            store._read_all("docs").collect(),
+            key=lambda r: tuple((v is not None, v) for v in r),
+        )
+        tombs[route] = store.tombstones()
+    assert docs["local"] == docs["spark"]
+    assert tombs["local"] == tombs["spark"]
+    live = {
+        (r["conv_id"], r["turn_idx"]): (r["text"], r["title"])
+        for r in docs["local"] if r["doc_id"] not in tombs["local"]
+    }
+    assert live["conv-00000001", 0] == ("karo bravo tie", "b")
+    assert live["conv-00000002", 1] == ("karo same text", "title two")
+    assert live["conv-00000003", 0] == (None, "null text")
+    assert live["conv-00000002", 2] == ("karo yankee", "y")
+    assert live["conv-new", 3] == ("karo newer", "n2")
+    nulls = [r for r in docs["local"] if r["conv_id"] is None]
+    assert len(nulls) == 2 and not {r["doc_id"] for r in nulls} & tombs["local"]
+
+
+def test_superseded_lookup_threshold_boundary(spark, tmp_path):
+    """An in-process upsert into a store of n docs (its corpus_stats
+    n_docs) finds its superseded ids on the driver, with no
+    ``tombstones`` job, when the driver threshold is n, and by a Spark
+    semi-join at n - 1; the tombstones are the same both ways."""
+    t = transcripts_df(spark, n_conv=6)
+    batch = t.where(F.col("conv_id") == "conv-00000001").withColumn(
+        "text", F.concat("text", F.lit(" xenolith"))
+    )
+    base = str(tmp_path / "base")
+    IndexStore(spark, base).save(build_index(spark, t))
+    n = IndexStore(spark, base)._layout().n_docs
+    assert batch.count() < n - 1
+    tombs = {}
+    for lim, want in ((n, False), (n - 1, True)):
+        store = IndexStore(spark, str(tmp_path / f"up{lim}"))
+        shutil.copytree(base, store.root)
+        store._local_max_docs = lim
+        jobs = _jobs_of(spark, lambda: store.upsert(batch))
+        labels = {label for label, _ in jobs.values()}
+        assert ("upsert seg=1 tombstones" in labels) is want, (lim, jobs)
+        tombs[lim] = store.tombstones()
+    assert tombs[n] == tombs[n - 1] and len(tombs[n]) == batch.count()
 
 
 def _bad_offsets(fault, offsets, n):
@@ -1011,6 +1128,48 @@ def test_streaming_empty_micro_batches_add_no_segment(spark, tmp_path):
     assert drop_and_trigger("b1.parquet", data) == [0]
     assert drop_and_trigger("b2.parquet", empty) == [0]
     assert IndexStore(spark, root).load().n_docs == data.num_rows
+
+
+def test_streaming_first_batch_keeps_one_version_per_key(spark, tmp_path):
+    """A stream's first micro-batch that carries one key twice, with
+    different ``ts``, leaves exactly one live version: the later one,
+    whose text sorts first, so only the ``ts`` can pick it. The first
+    batch takes the same upsert path, with its last-write-wins pick, as
+    every later one."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from rabbit_index_ingest_spark.datagen import TRANSCRIPT_SCHEMA
+    from rabbit_index_ingest_spark.streaming.ingest import (
+        read_transcript_stream,
+        start_incremental_index,
+    )
+
+    src, ckpt, root = (str(tmp_path / d) for d in ("src", "ckpt", "idx"))
+    os.makedirs(src)
+    schema = to_arrow_schema(TRANSCRIPT_SCHEMA)
+    base = transcripts_pandas(2)[schema.names]
+    dup = pd.DataFrame({
+        "conv_id": ["conv-dup", "conv-dup"], "turn_idx": [0, 0],
+        "role": ["user", "user"],
+        "text": ["xenolith zebra early", "xenolith aardvark late"],
+        "tool": [None, None],
+        "ts": pd.to_datetime(["2024-01-01", "2024-01-02"]),
+    })
+    table = pa.Table.from_pandas(
+        pd.concat([base, dup], ignore_index=True), schema=schema, preserve_index=False
+    )
+    pq.write_table(table, os.path.join(src, "b0.parquet"))
+    q = start_incremental_index(read_transcript_stream(spark, src), root, ckpt)
+    q.awaitTermination(120)
+    store = IndexStore(spark, root)
+    assert store.segments() == [0]
+    L, s = _searcher(spark, store)
+    assert L.n_docs == len(base) + 1
+    hits = s.fetch_topk("xenolith", 10, L.docs).collect()
+    assert [r["text"] for r in hits] == ["xenolith aardvark late"]
 
 
 def test_streaming_dimension_refresh_picks_up_changes(spark, tmp_path):
